@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Evidence tool: decompose the PER-QUERY FIXED FLOOR the bench pays.
   *
   * SCALE.md's data-scaling sweep shows ~2/3 of the sf0.1 suite total is
@@ -46,33 +41,6 @@ import org.apache.spark.sql.SparkSession
   */
 object FloorAudit {
 
-  private final class CountListener extends SparkListener {
-    val jobs = new LongAdder
-    val stages = new LongAdder
-    val tasks = new LongAdder
-    val taskMs = new LongAdder
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.increment()
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-      stages.increment()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      tasks.increment()
-      if (t.taskMetrics != null) taskMs.add(t.taskMetrics.executorRunTime)
-    }
-    def snapshot: Seq[Long] = Seq(jobs.sum, stages.sum, tasks.sum, taskMs.sum)
-    /** Poll until no event lands for two consecutive 100 ms windows (the
-      * listener bus is async — same settle discipline as ShuffleAudit). */
-    def settle(): Seq[Long] = {
-      var prev = snapshot
-      var stable = 0
-      while (stable < 2) {
-        Thread.sleep(100)
-        val cur = snapshot
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      prev
-    }
-  }
-
   private def f1(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
@@ -81,26 +49,7 @@ object FloorAudit {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // A/B seam for floor experiments (r17): semicolon-separated k=v
-    // session confs, e.g. SPARK_GRAFT_EXTRA_CONFS=
-    // "spark.sql.codegen.methodSplitThreshold=256" — so a codegen-shape
-    // hypothesis is one env var, not a code edit, and the variant is
-    // recorded verbatim in the audit invocation.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        // trim BEFORE the guard: a whitespace-only key (stray '; =v'
-        // segment) must be ignored, not passed as builder.config("", v)
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     // Same global warmups as Bench: one-time JVM/session costs (parquet
     // footer caches, first-codegen of common shapes, build-once
     // fixtures) land here, not on whichever query runs first. Per-query
@@ -117,8 +66,7 @@ object FloorAudit {
       try graft.api.tbl(spark, sfDir, t).cache().count() catch {
         case e: Throwable => System.err.println(s"TABLE CACHE FAILED $t: $e")
       }
-    val listener = new CountListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
 
     val lines = names.flatMap { name =>
       SparkEntry.queries.get(name) match {
@@ -139,18 +87,16 @@ object FloorAudit {
             val phases = qe.tracker.phases.map { case (k, v) =>
               k -> (v.endTimeMs - v.startTimeMs)
             }
-            val before = listener.settle()
+            counters.drain()
             val t3 = System.nanoTime()
             val rows1 = qe.toRdd.count()
             val t4 = System.nanoTime()
             val rows2 = qe.toRdd.count()
             val t5 = System.nanoTime()
-            val after = listener.settle()
+            val c = counters.drain()
             if (rows1 != rows2)
               System.err.println(
                 s"NONDETERMINISTIC ROWCOUNT $name: $rows1 vs $rows2")
-            val Seq(jobs, stages, tasks, taskMs) =
-              after.zip(before).map { case (a, b) => a - b }
             def ms(a: Long, b: Long): Double = (b - a) / 1e6
             val line =
               s"""{"query":"$name","build_ms":${f1(ms(t0, t1))},""" +
@@ -159,8 +105,8 @@ object FloorAudit {
                 s""""optimization_ms":${phases.getOrElse("optimization", 0L)},""" +
                 s""""planning_ms":${phases.getOrElse("planning", 0L)},""" +
                 s""""exec1_ms":${f1(ms(t3, t4))},"exec2_ms":${f1(ms(t4, t5))},""" +
-                s""""rows":$rows1,"jobs":$jobs,"stages":$stages,""" +
-                s""""tasks":$tasks,"task_ms":$taskMs}"""
+                s""""rows":$rows1,"jobs":${c.jobs},"stages":${c.stages},""" +
+                s""""tasks":${c.tasks},"task_ms":${c.taskMs}}"""
             println(line)
             Some(line)
           } catch {

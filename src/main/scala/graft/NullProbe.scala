@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r20 robustness probe: plant NULLs in every nullable column of the
@@ -21,13 +20,7 @@ object NullProbe {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "NULL_PROBE.json"
     val dest = "/tmp/graft_nullprobe"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Tools.session(8, logLevel = "ERROR")
     val dir = new java.io.File(dest)
     org.apache.commons.io.FileUtils.deleteDirectory(dir); dir.mkdirs()
     val srcFiles = new java.io.File(src).listFiles()

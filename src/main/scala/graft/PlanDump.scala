@@ -1,4 +1,3 @@
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: formatted physical plans of the headline
@@ -7,12 +6,8 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Tools.session(8,
+      Map("spark.sql.session.timeZone" -> "UTC"), logLevel = "ERROR")
     val headline = Seq(
       "q_filter_range", "q_join_broadcast", "q_join_shuffle", "q_topk",
       "q_agg_linestatus", "q_pivot_dense", "q_join_interval",

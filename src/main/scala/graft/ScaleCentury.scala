@@ -83,12 +83,7 @@ object ScaleCentury {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_c100"
     val copies = if (args.length > 2) args(2).toInt else 100
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     println(s"CENTURY READY: ${build(spark, src, dest, copies)}")
     spark.stop()
   }
@@ -118,14 +113,8 @@ object AutoCombineProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_c334")
     val out = if (args.length > 1) args(1) else "AUTO_COMBINE_PROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tools.envCpus
+    val spark = Tools.session(cpus)
     import graft.ops.Gvcf
     // optional 3rd arg: which width-dispatched family to drive —
     // "combine" (default) or "genotype" (the PL-remap path, heavier
@@ -215,14 +204,8 @@ object AutoExportProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_c334")
     val out = if (args.length > 1) args(1) else "AUTO_EXPORT_PROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tools.envCpus
+    val spark = Tools.session(cpus)
     import graft.ops.Gvcf
     val chunkSamples = 10000
     val n = Gvcf.wideN(spark, sfDir)
@@ -324,14 +307,8 @@ object AutoExportSinkProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_c334")
     val out = if (args.length > 1) args(1) else "AUTO_EXPORT_SINK_PROBE.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tools.envCpus
+    val spark = Tools.session(cpus)
     import graft.ops.Gvcf
     val chunkSamples = 10000
     val n = Gvcf.wideN(spark, sfDir)
@@ -342,7 +319,7 @@ object AutoExportSinkProbe {
     val sinkDir = s"${System.getProperty("java.io.tmpdir")}/graft_export_sink_334x"
     val t0 = System.nanoTime()
     auto.df
-      .repartition(cpus.toInt, col("contig"), col("pos"))
+      .repartition(cpus, col("contig"), col("pos"))
       .sortWithinPartitions("contig", "pos", "chunk_idx")
       .select(concat_ws("\u0001", col("contig"), col("pos").cast("string"),
         col("chunk_idx").cast("string"), col("part")).as("value"))
@@ -454,15 +431,7 @@ object AutoExportSinkProbe {
 object WidthFloorProbe {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("WIDTH_FLOOR_PROBE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.memory.fraction", "0.15")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(Tools.envCpus, Map("spark.memory.fraction" -> "0.15"))
     import graft.ops.Gvcf
     val heap = Runtime.getRuntime.maxMemory
     val slots = spark.sparkContext.defaultParallelism
@@ -533,14 +502,8 @@ object CenturyProbe {
     // convention) — a width-axis point only needs the wide combine, not
     // a 200M-row sorted write sharing the host
     val names = if (args.length > 2) args.drop(2).toSeq else ProbeQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Tools.envCpus
+    val spark = Tools.session(cpus)
     // warm the JIT/codegen floor off the first measured query, then
     // cache the two tables every probe query re-scans (the Bench rule:
     // measure the operator, not repeated cold scans of one corpus)

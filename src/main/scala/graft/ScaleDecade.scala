@@ -92,12 +92,7 @@ object ScaleDecade {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     println(s"DECADE READY: ${build(spark, src, dest)}")
     spark.stop()
   }

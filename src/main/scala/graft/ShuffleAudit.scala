@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Evidence tool: measure the SHUFFLE ECONOMY of the heavy queries — per
@@ -26,9 +23,8 @@ import org.apache.spark.sql.SparkSession
   * size), independent of document length by construction.
   *
   * Each query runs once un-timed (warm codegen + build-once fixtures)
-  * and once measured. Task metrics are summed by a listener; the
-  * listener bus is async, so after each query the tool polls until the
-  * counters are stable before snapshotting. Output: one JSON line per
+  * and once measured. Task metrics are summed by [[Tools.Counters]],
+  * drained after each pass. Output: one JSON line per
   * query on stdout and the full map in SHUFFLE_AUDIT.json (snapshot it
   * per sf before re-running — the file is overwritten).
   */
@@ -61,46 +57,6 @@ object ShuffleAudit {
     "q_dedup_embed", "q_decontaminate", "q_similarity_topk", "q_ann_ivf",
     "q_knn_classify", "q_feature_hash", "q_inverted_index",
     "q_token_entropy")
-
-  private final class TaskMetricsListener extends SparkListener {
-    val input = new LongAdder
-    val shuffleWrite = new LongAdder
-    val shuffleRead = new LongAdder
-    // records too (r17): bytes alone conflate data growth with
-    // compression-ratio drift across partition counts — a cross-scale
-    // byte ratio above the data ratio with a records ratio AT it is
-    // codec economics, not candidate-volume growth
-    val shuffleRecs = new LongAdder
-    val spill = new LongAdder
-    val tasks = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        input.add(m.inputMetrics.bytesRead)
-        shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-        shuffleRecs.add(m.shuffleWriteMetrics.recordsWritten)
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        tasks.increment()
-      }
-    }
-    def snapshot: Seq[Long] =
-      Seq(input.sum, shuffleWrite.sum, shuffleRead.sum, shuffleRecs.sum,
-        spill.sum, tasks.sum)
-    /** Poll until no event has landed for two consecutive 100 ms windows
-      * (the listener bus delivers asynchronously; a fixed sleep either
-      * wastes time or under-counts on a loaded host). */
-    def settle(): Seq[Long] = {
-      var prev = snapshot
-      var stable = 0
-      while (stable < 2) {
-        Thread.sleep(100)
-        val cur = snapshot
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      prev
-    }
-  }
 
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -153,16 +109,9 @@ object ShuffleAudit {
     val names =
       if (args.headOption.contains("dup10")) DupSet
       else if (args.length > 1) args.drop(1) else DefaultSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     if (args.headOption.contains("dup10")) buildDup10(spark, args(1), args(2))
-    val listener = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
 
     val lines = names.flatMap { name =>
       SparkEntry.queries.get(name) match {
@@ -175,7 +124,7 @@ object ShuffleAudit {
             case e: Throwable =>
               System.err.println(s"WARM PASS FAILED $name: $e")
           }
-          val before = listener.settle()
+          counters.drain()
           val t0 = System.nanoTime()
           val rows =
             try q(spark, sfDir).count() catch {
@@ -183,14 +132,14 @@ object ShuffleAudit {
                 System.err.println(s"MEASURED PASS FAILED $name: $e"); -1L
             }
           val sec = (System.nanoTime() - t0) / 1e9
-          val after = listener.settle()
-          val Seq(in, sw, sr, recs, sp, nt) =
-            after.zip(before).map { case (a, b) => a - b }
+          val c = counters.drain()
           val line =
             s"""{"query":"$name","sec":${f3(sec)},"rows":$rows,""" +
-              s""""input_mb":${mb(in)},"shuffle_write_mb":${mb(sw)},""" +
-              s""""shuffle_read_mb":${mb(sr)},"shuffle_records":$recs,""" +
-              s""""spill_mb":${mb(sp)},"tasks":$nt}"""
+              s""""input_mb":${mb(c.inputBytes)},""" +
+              s""""shuffle_write_mb":${mb(c.shuffleWriteBytes)},""" +
+              s""""shuffle_read_mb":${mb(c.shuffleReadBytes)},""" +
+              s""""shuffle_records":${c.shuffleRecords},""" +
+              s""""spill_mb":${mb(c.spillBytes)},"tasks":${c.tasks}}"""
           println(line)
           Some(line)
       }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,27 +121,6 @@ object SkewAudit {
     }
   }
 
-  /** (stageId, taskDurationMs) stream; settle() polls the async listener
-    * bus until quiet (the ShuffleAudit pattern). */
-  private[graft] final class TaskDurationListener extends SparkListener {
-    private val q = new ConcurrentLinkedQueue[(Int, Long)]
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null) { q.add((t.stageId, t.taskInfo.duration)); () }
-    def settleAndDrain(): Seq[(Int, Long)] = {
-      var prev = q.size
-      var stable = 0
-      while (stable < 2) {
-        Thread.sleep(100)
-        val cur = q.size
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      val out = Seq.newBuilder[(Int, Long)]
-      var e = q.poll()
-      while (e != null) { out += e; e = q.poll() }
-      out.result()
-    }
-  }
-
   /** Order-independent 64-bit checksum of a full result (xor of per-row
     * xxhash64) — how strategy pairs are proven identical. bit_xor, not
     * sum: ANSI sum(BIGINT) raises on the overflow a 45k-row hash sum
@@ -244,13 +220,7 @@ object SkewAudit {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_skew10"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     buildSkew10(spark, src, dest)
     val o = ordersSlim(spark, dest)
     val total = o.count()
@@ -259,12 +229,11 @@ object SkewAudit {
     println(s"corpus: $total orders, hot key ${hot.getLong(0)} owns " +
       s"${hot.getLong(1)} rows (${hot.getLong(1) * 100 / total}%)")
 
-    val listener = new TaskDurationListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
 
     def run(name: String, conf: Map[String, String],
             plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, dest, listener)(name, conf, plan)
+      SkewHarness.run(spark, dest, counters)(name, conf, plan)
 
     val noBcast = Map(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -336,17 +305,17 @@ private[graft] object SkewHarness {
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   def run(spark: SparkSession, dest: String,
-      listener: SkewAudit.TaskDurationListener)(
+      counters: Tools.Counters)(
       name: String, conf: Map[String, String],
       plan: (SparkSession, String) => DataFrame): (Long, String) = {
     conf.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       plan(spark, dest).rdd.count() // warm: codegen + parquet footers
-      listener.settleAndDrain()
+      counters.drain()
       val t0 = System.nanoTime()
       val n = plan(spark, dest).rdd.count()
       val sec = (System.nanoTime() - t0) / 1e9
-      val tasks = listener.settleAndDrain()
+      val tasks = counters.drain().taskDurations
       val sum = SkewAudit.checksum(plan(spark, dest))
       val byStage = tasks.groupBy(_._1).values
         .map(_.map(_._2).sorted).filter(_.size >= 8)
@@ -463,13 +432,7 @@ object SkewCentury {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_skewc100"
     val out = if (args.length > 2) args(2) else "SKEW_AUDIT_CENTURY.json"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(32)
     buildSkewCentury(spark, src, dest)
     val ev = api.tbl(spark, dest, "events")
     val total = ev.count()
@@ -477,12 +440,11 @@ object SkewCentury {
     println(s"corpus: $total events, hot user ${hot.getLong(0)} owns " +
       s"${hot.getLong(1)} rows (${hot.getLong(1) * 100 / total}%)")
 
-    val listener = new SkewAudit.TaskDurationListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
 
     def run(name: String, conf: Map[String, String],
             plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, dest, listener)(name, conf, plan)
+      SkewHarness.run(spark, dest, counters)(name, conf, plan)
 
     def shipped(name: String): (SparkSession, String) => DataFrame =
       (s, d) => SparkEntry.queries(name)(s, d)
@@ -604,19 +566,11 @@ object GvcfSkew {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SKEW_AUDIT_GVCF.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(Tools.envCpus)
     val (nSamples, nPositions, nContigs) = (3000L, 12000L, 20)
-    val listener = new SkewAudit.TaskDurationListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
     def run(name: String, plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, "", listener)(name, Map.empty, plan)
+      SkewHarness.run(spark, "", counters)(name, Map.empty, plan)
     def cohort(hotTenths: Int) =
       skewCohort(spark, nSamples, nPositions, nContigs, hotTenths)
     // sanity: the hot corpus really concentrates half the sites

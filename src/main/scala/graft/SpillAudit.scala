@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Evidence tool: exercise the SPILL path. Every shuffle audit so far
   * reports `spill_mb: 0` — on a 128 GiB host the engine never faces
   * memory pressure, so "plans degrade to disk instead of OOM" (the
@@ -46,18 +41,6 @@ object SpillAudit {
                          // (ObjectHashAggregate fallback + window set
                          // buffers) — the dense-cohort pressure case
 
-  private final class SpillListener extends SparkListener {
-    val spill = new LongAdder
-    val tasks = new LongAdder
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        tasks.increment()
-      }
-    }
-  }
-
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
@@ -69,33 +52,25 @@ object SpillAudit {
     val names = if (args.length > 1) args.drop(1).toSeq else QuerySet
     val tight = sys.env.contains("SPILL_TIGHT")
     val mode = if (tight) "TIGHT" else "REF"
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // static conf — must be set before the session exists; 0.15 of a
     // 1200m heap leaves the 4 task slots ~100 MB of execution memory
-    if (tight) builder.config("spark.memory.fraction", "0.15")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.session(4,
+      if (tight) Map("spark.memory.fraction" -> "0.15") else Map.empty)
     println(s"mode=$mode heap=${Runtime.getRuntime.maxMemory() / (1 << 20)}MB " +
       s"fraction=${spark.conf.get("spark.memory.fraction", "default")}")
-    val listener = new SpillListener
-    spark.sparkContext.addSparkListener(listener)
+    val counters = Tools.counters(spark)
 
     val lines = names.map { name =>
       val q = SparkEntry.queries(name)
       q(spark, sfDir).rdd.count() // warm: codegen, footers, fixtures
-      Thread.sleep(300)
-      listener.spill.reset(); listener.tasks.reset()
+      counters.drain()
       val t0 = System.nanoTime()
       val sum = SkewAudit.checksum(q(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener bus drain
+      val c = counters.drain()
       val line = s"""{"query":"$name","sec":${f3(sec)},"checksum":$sum,""" +
-        s""""spill_mb":${f3(listener.spill.sum / 1e6)},""" +
-        s""""tasks":${listener.tasks.sum}}"""
+        s""""spill_mb":${f3(c.spillBytes / 1e6)},""" +
+        s""""tasks":${c.tasks}}"""
       println(line)
       line
     }

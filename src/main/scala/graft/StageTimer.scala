@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named queries (after a JIT warm run) and print per-STAGE
   * task-time / record counts for the warm execution, so "where does the
   * warm second go" is answered with data instead of plan guesses.
@@ -11,37 +8,23 @@ object StageTimer {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId,
-          si.name.split("\n")(0).take(60),
-          si.taskMetrics.executorRunTime,
-          si.taskMetrics.executorCpuTime / 1000000L,
-          si.numTasks,
-          si.taskMetrics.inputMetrics.recordsRead +
-            si.taskMetrics.shuffleReadMetrics.recordsRead))
-      }
-    })
+    val spark = Tools.session(32)
+    val counters = Tools.counters(spark)
     for (n <- names) {
       try SparkEntry.queries(n)(spark, sfDir).count() catch { case _: Throwable => }
-      Thread.sleep(300); stages.clear()
+      counters.drain()
       val t0 = System.nanoTime()
       val rows = SparkEntry.queries(n)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let listener drain
+      val stages = counters.drain().stageInfos
       println(f"==== $n warm: $wall%.3f s ($rows rows)")
-      import scala.jdk.CollectionConverters._
-      for ((id, nm, rt, cpu, nt, recs) <- stages.asScala.toSeq.sortBy(_._1))
-        println(f"  stage $id%5d run=${rt}%6d ms cpu=${cpu}%6d ms tasks=$nt%3d recs=$recs%9d  $nm")
+      for (si <- stages.sortBy(_.stageId)) {
+        val m = si.taskMetrics
+        val recs = m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead
+        println(f"  stage ${si.stageId}%5d run=${m.executorRunTime}%6d ms " +
+          f"cpu=${m.executorCpuTime / 1000000L}%6d ms tasks=${si.numTasks}%3d " +
+          f"recs=$recs%9d  ${si.name.split("\n")(0).take(60)}")
+      }
     }
     spark.stop()
   }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.types._
   *
   * Modes (validated against the bucket element type):
   *  - `match32`: sig is array<int>; m = positions where both elements
-  *    are non-null and equal — [[VectorExpressions.matchCount]]'s rule
-  *    verbatim (null if either sig is null, as `graft_match_count`'s
-  *    null propagation did).
+  *    are non-null and equal — the rule of
+  *    `size(filter(zip_with(a, b, (x, y) -> x = y), p -> p))` verbatim
+  *    (null if either sig is null, as that chain's `size` propagates).
   *  - `hamming`: sig is struct<hi: long, lo: long>; m =
   *    bit_count(hi⊕hi) + bit_count(lo⊕lo) — null if any field is null,
   *    exactly the xor/bit_count chain's propagation.

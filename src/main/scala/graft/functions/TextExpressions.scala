@@ -89,8 +89,8 @@ object TextExpressions {
     * [[TextKernels]] shingle/h48 leaves, same fold arithmetic as
     * [[SketchAggregates.minhashSig]]'s update). Valid because the
     * aggregate's group key is the row's own doc_id: per-doc group ≡
-    * per-row. Callers must drop null-text rows first (the old explode
-    * dropped them by producing no rows). */
+    * per-row. Callers must drop null-text rows first (the old chain
+    * emitted them with a NULL signature, which banding dropped). */
   def minhashH48(toks: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     ColumnBridge.column(MinHashH48(ColumnBridge.expression(toks), a, b, p))
 

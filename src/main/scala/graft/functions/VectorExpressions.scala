@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native Catalyst expressions for the vector hot path (SURVEY §2D):
   * similarity/ANN operators fold over 64-float arrays millions of times,
@@ -39,14 +39,6 @@ object VectorExpressions {
   def zvalue(x: Column, y: Column, bits: Int): Column =
     ColumnBridge.column(ZValue(ColumnBridge.expression(x), ColumnBridge.expression(y), bits))
 
-  /** matchCount(a, b): positions where both elements are non-null and
-    * equal — `size(filter(zip_with(a, b, (x, y) -> x = y), p -> p))`
-    * as one codegen'd integer loop (zip_with pads the shorter array
-    * with nulls and `null = x` is null, which filter drops, so only
-    * i < min(len) with both sides non-null can count — replicated
-    * exactly). The MinHash est-Jaccard per-pair hot loop. */
-  def matchCount(a: Column, b: Column): Column =
-    ColumnBridge.column(MatchCount(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
 case class DotProduct(left: Expression, right: Expression)
@@ -135,53 +127,6 @@ case class DotProductLong(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** See [[VectorExpressions.matchCount]]. Int arrays (the MinHash
-  * signature rides exchanges as array<int>); count is a 32-class
-  * bounded int. */
-case class MatchCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes =
-    Seq(ArrayType(IntegerType), ArrayType(IntegerType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_match_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getInt(i) == y.getInt(i)) c += 1
-      i += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $acc = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)
-         |      && $a.getInt($i) == $b.getInt($i)) {
-         |    $acc++;
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MatchCount =
     copy(left = newLeft, right = newRight)
 }
 

@@ -172,8 +172,11 @@ object Dedup {
     // explode + partial/final aggregate + buffer exchange disappears:
     // the signature is computed inside the scan stage. Values are the
     // aggregate's update arithmetic verbatim (TextExpressionsSpec pins
-    // signature parity); the isNotNull filter replicates the old
-    // explode's null-text drop (split(NULL) explodes to zero rows).
+    // signature parity). Null text: the old chain exploded
+    // shinglesOf(NULL) = [NULL] to one NULL-h48 row, so it emitted the
+    // doc with a NULL signature, which banding then dropped; the
+    // isNotNull filter drops the row here instead — the same pairs
+    // end to end, one row fewer in this function's output.
     // (duplicate shingles cannot change a min, so no distinct needed)
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -235,7 +238,7 @@ object Dedup {
     // to 20. Bit-identical to distinct-then-top-20 (the r15c audit's
     // pair-dedup exchange was 190+ MB on the duplication corpus; now 0).
     // match count computed INSIDE the pair-expansion kernel (r22b
-    // batch 3, mode match32 — graft_match_count's rule verbatim), so
+    // batch 3, mode match32 — the zip_with/filter match rule verbatim), so
     // pair rows never carry the signatures
     bucketPairs(bands, Seq("band", "bh"), "match32")
       .select(col("doc_a"), col("doc_b"),
@@ -247,96 +250,17 @@ object Dedup {
       .limit(20)
   }
 
-  /** SimHash: 64-bit signature where bit k is the sign of the sum of
+  /** SimHash: a 64-bit signature where bit k is the sign of the sum of
     * (±1) contributions of token-hash bit k. Near-dups = small Hamming
     * distance; candidate pairs share at least one of four 16-bit chunks
-    * (chunk blocking ≙ LSH banding for Hamming space).
-    *
-    * Perf (r2 verdict fix): the old shape — explode + a 64-column
-    * aggregate + a 64-deep bitwiseOR fold — blew past the JIT method
-    * limit into interpreted eval (29.6 s at sf0.1, 32% of the whole
-    * bench). Now the signature is pure per-row array math: token hashes
-    * materialize once as ONE array column, each signature bit is an
-    * allocation-free integer fold over that array, and the 64 bits
-    * assemble with a single OR fold. No explode, no aggregate node —
-    * the only exchange is the repartition barrier below, which both
-    * sides of the LSH self-join then reuse (ReusedExchange). Integer
-    * sums are order-independent, so the signature is bit-identical to
-    * the old grouped version (DedupSpec planted-dup tests unchanged). */
-  def simhashSignatures(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"),
-        // ENFORCED lane bound (r20): the packed 16-bit lanes in
-        // simhashExpr wrap past 65,535 tokens, so the token stream is
-        // clamped to its first [[SimhashMaxTokens]] hashes BEFORE the
-        // fold (and size(hs) below is the clamped count, keeping the
-        // majority rule exact over the kept prefix). For a longer doc
-        // the signature is the simhash of its 65,535-token prefix —
-        // a documented, deterministic recall trade (prefix ≈ doc for
-        // near-dup purposes) instead of the silent lane wrap that
-        // previously corrupted the whole signature (e.g. one token
-        // repeated 70k times drove its lane counts to 70000 mod 2^16
-        // = 4464 < n/2, flipping every majority bit).
-        slice(transform(split(col("text"), " "), t => xxhash64(t)),
-          1, SimhashMaxTokens).as("hs"))
-      // exchange barrier: hs must be a materialized attribute, else
-      // CollapseProject inlines split+xxhash into all 64 folds below
-      // (the r2 shingle lesson — see shinglesOf).
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), expr(simhashExpr).as("simhash"))
-
-  /** Carry-safe token bound for [[simhashSignatures]]'s packed 16-bit
-    * lanes: documents longer than this are clamped to their first
-    * 65,535 tokens (prefix simhash). [[simhashHexSignatures]] does NOT
-    * clamp — its native aggregate counts in 64-bit lanes. */
-  val SimhashMaxTokens = 65535
-
-  /** Packed-lane bit counting: word j (j = 0..15) accumulates
-    * `(h >> j) & 0x0001000100010001` over all token hashes, so its four
-    * 16-bit lanes count bits j, j+16, j+32, j+48 — 16 folds of 2 integer
-    * ops per token instead of 64 folds (or a 64-column aggregate). Lanes
-    * are carry-safe up to 65,535 tokens/doc — ENFORCED by the
-    * [[SimhashMaxTokens]] clamp in [[simhashSignatures]] (the expression
-    * itself must only ever see a clamped `hs`). The fold accumulator
-    * starts at −2⁶³, not 0: the four maxed lanes sum to exactly 2⁶⁴−1,
-    * which overflows SIGNED 64-bit once the top lane (bits 48–63)
-    * exceeds 32,767 — under ANSI mode the unbiased r19 fold CRASHED
-    * there (found while enforcing the clamp; the documented 65,535
-    * bound was wrong for the top lane). Biased, the monotone sum spans
-    * [−2⁶³, 2⁶³−1] exactly; the bias only flips bit 63, undone by one
-    * `^ 32768` when extracting the top lane. Sign-extension from the
-    * arithmetic shift only touches bits ≥ 64-j ≥ 49 > 48 = the highest
-    * mask bit, so negative hashes are safe. Bit k of the signature is
-    * set iff 2*count_k > n_tokens (≡ the ±1 sum being > 0). The
-    * `transform(array(...), ws -> ...)` wrapper binds the 16 fold
-    * results ONCE as a lambda variable — referencing a plain alias 64
-    * times would re-inline (and re-run) all 16 folds per reference
-    * (CollapseProject, the r2 shingle lesson). */
-  private val simhashExpr =
-    """element_at(transform(array(
-      |    transform(sequence(0, 15), j ->
-      |      aggregate(hs, shiftleft(CAST(1 AS BIGINT), 63),
-      |        (acc, h) -> acc + (shiftright(h, j) & 281479271743489L)))),
-      |  ws -> aggregate(
-      |    transform(sequence(0, 63), k ->
-      |      IF(2 * (CASE WHEN k div 16 = 3
-      |              THEN (shiftright(element_at(ws, (k % 16) + 1), 48) & 65535) ^ 32768
-      |              ELSE shiftright(element_at(ws, (k % 16) + 1), 16 * (k div 16)) & 65535
-      |              END) > size(hs),
-      |         shiftleft(CAST(1 AS BIGINT), k), 0L)),
-      |    0L, (acc, x) -> acc | x)), 1)""".stripMargin
-
-  /** Portable 64-bit SimHash signature as a 16-char hex STRING, built
-    * from md5 token hashes so DuckDB can replay it bit-for-bit: token →
-    * first 16 md5 hex digits; per (doc, digit position j) count each of
-    * the digit's 4 bits across tokens; signature digit j = the 4
-    * majority bits reassembled (bit r set iff 2·count_r > n_tokens).
-    * Explode-by-digit keeps every step codegen'd (no higher-order
-    * lambdas in the hot path) at a bounded 16× row fan-out; the two
-    * aggregations are partial+final. `simhashSignatures` above stays the
-    * scale path (one per-row fold, zero fan-out, engine-specific
-    * xxhash64) — same algorithm, different hash leaf; this variant
-    * exists so the LSH chunk-blocking pipeline is oracle-checkable. */
+    * (chunk blocking ≙ LSH banding for Hamming space). Returned as a
+    * 16-char hex STRING built from md5 token hashes so DuckDB can replay
+    * it bit-for-bit: token → first 16 md5 hex digits; per bit, count the
+    * tokens that set it; signature digit j = the 4 majority bits
+    * reassembled (bit r set iff 2·count_r > n_tokens). The kernel counts
+    * in 64-bit lanes, so no document length wraps a count and no token
+    * is clamped (DedupSpec checks a 70,000-token document against a JVM
+    * reference). */
   def simhashHexSignatures(docs: DataFrame): DataFrame =
     // ONE per-row native kernel (graft_simhash_hex, r22b batch 2): token
     // → md5 prefix → 64 majority lanes → hex digits, fused into a single
@@ -461,24 +385,21 @@ object Dedup {
       |WHERE len(list_intersect(a.s, b.s)) > 0
       |ORDER BY jaccard DESC, doc_a, doc_b
       |LIMIT 20""".stripMargin) { (s, d) =>
-    // persist, not localCheckpoint (r22, DedupNgramAB decade A/B:
-    // persist 3.5/3.9/3.5 s vs ckpt 5.7/4.5/4.3 s vs none 4.9/4.1/4.3 s
-    // interleaved at /tmp/graft_sf1; ties at sf0.1): localCheckpoint is
-    // EAGER — it runs the subtree as an extra build-time job and pins
-    // its blocks before the consuming job starts — while persist reuses
-    // blocks lazily inside the consuming job. Both pin K-row-class
-    // blocks for the session (identical leak profile); results
-    // cross-checked identical (DIFF = 0 both corpora).
-    dedupNgramWith(tbl(s, d, "documents"),
-      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    dedupNgramOf(tbl(s, d, "documents"))
   }
 
-  /** The q_dedup_ngram pipeline with a pluggable materialization
-    * barrier for the two reused K-row-class frames (candidate pairs,
-    * survivor shingle sets) — the declared query passes `persist`
-    * (see the A/B note above); [[graft.DedupNgramAB]] times the
-    * alternatives (no barrier / localCheckpoint) against it (r21
-    * verdict #4).
+  /** The q_dedup_ngram pipeline. The two reused K-row-class frames
+    * (candidate pairs, survivor shingle sets) take a lazy
+    * `persist(MEMORY_AND_DISK)` barrier — persist, not localCheckpoint
+    * (r22 decade A/B, OPTIMIZATION_r22.md "q_dedup_ngram — lazy persist
+    * replaces the eager localCheckpoint": persist 3.70/3.89/3.53 s vs
+    * ckpt 5.66/4.53/4.32 s vs none 4.89/4.15/4.29 s interleaved at the
+    * sf1-equivalent decade; ties at sf0.1): localCheckpoint is EAGER —
+    * it runs the subtree as an extra build-time job and pins its blocks
+    * before the consuming job starts — while persist reuses blocks
+    * lazily inside the consuming job. Both pin K-row-class blocks for
+    * the session (identical leak profile); results cross-checked
+    * identical (DIFF = 0 both corpora).
     *
     * Two-job LSH verify (the standard shape): job 1 = signature
     * pipeline → banding → collision pairs; job 2 = re-shingle ONLY
@@ -491,8 +412,9 @@ object Dedup {
     * sharing one aggregate was tried: per-branch column pruning makes
     * the three consumers' subtrees non-identical, so ReusedExchange
     * never fires and the corpus is scanned 3×.) */
-  private[graft] def dedupNgramWith(docs: DataFrame,
-      barrier: DataFrame => DataFrame): DataFrame = {
+  private def dedupNgramOf(docs: DataFrame): DataFrame = {
+    def barrier(df: DataFrame): DataFrame =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = minhashSignatures(docs)
     val nBands = NumPerms / BandRows
     // This consumer needs only the PAIR IDS, so the signature does not

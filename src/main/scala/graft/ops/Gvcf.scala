@@ -611,8 +611,9 @@ object Gvcf {
       .withColumn("dp", (col("gq") % 30 + 10).cast(IntegerType))
       // explicit 6-element array, not transform(sequence(0, 5), …): the
       // higher-order transform evaluates INTERPRETED (a boxed lambda call
-      // per element per row — r22 RemapAB measured the class of chain at
-      // >10× the codegen cost), and j is statically 0..5 here, so the
+      // per element per row — r22 measured the class of chain at >10× the
+      // codegen cost: OPTIMIZATION_r22.md batch 1, remap stage 14.5 s →
+      // 0.9 s at 10 M rows), and j is statically 0..5 here, so the
       // unrolled form is the same values with every element codegen'd.
       // j = gidx is only reachable for j in {0,1,2} (gidx = 0/1/2).
       .withColumn("pl", expr(

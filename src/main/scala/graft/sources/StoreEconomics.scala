@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions.col
@@ -53,12 +52,7 @@ object StoreEconomics {
     // — the workload where manifest KEY PRUNING, not compaction, keeps
     // narrow reads flat (the complementary cadence-policy data point)
     val disjoint = args.length > 3 && args(3) == "disjoint"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tools.session(8)
     import spark.implicits._
 
     // "auto" (r19): the SINK's own AutoCompactPolicy drives the cadence —
@@ -181,12 +175,7 @@ object StoreEconomics334 {
     val epochs = if (args.length > 2) args(2).toInt else 334
     val keySpace = 50000L
     val writers = 4
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Tools.session(8)
     val schema = StructType.fromDDL(Ddl)
 
     // one-pass epoch slicing: partition the corpus by doc_id mod epochs

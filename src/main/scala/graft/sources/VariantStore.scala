@@ -88,8 +88,9 @@ object VariantStore {
     // window ships ONE winner candidate per cell per input partition
     // through the exchange — the shuffle-volume win the rewrite was
     // after already exists. Measured on a 20k-key × 100-version store
-    // (graft.StoreDepthAB): window 0.2 MB shuffled / 0.45 s warm vs
-    // max_by 0.5 MB / 0.51 s — the aggregate is strictly worse (struct
+    // (STORE_DEPTH_AB_r21.txt, OPTIMIZATION_r21.md): window 0.2 MB
+    // shuffled / 0.45 s warm vs max_by 0.5 MB / 0.51 s — the
+    // aggregate is strictly worse (struct
     // buffers are not hash-aggregable, so it plans SortAggregate and
     // ships struct-wrapped rows ~2× the bare winner row). Keep the
     // `__rn = 1` filter shape intact: THAT is what lets Spark plan

@@ -39,19 +39,6 @@ class DedupSpec extends SparkSpec {
     assert(once == again)
   }
 
-  test("simhash separates the planted pair from unrelated docs") {
-    val sh = Dedup.simhashSignatures(docs).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("simhash")).toMap
-    def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(sh(a) ^ sh(b))
-    // one token changed out of 17 can still flip a visible fraction of
-    // bits at this tiny doc size; separation from unrelated docs (below)
-    // is the operative property.
-    assert(hamming(0L, 1L) <= 16, s"planted pair hamming too high: ${hamming(0L, 1L)}")
-    for (other <- 2L to 5L)
-      assert(hamming(0L, other) > hamming(0L, 1L),
-        s"unrelated doc $other closer than the planted dup")
-  }
-
   test("portable hex simhash separates the planted pair from unrelated docs") {
     val sh = Dedup.simhashHexSignatures(docs).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("sig")).toMap
@@ -88,44 +75,45 @@ class DedupSpec extends SparkSpec {
     assert(pairs(13) == p, "cap not deterministic across partitioning")
   }
 
+  // md5 leaf of the hex simhash kernel: first 8 digest bytes, big-endian.
+  private def md5Hash64(t: String): Long = {
+    val d = java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8"))
+    (0 until 8).foldLeft(0L)((acc, i) => (acc << 8) | (d(i) & 0xFFL))
+  }
+
   test("simhash clamps at SimhashMaxTokens: no packed-lane wrap past 65,535 tokens") {
-    // A doc of ONE token repeated 70,000 times is the minimal lane-wrap
-    // trigger: every set bit of that token's hash counts 70,000, which
-    // wraps a 16-bit lane to 70000 - 65536 = 4464 < n/2 — the UNclamped
-    // r19 expression flipped every majority bit and returned signature 0
-    // for this doc. With the clamp the kept stream is 65,535 copies:
-    // unanimous majority on every hash bit, so the signature IS the
-    // token's xxhash64 — and emphatically not 0.
+    // The 65,535-token clamp this name refers to is gone: the hex kernel
+    // counts in 64-bit lanes, so nothing needs clamping. ONE token
+    // repeated 70,000 times is the minimal lane-wrap trigger — a 16-bit
+    // lane would wrap each set bit's count to 70000 - 65536 = 4464 < n/2
+    // and return signature 0. With no wrap the majority is unanimous on
+    // every hash bit, so the signature IS the token's hash.
     val tok = "boilerplate"
     val big = Seq((7L, (tok + " ") * 70000)).toDF("doc_id", "text")
-    val sig = Dedup.simhashSignatures(big).collect().head.getAs[Long]("simhash")
-    val expected = Seq(tok).toDF("t")
-      .select(xxhash64(col("t"))).collect().head.getLong(0)
-    assert(sig == expected,
-      f"clamped signature $sig%016x must equal the token hash $expected%016x")
-    assert(sig != 0L, "lane-wrap signature (the r19 defect) resurfaced")
+    val sig = Dedup.simhashHexSignatures(big).collect().head.getAs[String]("sig")
+    val expected = f"${md5Hash64(tok)}%016x"
+    assert(sig == expected, s"signature $sig must equal the token hash $expected")
+    assert(sig != "0" * 16, "lane-wrap signature resurfaced")
   }
 
   test("simhash of a >65,535-token doc is the exact prefix simhash (JVM reference)") {
-    // Mixed-content doc: 70,000 tokens cycling 50 distinct words, so the
-    // clamp boundary cuts mid-cycle and the kept counts are NOT uniform.
-    // The trusted reference recomputes the per-bit majority in the JVM
-    // over the first SimhashMaxTokens xxhash64 values (hashes collected
-    // from Spark so the hash leaf is identical); the shipped packed-lane
-    // expression must match bit-for-bit — proving both the clamp
-    // semantics (prefix, not wrap) and the lane arithmetic at the bound.
-    val words = (0 until 70000).map(i => s"w${i % 50}")
+    // With the clamp gone the prefix the kernel folds is the whole doc:
+    // 66,500 copies of one token interleaved with 3,500 tokens cycling
+    // 50 words, so every bit the dominant token sets counts past 65,535
+    // — a 16-bit lane would wrap and a 65,535-token clamp would cut the
+    // tail. The JVM reference recomputes the per-bit majority over all
+    // 70,000 tokens from the same md5 leaf.
+    val words = (0 until 70000).map(i =>
+      if (i % 20 == 0) s"w${(i / 20) % 50}" else "boilerplate")
     val doc = Seq((9L, words.mkString(" "))).toDF("doc_id", "text")
-    val sig = Dedup.simhashSignatures(doc).collect().head.getAs[Long]("simhash")
-    val hashes = words.distinct.toDF("t")
-      .select(col("t"), xxhash64(col("t")).as("h")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val kept = words.take(Dedup.SimhashMaxTokens).map(hashes)
+    val sig = Dedup.simhashHexSignatures(doc).collect().head.getAs[String]("sig")
+    val hashes = words.distinct.map(t => t -> md5Hash64(t)).toMap
+    val counts = (0 until 64).map(k => words.count(t => ((hashes(t) >>> k) & 1L) == 1L))
+    assert(counts.max > 65535, "the doc must drive a lane past the 16-bit bound")
     val ref = (0 until 64).foldLeft(0L) { (acc, k) =>
-      val cnt = kept.count(h => ((h >> k) & 1L) == 1L)
-      if (2L * cnt > kept.length) acc | (1L << k) else acc
+      if (2L * counts(k) > words.length) acc | (1L << k) else acc
     }
-    assert(sig == ref, f"shipped simhash $sig%016x != prefix reference $ref%016x")
+    assert(sig == f"$ref%016x", f"hex simhash $sig != all-token reference $ref%016x")
   }
 
   test("cluster representative survives doc_ids past 1e9 (r19 deferred defect)") {

@@ -50,7 +50,9 @@ class PairExpressionsSpec extends SparkSpec {
     }
 
   test("match32 mode: pair set and match counts equal the chain + matchCount") {
-    // buckets with ragged sigs, null elements inside sigs, a NULL sig,
+    // The reference matchCount is the zip_with/filter chain (the rule the
+    // retired graft_match_count kernel was pinned against).
+    // Buckets with ragged sigs, null elements inside sigs, a NULL sig,
     // a hot bucket hitting the width cap, and multi-bucket collisions
     val rows: Seq[(java.lang.Long, Seq[Integer], Int, String)] = Seq(
       (1L: java.lang.Long, Seq[Integer](1, 2, 3), 0, "b1"),
@@ -65,7 +67,7 @@ class PairExpressionsSpec extends SparkSpec {
     eachCodegen {
       val old = oldPairs(df, Seq("band", "bh"), 4)
         .select(col("doc_a"), col("doc_b"),
-          graft.functions.VectorExpressions.matchCount(col("sa"), col("sb")).as("m"))
+          expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), p -> p))").as("m"))
         .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSeq.sorted(ord)
       val neu = newPairs(df, Seq("band", "bh"), "match32", 4)
         .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSeq.sorted(ord)

@@ -105,15 +105,24 @@ class TextExpressionsSpec extends SparkSpec {
       .agg(SketchAggregates.minhashSig(col("v"), a, b, Dedup.MinhashP).as("sig"))
     val newSig = Dedup.minhashSignatures(df)
     val bad = oldSig.withColumnRenamed("sig", "old")
-      .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"), "full")
+      .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"))
       .filter(!(col("old") <=> col("new"))).collect()
     assert(bad.isEmpty, s"minhash kernel drift: ${bad.take(3).mkString("; ")}")
-    // the null-text doc is absent from BOTH (old: explode of a null
-    // array emits no rows; new: the explicit isNotNull filter)
+    // Row domain, compared as doc-id sets (the join above cannot tell a
+    // missing row from a NULL one): the old chain exploded
+    // shinglesOf(NULL) = [NULL] to one NULL-h48 row, so the null-text
+    // doc kept a row with a NULL signature; the kernel path drops that
+    // row. An intentional change — banding dropped NULL signatures, so
+    // every consumer sees the same pairs — and the only one.
     val nullIds = df.filter(col("text").isNull).select("doc_id")
       .as[Long].collect().toSet
-    val present = newSig.select("doc_id").as[Long].collect().toSet
-    assert(nullIds.nonEmpty && nullIds.forall(!present.contains(_)))
+    def ids(sigs: org.apache.spark.sql.DataFrame) =
+      sigs.select("doc_id").as[Long].collect().toSet
+    assert(nullIds.nonEmpty)
+    assert(oldSig.filter(col("sig").isNull).select("doc_id").as[Long]
+      .collect().toSet == nullIds, "old chain: the null-text doc carries a NULL sig")
+    assert(ids(newSig) == ids(oldSig) -- nullIds,
+      s"row domains differ beyond the null-text doc: ${ids(newSig)} vs ${ids(oldSig)}")
   }
 
   test("simhashHex kernel matches the explode + graft_simhash_sig aggregate") {

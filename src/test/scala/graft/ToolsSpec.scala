@@ -1,0 +1,76 @@
+package graft
+
+import java.io.File
+
+import scala.io.Source
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+
+/** The tool mains' shared plumbing: the listener drain is exact without
+  * polling or sleeping, and the session/listener sprawl it replaced
+  * cannot grow back unnoticed. */
+class ToolsSpec extends SparkSpec {
+
+  test("Counters.drain sees every task and shuffle record of the action just run") {
+    // AQE off and fixed partition counts: 7 range tasks round-robin
+    // 10,000 rows into 5 partitions, each reduces to one partial count,
+    // and one task sums the 5 partials — 1 job, 3 stages, 13 tasks,
+    // 10,005 shuffle records, on every run
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // a slow listener ahead of the counters on the shared bus queue
+    // stands in for a loaded host: each task-end reaches the counters
+    // only after it, so reading without the drain's wait would come
+    // up short
+    val slow = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = Thread.sleep(5)
+    }
+    spark.sparkContext.addSparkListener(slow)
+    val counters = Tools.counters(spark)
+    try {
+      counters.drain() // discard events of earlier suites
+      for (run <- 1 to 20) {
+        assert(spark.range(0, 10000, 1, 7).repartition(5).count() == 10000L)
+        val c = counters.drain()
+        assert((c.jobs, c.stages, c.tasks, c.shuffleRecords) == (1L, 3L, 13L, 10005L),
+          s"run $run: $c")
+        assert(c.taskDurations.size == 13 && c.stageInfos.size == 3, s"run $run: $c")
+      }
+      val idle = counters.drain()
+      assert(idle.tasks == 0L && idle.jobs == 0L, s"drain must reset: $idle")
+    } finally {
+      spark.sparkContext.removeSparkListener(counters)
+      spark.sparkContext.removeSparkListener(slow)
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
+  private def mainSources: Seq[File] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    walk(root)
+  }
+
+  /** (file name, trimmed line) of every main-source line containing `token`. */
+  private def uses(token: String): Seq[(String, String)] =
+    mainSources.flatMap { f =>
+      val src = Source.fromFile(f, "UTF-8")
+      try src.getLines().filter(_.contains(token)).map(l => (f.getName, l.trim)).toList
+      finally src.close()
+    }
+
+  test("SparkSession.builder appears only in Bench, Verify and Tools.session") {
+    val files = uses("SparkSession.builder").map(_._1)
+    assert(files.sorted == Seq("Bench.scala", "Tools.scala", "Verify.scala"),
+      s"build tool sessions with graft.Tools.session: $files")
+  }
+
+  test("Thread.sleep appears only in the buildOnce heal-wait") {
+    val sleeps = uses("Thread.sleep")
+    assert(sleeps == Seq(("api.scala", "Thread.sleep(100); waited += 100")),
+      s"drain listeners with Tools.Counters.drain, not a sleep: $sleeps")
+  }
+}

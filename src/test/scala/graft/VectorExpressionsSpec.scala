@@ -121,29 +121,6 @@ class VectorExpressionsSpec extends SparkSpec {
     spark.conf.unset("spark.sql.codegen.factoryMode")
   }
 
-  test("matchCount matches the zip_with/filter chain on both eval paths") {
-    // ragged lengths (zip_with pads with null -> dropped), null
-    // elements on either side, all-equal, none-equal, empty
-    val df = Seq(
-      (Seq[Integer](1, 2, 3), Seq[Integer](1, 9, 3)),
-      (Seq[Integer](1, 2), Seq[Integer](1, 2, 7)),
-      (Seq[Integer](1, null, 3), Seq[Integer](1, 2, null)),
-      (Seq[Integer](4, 5), Seq[Integer](4, 5)),
-      (Seq[Integer](), Seq[Integer](6))
-    ).toDF("a", "b")
-    for (cg <- Seq("true", "false")) {
-      spark.conf.set("spark.sql.codegen.wholeStage", cg)
-      try {
-        val bad = df
-          .withColumn("hof",
-            expr("size(filter(zip_with(a, b, (x, y) -> x = y), p -> p))"))
-          .withColumn("nat", matchCount(col("a"), col("b")))
-          .filter(!(col("hof") <=> col("nat"))).collect()
-        assert(bad.isEmpty, s"codegen=$cg: ${bad.mkString("; ")}")
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-  }
-
   test("fixed-point vector sum fails fast on ragged vectors") {
     // zero-padding a short row would silently deflate the tail dims of
     // any mean computed as sum/count — raggedness is corruption, not a
