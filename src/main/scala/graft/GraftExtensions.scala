@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.{DotProduct, DotProductLong, L2NormSq, ZValue}
+import graft.functions.KernelCall
+import graft.functions.VectorExpressions.{dotl, dotp, norm2, Zvalue}
 
 /** Optimizer rule: a self-dot-product is a squared norm — rewrite
   * `graft_dot(x, x)` to the cheaper single-pass `graft_norm2(x)`.
@@ -14,7 +15,7 @@ import graft.functions.{DotProduct, DotProductLong, L2NormSq, ZValue}
   * engine's optimizer extension point (SURVEY §4.2). */
 object SelfDotToNorm extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
-    case DotProduct(a, b) if a.semanticEquals(b) => L2NormSq(a)
+    case KernelCall(k, Seq(a, b)) if k == dotp && a.semanticEquals(b) => KernelCall(norm2, Seq(a))
   }
 }
 
@@ -44,25 +45,12 @@ object GraftExtensions {
   /** ONE builder table shared by the extension path and the imperative
     * path — the two registration routes cannot drift on the function
     * set (they did once: register() silently lacked the planner
-    * strategy). Arity and literal-ness are checked so a misuse is a
-    * clean analysis-time error, not an IndexOutOfBounds/NPE. */
-  private val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", classOf[DotProduct].getName, args => {
-      arity("graft_dot", args, 2); DotProduct(args(0), args(1))
-    }),
-    ("graft_norm2", classOf[L2NormSq].getName, args => {
-      arity("graft_norm2", args, 1); L2NormSq(args.head)
-    }),
-    ("graft_dotl", classOf[DotProductLong].getName, args => {
-      arity("graft_dotl", args, 2); DotProductLong(args(0), args(1))
-    }),
-    ("graft_zvalue", classOf[ZValue].getName, args => {
-      arity("graft_zvalue", args, 3)
-      if (!args(2).foldable || args(2).eval() == null)
-        throw new IllegalArgumentException(
-          "graft_zvalue's bits argument must be a non-null integer literal")
-      ZValue(args(0), args(1), args(2).eval().asInstanceOf[Number].intValue)
-    }),
+    * strategy). Arity and argument rules (e.g. graft_zvalue's literal
+    * bits) are checked, so a misuse is a clean analysis-time error, not
+    * an IndexOutOfBounds/NPE. */
+  private val builders: Seq[(String, String, Seq[Expression] => Expression)] =
+    Seq(dotp, norm2, dotl, Zvalue).map(k => (k.name, classOf[KernelCall].getName,
+      (args: Seq[Expression]) => KernelCall(k, args))) ++ Seq(
     ("graft_bloom_agg", classOf[BloomFilterAggregate].getName, args => {
       arity("graft_bloom_agg", args, 1); new BloomFilterAggregate(args.head)
     }),

@@ -1,25 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the gVCF per-row hot path (r22,
-  * verdict item 1): the GenotypeGVCFs remap and the merged-alts
-  * projection used to be chains of higher-order functions (`transform`,
+/** Native kernels for the gVCF per-row hot path (r22, verdict item 1):
+  * the GenotypeGVCFs remap and the merged-alts projection used to be
+  * chains of higher-order functions (`transform`,
   * `array_sort`-with-comparator, `flatten`…) which Spark evaluates
   * INTERPRETED — one boxed lambda call per array element per row, paid
-  * on every (site, covered sample) coverage row. These expressions run
-  * the same arithmetic as a single primitive JVM loop shared verbatim
-  * between `eval` and the whole-stage-codegen path (the generated code
-  * calls the same [[GvcfKernels]] static, so interpreted and codegen
-  * execution cannot drift).
+  * on every (site, covered sample) coverage row. Each kernel is one
+  * primitive JVM loop in [[GvcfKernels]] plus one [[Kernel]]
+  * declaration; [[KernelCall]] runs the same static function on the
+  * interpreted and the whole-stage-codegen path, so they cannot drift.
   *
   * Semantics are replicated EXACTLY from the expression chains they
   * replace (see [[GvcfKernels]] for the per-step derivation); the DuckDB
@@ -29,44 +24,57 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GvcfExpressions {
 
+  private val K = GvcfKernels.getClass
+  private val Strings = ArrayType(StringType)
+
   /** Packed GenotypeGVCFs re-genotype (see [[GvcfKernels.plRegenotype]]):
     * returns `a | b << 20 | gq_new << 40` where (a, b) is the argmin
     * genotype pair in merged-allele space and gq_new the capped
-    * second-best − best likelihood gap. */
+    * second-best − best likelihood gap. Null only when `malleles` or
+    * `lall` is null; a null `pl` / `kind` is data (block-coverage rows),
+    * handled inside the kernel exactly as the CASE chain did, and a
+    * null `gq` counts as 0, the chain's `coalesce(gq, 0)`. */
+  val PlRegenotype = Kernel("graft_pl_regenotype", K, LongType,
+    Seq(Strings, Strings, ArrayType(IntegerType), StringType, IntegerType), lenient = Set(2, 3))
   def plRegenotype(malleles: Column, lall: Column, pl: Column,
       kind: Column, gq: Column): Column =
-    ColumnBridge.column(PlRegenotype(
-      ColumnBridge.expression(malleles), ColumnBridge.expression(lall),
-      ColumnBridge.expression(pl), ColumnBridge.expression(kind),
-      ColumnBridge.expression(gq)))
+    PlRegenotype(malleles, lall, pl, kind, coalesce(gq, lit(0)))
 
   /** `concat(array_sort(array_distinct(flatten(x))), array(sentinel))`
-    * as one primitive pass ([[GvcfKernels.mergedAlts]]). */
+    * as one primitive pass ([[GvcfKernels.mergedAlts]]); null on a null
+    * nested array, as flatten. */
+  val MergedAlts = Kernel("graft_merged_alts", K, Strings,
+    Seq(ArrayType(Strings), StringType), mayReturnNull = true)
   def mergedAlts(collected: Column, sentinel: String): Column =
-    ColumnBridge.column(MergedAlts(ColumnBridge.expression(collected), sentinel))
+    MergedAlts(collected, lit(sentinel))
 
-  /** The CombineGVCFs genotype-string remap ([[GvcfKernels.remapGt]]). */
+  /** The CombineGVCFs genotype-string remap ([[GvcfKernels.remapGt]]).
+    * Null only when `gt` is null; null `kind` / `alleles` / `alts`
+    * degrade exactly as the CASE chain did. */
+  val RemapGt = Kernel("graft_remap_gt", K, StringType,
+    Seq(StringType, StringType, Strings, Strings, StringType), lenient = Set(1, 2, 3))
   def remapGt(gt: Column, kind: Column, alleles: Column, alts: Column,
       sentinel: String): Column =
-    ColumnBridge.column(RemapGt(ColumnBridge.expression(gt),
-      ColumnBridge.expression(kind), ColumnBridge.expression(alleles),
-      ColumnBridge.expression(alts), sentinel))
+    RemapGt(gt, kind, alleles, alts, lit(sentinel))
 
   /** `transform(sort_array(x), s -> s.c)` over `array<struct<i,c>>`
     * ([[GvcfKernels.sortedCallVals]]) — the dense calls assembly. */
-  def sortedCallVals(collected: Column): Column =
-    ColumnBridge.column(SortedCallVals(ColumnBridge.expression(collected)))
+  val sortedCallVals = Kernel("graft_sorted_call_vals", K, Strings, Seq(ArrayType(StructType(Seq(
+    StructField("i", LongType), StructField("c", StringType))))))
 
   /** The export cell merge ([[GvcfKernels.exportCells]]): covered calls
     * + per-missing-sample defaults, in cohort (sample) order. */
+  val ExportCells = Kernel("graft_export_cells", K, Strings, Seq(ArrayType(StructType(Seq(
+    StructField("k", StringType), StructField("g", IntegerType),
+    StructField("call", StringType)))), Strings, StringType))
   def exportCells(esd: Column, samples: Column, missing: String): Column =
-    ColumnBridge.column(ExportCells(ColumnBridge.expression(esd),
-      ColumnBridge.expression(samples), missing))
+    ExportCells(esd, samples, lit(missing))
 }
 
 /** The primitive loops behind [[GvcfExpressions]] — top-level object so
   * Scala emits static forwarders that generated (Janino) code can call
-  * directly: `graft.functions.GvcfKernels.plRegenotype(...)`. */
+  * directly: `graft.functions.GvcfKernels.plRegenotype(...)`. Each
+  * function's name is its declaration's `graft_*` name in camel case. */
 object GvcfKernels {
 
   private val Block = UTF8String.fromString("block")
@@ -237,7 +245,6 @@ object GvcfKernels {
     * kept bit-equal anyway. */
   def remapGt(gt: UTF8String, kind: UTF8String, alleles: ArrayData,
       alts: ArrayData, sentinel: UTF8String): UTF8String = {
-    if (gt == null) return null
     val norm = gt.replace(PipeCh, SlashCh)
     if (kind != null && Block.equals(kind)) return norm
     // split(norm, '/', -1): '/' has no regex meta, so Java split on the
@@ -394,218 +401,4 @@ object GvcfKernels {
     while (i < w) { out(i) = vs(idx(i).intValue()); i += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** See [[GvcfKernels.plRegenotype]]. Null only when `malleles` or `lall`
-  * is null; a null `pl` / `gq` / `kind` is data (block-coverage rows),
-  * handled inside the kernel exactly as the coalesce/CASE chain did. */
-case class PlRegenotype(malleles: Expression, lall: Expression,
-    pl: Expression, kind: Expression, gq: Expression)
-    extends Expression with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(malleles, lall, pl, kind, gq)
-  override def inputTypes: Seq[DataType] = Seq(
-    ArrayType(StringType), ArrayType(StringType), ArrayType(IntegerType),
-    StringType, IntegerType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = malleles.nullable || lall.nullable
-  override def prettyName: String = "graft_pl_regenotype"
-
-  override def eval(input: InternalRow): Any = {
-    val ma = malleles.eval(input)
-    if (ma == null) return null
-    val la = lall.eval(input)
-    if (la == null) return null
-    val plV = pl.eval(input)
-    val kV = kind.eval(input)
-    val gqV = gq.eval(input)
-    GvcfKernels.plRegenotype(
-      ma.asInstanceOf[ArrayData], la.asInstanceOf[ArrayData],
-      plV.asInstanceOf[ArrayData], kV.asInstanceOf[UTF8String],
-      if (gqV == null) 0 else gqV.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val maC = malleles.genCode(ctx)
-    val laC = lall.genCode(ctx)
-    val plC = pl.genCode(ctx)
-    val kC = kind.genCode(ctx)
-    val gqC = gq.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${maC.code}
-        ${laC.code}
-        ${plC.code}
-        ${kC.code}
-        ${gqC.code}
-        boolean ${ev.isNull} = ${maC.isNull} || ${laC.isNull};
-        long ${ev.value} = 0L;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.GvcfKernels.plRegenotype(
-            ${maC.value}, ${laC.value},
-            ${plC.isNull} ? null : ${plC.value},
-            ${kC.isNull} ? null : ${kC.value},
-            ${gqC.isNull} ? 0 : ${gqC.value});
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): PlRegenotype =
-    copy(malleles = newChildren(0), lall = newChildren(1),
-      pl = newChildren(2), kind = newChildren(3), gq = newChildren(4))
-}
-
-/** See [[GvcfKernels.mergedAlts]]. */
-case class MergedAlts(child: Expression, sentinel: String)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(ArrayType(StringType)))
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = true // flatten nulls on null nested array
-  override def prettyName: String = "graft_merged_alts"
-
-  private lazy val sentinelU8 = UTF8String.fromString(sentinel)
-
-  override protected def nullSafeEval(x: Any): Any =
-    GvcfKernels.mergedAlts(x.asInstanceOf[ArrayData], sentinelU8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("sentinel", sentinelU8,
-      classOf[UTF8String].getName)
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("r")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.GvcfKernels.mergedAlts($x, $sRef);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MergedAlts =
-    copy(child = newChild)
-}
-
-/** See [[GvcfKernels.remapGt]]. Null only when `gt` is null; null
-  * `kind` / `alleles` / `alts` degrade exactly as the CASE chain did. */
-case class RemapGt(gt: Expression, kind: Expression, alleles: Expression,
-    alts: Expression, sentinel: String)
-    extends Expression with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(gt, kind, alleles, alts)
-  override def inputTypes: Seq[DataType] = Seq(
-    StringType, StringType, ArrayType(StringType), ArrayType(StringType))
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = gt.nullable
-  override def prettyName: String = "graft_remap_gt"
-
-  private lazy val sentinelU8 = UTF8String.fromString(sentinel)
-
-  override def eval(input: InternalRow): Any = {
-    val g = gt.eval(input)
-    if (g == null) return null
-    GvcfKernels.remapGt(g.asInstanceOf[UTF8String],
-      kind.eval(input).asInstanceOf[UTF8String],
-      alleles.eval(input).asInstanceOf[ArrayData],
-      alts.eval(input).asInstanceOf[ArrayData], sentinelU8)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("sentinel", sentinelU8,
-      classOf[UTF8String].getName)
-    val gC = gt.genCode(ctx)
-    val kC = kind.genCode(ctx)
-    val alC = alleles.genCode(ctx)
-    val atC = alts.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${gC.code}
-        ${kC.code}
-        ${alC.code}
-        ${atC.code}
-        boolean ${ev.isNull} = ${gC.isNull};
-        UTF8String ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.GvcfKernels.remapGt(
-            ${gC.value},
-            ${kC.isNull} ? null : ${kC.value},
-            ${alC.isNull} ? null : ${alC.value},
-            ${atC.isNull} ? null : ${atC.value},
-            $sRef);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): RemapGt =
-    copy(gt = newChildren(0), kind = newChildren(1),
-      alleles = newChildren(2), alts = newChildren(3))
-}
-
-/** See [[GvcfKernels.sortedCallVals]]. */
-case class SortedCallVals(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StructType(Seq(
-    StructField("i", LongType), StructField("c", StringType)))))
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def prettyName: String = "graft_sorted_call_vals"
-
-  override protected def nullSafeEval(x: Any): Any =
-    GvcfKernels.sortedCallVals(x.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.GvcfKernels.sortedCallVals($x);")
-
-  override protected def withNewChildInternal(newChild: Expression): SortedCallVals =
-    copy(child = newChild)
-}
-
-/** See [[GvcfKernels.exportCells]]. */
-case class ExportCells(esd: Expression, samples: Expression, missing: String)
-    extends Expression with ExpectsInputTypes {
-
-  override def children: Seq[Expression] = Seq(esd, samples)
-  override def inputTypes: Seq[DataType] = Seq(
-    ArrayType(StructType(Seq(StructField("k", StringType),
-      StructField("g", IntegerType), StructField("call", StringType)))),
-    ArrayType(StringType))
-  override def dataType: DataType = ArrayType(StringType, containsNull = true)
-  override def nullable: Boolean = esd.nullable || samples.nullable
-  override def prettyName: String = "graft_export_cells"
-
-  private lazy val missingU8 = UTF8String.fromString(missing)
-
-  override def eval(input: InternalRow): Any = {
-    val e = esd.eval(input)
-    if (e == null) return null
-    val s = samples.eval(input)
-    if (s == null) return null
-    GvcfKernels.exportCells(e.asInstanceOf[ArrayData],
-      s.asInstanceOf[ArrayData], missingU8)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("missing", missingU8,
-      classOf[UTF8String].getName)
-    val eC = esd.genCode(ctx)
-    val sC = samples.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${eC.code}
-        ${sC.code}
-        boolean ${ev.isNull} = ${eC.isNull} || ${sC.isNull};
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.GvcfKernels.exportCells(
-            ${eC.value}, ${sC.value}, $mRef);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ExportCells =
-    copy(esd = newChildren(0), samples = newChildren(1))
 }

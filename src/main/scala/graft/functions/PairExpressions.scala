@@ -3,10 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Native kernel for the LSH bucket pair expansion (r22b batch 3): per
@@ -34,21 +31,60 @@ import org.apache.spark.sql.types._
   * `b.doc_id > a.doc_id` over the same sliced sorted bucket (null
   * doc_ids on either side drop the pair, as `null > x` did).
   * TextExpressionsSpec-style parity is pinned in PairExpressionsSpec on
-  * both eval paths, null/ragged corners included.
+  * both eval paths, null/ragged corners included. Null (→ explode drops
+  * the row) when `ds` or `a` is null, exactly as the lambda chain's
+  * transform(filter(NULL)) was.
   */
 object PairExpressions {
 
+  val BucketPairsIds = pairs("ids", _ => true)
+  val BucketPairsMatch32 = pairs("match32", {
+    case ArrayType(IntegerType, _) => true
+    case _ => false
+  })
+  val BucketPairsHamming = pairs("hamming", {
+    case StructType(fs) => fs.length == 2 && fs.forall(_.dataType == LongType)
+    case _ => false
+  })
+  private val Modes = Map("ids" -> BucketPairsIds, "match32" -> BucketPairsMatch32,
+    "hamming" -> BucketPairsHamming)
+
+  /** `graft_bucket_pairs_<mode>`: (bucket members, member a) → pair
+    * structs; the bucket element and `a` must both be struct<long, sig>
+    * with the same mode-compatible sig type. */
+  private def pairs(mode: String, sigOk: DataType => Boolean): Kernel = {
+    val base = Seq(
+      StructField("doc_a", LongType, nullable = false),
+      StructField("doc_b", LongType, nullable = false))
+    val fields = if (mode == "ids") base else base :+ StructField("m", IntegerType, nullable = true)
+    Kernel(s"graft_bucket_pairs_$mode", PairKernels.getClass,
+      ArrayType(StructType(fields), containsNull = false), inputTypes = Nil,
+      mayReturnNull = true, check = (args: Seq[Expression]) =>
+        args.map(_.dataType) match {
+          case Seq(ArrayType(se: StructType, _), ae: StructType)
+              if se.length == 2 && ae.length == 2 &&
+                se.head.dataType == LongType && ae.head.dataType == LongType &&
+                se(1).dataType == ae(1).dataType && sigOk(se(1).dataType) => None
+          case types => Some(s"graft_bucket_pairs_$mode expects (array<struct<long, sig>>, " +
+            s"struct<long, sig>) with mode-compatible sig, got ${types.mkString("(", ", ", ")")}")
+        })
+  }
+
   def bucketPairs(ds: Column, a: Column, mode: String): Column =
-    ColumnBridge.column(BucketPairsExpand(
-      ColumnBridge.expression(ds), ColumnBridge.expression(a), mode))
+    Modes.getOrElse(mode, throw new IllegalArgumentException(
+      s"graft_bucket_pairs: unknown mode '$mode'"))(ds, a)
 }
 
 /** The primitive loop behind [[PairExpressions]] — static so generated
-  * code calls it directly. Mode: 0 = ids, 1 = match32, 2 = hamming. */
+  * code calls it directly, one entry per mode. */
 object PairKernels {
 
-  def expand(ds: ArrayData, a: InternalRow, mode: Int): ArrayData = {
-    if (ds == null || a == null) return null
+  def bucketPairsIds(ds: ArrayData, a: InternalRow): ArrayData = expand(ds, a, 0)
+  def bucketPairsMatch32(ds: ArrayData, a: InternalRow): ArrayData = expand(ds, a, 1)
+  def bucketPairsHamming(ds: ArrayData, a: InternalRow): ArrayData = expand(ds, a, 2)
+
+  /** Mode: 0 = ids, 1 = match32, 2 = hamming. */
+  private def expand(ds: ArrayData, a: InternalRow, mode: Int): ArrayData = {
     if (a.isNullAt(0)) return new GenericArrayData(new Array[Any](0))
     val aId = a.getLong(0)
     val n = ds.numElements()
@@ -97,86 +133,4 @@ object PairKernels {
         java.lang.Long.bitCount(sa.getLong(1) ^ sb.getLong(1))
     }
   }
-}
-
-/** See [[PairExpressions]]/[[PairKernels]]. Null (→ explode drops the
-  * row) when `ds` or `a` is null, exactly as the lambda chain's
-  * transform(filter(NULL)) was. */
-case class BucketPairsExpand(ds: Expression, a: Expression, mode: String)
-    extends Expression {
-
-  private val modeId: Int = mode match {
-    case "ids" => 0
-    case "match32" => 1
-    case "hamming" => 2
-    case other => throw new IllegalArgumentException(
-      s"graft_bucket_pairs: unknown mode '$other'")
-  }
-
-  override def children: Seq[Expression] = Seq(ds, a)
-  override def nullable: Boolean = true
-  override def prettyName: String = s"graft_bucket_pairs_$mode"
-
-  private def sigOk(t: DataType): Boolean = modeId match {
-    case 0 => true
-    case 1 => t.isInstanceOf[ArrayType] &&
-      t.asInstanceOf[ArrayType].elementType == IntegerType
-    case 2 => t match {
-      case StructType(fs) => fs.length == 2 &&
-        fs.forall(_.dataType == LongType)
-      case _ => false
-    }
-  }
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
-    (ds.dataType, a.dataType) match {
-      case (ArrayType(se: StructType, _), ae: StructType)
-          if se.length == 2 && ae.length == 2 &&
-            se.head.dataType == LongType && ae.head.dataType == LongType &&
-            se(1).dataType == ae(1).dataType && sigOk(se(1).dataType) =>
-        TypeCheckSuccess
-      case (d, at) => TypeCheckFailure(
-        s"$prettyName expects (array<struct<long, sig>>, struct<long, sig>) " +
-          s"with mode-compatible sig, got ($d, $at)")
-    }
-  }
-
-  override def dataType: DataType = {
-    val base = Seq(
-      StructField("doc_a", LongType, nullable = false),
-      StructField("doc_b", LongType, nullable = false))
-    val fields =
-      if (modeId == 0) base
-      else base :+ StructField("m", IntegerType, nullable = true)
-    ArrayType(StructType(fields), containsNull = false)
-  }
-
-  override def eval(input: InternalRow): Any = {
-    val d = ds.eval(input)
-    if (d == null) return null
-    val av = a.eval(input)
-    if (av == null) return null
-    PairKernels.expand(d.asInstanceOf[ArrayData], av.asInstanceOf[InternalRow], modeId)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dC = ds.genCode(ctx)
-    val aC = a.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${dC.code}
-        ${aC.code}
-        boolean ${ev.isNull} = ${dC.isNull} || ${aC.isNull};
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = graft.functions.PairKernels.expand(
-            ${dC.value}, ${aC.value}, $modeId);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): BucketPairsExpand =
-    copy(ds = newChildren(0), a = newChildren(1))
 }

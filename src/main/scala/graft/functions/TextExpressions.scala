@@ -3,28 +3,25 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.functions.{lit, typedLit}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the text/shingle hot path (r22,
-  * continuation batch): [[graft.ops.Dedup.shinglesOf]] was an
-  * interpreted higher-order `transform` — one boxed lambda call, one
-  * `slice` array allocation and one `array_join` per shingle per row —
-  * and, worse, every call site had to pay a full corpus-wide
-  * `repartition(doc_id)` exchange purely as a materialization barrier
-  * (Catalyst inlines a non-attribute `split(...)` into the per-index
-  * lambda, re-tokenizing once per element — the r2 O(words²) lesson).
-  * A native expression evaluates its child exactly ONCE per row, so the
-  * barrier exchanges disappear along with the per-element boxing: the
-  * kernels below fuse shingling + hashing (+ optional per-doc dedup)
-  * into one primitive pass shared verbatim between `eval` and the
-  * generated code (both call the same [[TextKernels]] static).
+/** Native kernels for the text/shingle hot path (r22, continuation
+  * batch): [[graft.ops.Dedup.shinglesOf]] was an interpreted
+  * higher-order `transform` — one boxed lambda call, one `slice` array
+  * allocation and one `array_join` per shingle per row — and, worse,
+  * every call site had to pay a full corpus-wide `repartition(doc_id)`
+  * exchange purely as a materialization barrier (Catalyst inlines a
+  * non-attribute `split(...)` into the per-index lambda, re-tokenizing
+  * once per element — the r2 O(words²) lesson). A kernel call evaluates
+  * its arguments exactly ONCE per row, so the barrier exchanges
+  * disappear along with the per-element boxing: the kernels below fuse
+  * shingling + hashing (+ optional per-doc dedup) into one primitive
+  * pass in [[TextKernels]], declared once as a [[Kernel]] and run by
+  * [[KernelCall]] on both eval paths.
   *
   * Semantics are replicated EXACTLY from the chains they replace — see
   * each kernel's contract; TextExpressionsSpec pins parity against the
@@ -33,74 +30,89 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TextExpressions {
 
+  private val K = TextKernels.getClass
+  private val Tokens = Seq(ArrayType(StringType))
+
+  // The shingle kernels are NOT null-propagating: a null token array
+  // yields the single-null-shingle array exactly as `shinglesOf`'s
+  // `otherwise(array(array_join(toks)))` branch does, so they are never
+  // null. Element nulls exist only in md5 mode (md5(NULL) = NULL;
+  // xxhash64(NULL) = seed).
+
   /** Distinct-free 48-bit md5 shingle hashes:
     * `transform(shinglesOf(toks), sh -> h48(sh))` — the MinHash /
     * exact-Jaccard leaf ([[graft.api.h48]]: first 12 hex chars of
     * md5(shingle) as a BIGINT). */
-  def shingleH48(toks: Column): Column =
-    ColumnBridge.column(ShingleHash(ColumnBridge.expression(toks),
-      md5Mode = true, distinct = false))
+  val shingleH48 = Kernel("graft_shingle_h48", K,
+    ArrayType(LongType, containsNull = true), Tokens, lenient = Set(0))
 
   /** As [[shingleH48]] with per-row first-occurrence dedup:
     * `array_distinct(transform(shinglesOf(toks), sh -> h48(sh)))`. */
-  def shingleH48Distinct(toks: Column): Column =
-    ColumnBridge.column(ShingleHash(ColumnBridge.expression(toks),
-      md5Mode = true, distinct = true))
+  val shingleH48Distinct = Kernel("graft_shingle_h48_distinct", K,
+    ArrayType(LongType, containsNull = true), Tokens, lenient = Set(0))
 
   /** As [[shingleH48Distinct]] but ASCENDING-SORTED (nulls last) — the
     * same distinct hash SET in a canonical order, for consumers that
     * only take order-free set measures (∩-size via
     * [[sortedIntersectCount]]'s merge walk). */
-  def shingleH48DistinctSorted(toks: Column): Column =
-    ColumnBridge.column(ShingleHash(ColumnBridge.expression(toks),
-      md5Mode = true, distinct = true, sorted = true))
+  val shingleH48DistinctSorted = Kernel("graft_shingle_h48_distinct_sorted", K,
+    ArrayType(LongType, containsNull = true), Tokens, lenient = Set(0))
 
   /** `array_distinct(transform(shinglesOf(toks), sh -> xxhash64(sh)))`
     * — the candidate-edge posting leaf (engine-side hash, seed 42). */
-  def shingleXxh64Distinct(toks: Column): Column =
-    ColumnBridge.column(ShingleHash(ColumnBridge.expression(toks),
-      md5Mode = false, distinct = true))
+  val shingleXxh64Distinct = Kernel("graft_shingle_xxh64_distinct", K,
+    ArrayType(LongType, containsNull = false), Tokens, lenient = Set(0))
+
+  /** ∩-size of two ascending-sorted distinct long arrays — see
+    * [[TextKernels.sortedIntersectCount]]. Null if either side is null
+    * (size(NULL) under ANSI). PRECONDITION: both sides come from
+    * [[shingleH48DistinctSorted]] (sorted + distinct), which is why this
+    * stays inside the project — pinned by KernelPropertySpec. */
+  private[graft] val sortedIntersectCount = Kernel("graft_sorted_intersect_count", K,
+    IntegerType, Seq(ArrayType(LongType), ArrayType(LongType)))
 
   /** Packed token stats over the single-space split of `text`:
     * `(n_stop << 32) | n_tokens` where `n_tokens = size(split(text,' '))`
     * and `n_stop` counts tokens equal to one of `stops` — both in ONE
     * byte pass with no array materialization. Extract with
-    * `tokenStatsTokens` / `tokenStatsStops`. */
+    * `tokenStatsTokens` / `tokenStatsStops`. Null text → null (exactly
+    * `size(split(NULL, ' '))` → NULL on both extracted counts). */
+  val TokenStats = Kernel("graft_token_stats", K, LongType, Seq(StringType, ArrayType(StringType)))
   def tokenStats(text: Column, stops: Seq[String]): Column =
-    ColumnBridge.column(TokenStats(ColumnBridge.expression(text), stops))
+    TokenStats(text, typedLit(stops))
 
   /** n_tokens from a [[tokenStats]] packed long (low 32 bits). */
   def tokenStatsTokens(packed: Column): Column =
-    packed.bitwiseAND(org.apache.spark.sql.functions.lit(0xFFFFFFFFL))
+    packed.bitwiseAND(lit(0xFFFFFFFFL))
 
   /** n_stop from a [[tokenStats]] packed long (high 32 bits). */
   def tokenStatsStops(packed: Column): Column =
     org.apache.spark.sql.functions.shiftright(packed, 32)
 
-  /** ∩-size of two ascending-sorted distinct long arrays — see
-    * [[SortedIntersectCount]]. */
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    ColumnBridge.column(SortedIntersectCount(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   /** Whole-document MinHash signature in ONE per-row pass — shingle →
     * h48 → per-permutation `floorMod(v·aᵢ + bᵢ, p)` minima — exactly the
-    * explode + `graft_minhash_sig` group aggregate it replaces (same
-    * [[TextKernels]] shingle/h48 leaves, same fold arithmetic as
-    * [[SketchAggregates.minhashSig]]'s update). Valid because the
-    * aggregate's group key is the row's own doc_id: per-doc group ≡
-    * per-row. Callers must drop null-text rows first (the old chain
-    * emitted them with a NULL signature, which banding dropped). */
-  def minhashH48(toks: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
-    ColumnBridge.column(MinHashH48(ColumnBridge.expression(toks), a, b, p))
+    * explode + per-doc min-per-permutation group aggregate it replaces
+    * (same [[TextKernels]] shingle/h48 leaves, same fold arithmetic).
+    * Valid because the aggregate's group key is the row's own doc_id:
+    * per-doc group ≡ per-row. Null when no shingle contributed (the
+    * aggregate's empty-group eval); callers must drop null-text rows
+    * first (the old chain emitted them with a NULL signature, which
+    * banding dropped). */
+  val MinhashH48 = Kernel("graft_minhash_h48", K, ArrayType(LongType, containsNull = false),
+    Seq(ArrayType(StringType), ArrayType(LongType), ArrayType(LongType), LongType),
+    mayReturnNull = true)
+  def minhashH48(toks: Column, a: Seq[Long], b: Seq[Long], p: Long): Column = {
+    require(a.length == b.length, "permutation coefficient arrays must align")
+    MinhashH48(toks, typedLit(a), typedLit(b), lit(p))
+  }
 
   /** Whole-document 64-bit SimHash as a 16-hex-char string in ONE
     * per-row pass — token → md5 prefix → 64 majority lanes — exactly the
-    * explode + md5/conv projection + `graft_simhash_sig` group aggregate
-    * it replaces ([[SketchAggregates.simhashSig]]; same digit order,
-    * same majority rule). Same per-row-group premise as [[minhashH48]]. */
-  def simhashHex(toks: Column): Column =
-    ColumnBridge.column(SimHashHex(ColumnBridge.expression(toks)))
+    * explode + md5/conv projection + per-doc bit-lane majority aggregate
+    * it replaces (same digit order, same majority rule). Same
+    * per-row-group premise as [[minhashH48]]; null when no token
+    * contributed (the aggregate's empty-group eval). */
+  val simhashHex = Kernel("graft_simhash_hex", K, StringType, Tokens, mayReturnNull = true)
 }
 
 /** The primitive loops behind [[TextExpressions]] — top-level object so
@@ -207,14 +219,17 @@ object TextKernels {
     }
   }
 
-  def shingleH48(toks: ArrayData, distinct: Boolean): ArrayData =
-    hashAll(toks, md5Mode = true, distinct = distinct, sorted = false)
+  def shingleH48(toks: ArrayData): ArrayData =
+    hashAll(toks, md5Mode = true, distinct = false, sorted = false)
 
-  def shingleH48(toks: ArrayData, distinct: Boolean, sorted: Boolean): ArrayData =
-    hashAll(toks, md5Mode = true, distinct = distinct, sorted = sorted)
+  def shingleH48Distinct(toks: ArrayData): ArrayData =
+    hashAll(toks, md5Mode = true, distinct = true, sorted = false)
 
-  def shingleXxh64(toks: ArrayData, distinct: Boolean): ArrayData =
-    hashAll(toks, md5Mode = false, distinct = distinct, sorted = false)
+  def shingleH48DistinctSorted(toks: ArrayData): ArrayData =
+    hashAll(toks, md5Mode = true, distinct = true, sorted = true)
+
+  def shingleXxh64Distinct(toks: ArrayData): ArrayData =
+    hashAll(toks, md5Mode = false, distinct = true, sorted = false)
 
   /** Two-pointer ∩-size over ASCENDING-SORTED distinct long arrays
     * (nulls last) — `size(array_intersect(a, b))` for inputs that are
@@ -251,7 +266,13 @@ object TextKernels {
     * always; a stop token is byte-equal to one of `stops` (UTF-8 string
     * equality IS byte equality). Both counts are bounded by the string's
     * byte length < 2^31, so the pack is lossless. */
-  def tokenStats(text: UTF8String, stops: Array[Array[Byte]]): Long = {
+  def tokenStats(text: UTF8String, stopList: ArrayData): Long = {
+    val stops = new Array[Array[Byte]](stopList.numElements())
+    var k = 0
+    while (k < stops.length) {
+      if (!stopList.isNullAt(k)) stops(k) = stopList.getUTF8String(k).getBytes
+      k += 1
+    }
     val b = text.getBytes
     var nTokens = 1L
     var nStop = 0L
@@ -272,14 +293,18 @@ object TextKernels {
 
   /** Per-row MinHash over the row's shingles: for each permutation i,
     * min over shingles of `floorMod(h48(sh)·a(i) + b(i), p)` — the
-    * update arithmetic of [[SimHashBitCounts]]'s sibling
-    * [[MinHashSignature]] verbatim (floorMod for the same domain
-    * reasons documented there). Null shingles (null toks → the single
-    * null whole-text shingle) contribute nothing, exactly as the
+    * update arithmetic of the per-doc min-per-permutation aggregate it
+    * replaced, verbatim. floorMod, not %: a negative input would
+    * otherwise land lane values in (-p, 0) that dominate every minimum;
+    * identical to % for the in-contract domain (48-bit non-negative
+    * hashes, a < 2^14, so x·a < 2^62). Null shingles (null toks → the
+    * single null whole-text shingle) contribute nothing, exactly as the
     * aggregate's null-skipping update; all-null input yields null,
     * exactly as the aggregate's empty-group eval. */
-  def minhashH48(toks: ArrayData, a: Array[Long], b: Array[Long],
-      p: Long): Any = {
+  def minhashH48(toks: ArrayData, coefA: ArrayData, coefB: ArrayData,
+      p: Long): ArrayData = {
+    val a = coefA.toLongArray()
+    val b = coefB.toLongArray()
     val sh = shingleStrings(toks)
     val buf = Array.fill(a.length)(Long.MaxValue)
     var any = false
@@ -307,11 +332,10 @@ object TextKernels {
     * conv(substring(md5(t),9,8),16,10)` projection), 64 count lanes,
     * digit j (1-based, most-significant first) assembled from lanes
     * (16−j)·4+b with the 2·cnt > n majority rule — the
-    * [[SimHashBitCounts]] update/eval loops verbatim. Null tokens are
+    * bit-lane aggregate's update/eval loops verbatim. Null tokens are
     * skipped (md5(NULL) → null → the aggregate's null-skipping update);
     * zero contributing tokens yields null, as the empty-group eval. */
-  def simhashHex(toks: ArrayData): Any = {
-    if (toks == null) return null
+  def simhashHex(toks: ArrayData): UTF8String = {
     val nEl = toks.numElements()
     val counts = new Array[Long](64)
     var n = 0L
@@ -352,7 +376,7 @@ object TextKernels {
     var k = 0
     while (k < stops.length) {
       val s = stops(k)
-      if (s.length == len) {
+      if (s != null && s.length == len) {
         var j = 0
         var eq = true
         while (eq && j < len) {
@@ -365,167 +389,4 @@ object TextKernels {
     }
     false
   }
-}
-
-/** See [[TextKernels.shingleH48]] / [[TextKernels.shingleXxh64]]. NOT
-  * null-propagating: a null token array yields the single-null-shingle
-  * array exactly as `shinglesOf`'s `otherwise(array(array_join(toks)))`
-  * branch does — so the expression itself is never null. Element nulls
-  * exist only in md5 mode (md5(NULL) = NULL; xxhash64(NULL) = seed). */
-case class ShingleHash(child: Expression, md5Mode: Boolean, distinct: Boolean,
-    sorted: Boolean = false)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(!sorted || (md5Mode && distinct),
-    "sorted output is defined for the distinct h48 variant only")
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = md5Mode)
-  override def nullable: Boolean = false
-  override def prettyName: String =
-    (if (md5Mode) "graft_shingle_h48" else "graft_shingle_xxh64") +
-      (if (distinct) "_distinct" else "") + (if (sorted) "_sorted" else "")
-
-  override def eval(input: InternalRow): Any = {
-    val t = child.eval(input).asInstanceOf[ArrayData]
-    if (md5Mode) TextKernels.shingleH48(t, distinct, sorted)
-    else TextKernels.shingleXxh64(t, distinct)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val call =
-      if (md5Mode) s"shingleH48(${c.isNull} ? null : ${c.value}, $distinct, $sorted)"
-      else s"shingleXxh64(${c.isNull} ? null : ${c.value}, $distinct)"
-    ev.copy(code =
-      code"""
-        ${c.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          graft.functions.TextKernels.$call;
-      """, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHash =
-    copy(child = newChild)
-}
-
-/** See [[TextKernels.sortedIntersectCount]]: ∩-size of two
-  * ascending-sorted distinct long arrays (nulls last) — equal to
-  * `size(array_intersect(a, b))` on such inputs, without per-pair hash
-  * sets or result allocation. Null if either side is null (size(NULL)
-  * under ANSI). PRECONDITION (callers': both sides come from
-  * `graft_shingle_h48_distinct_sorted`): sorted + distinct — enforced
-  * by construction at the single call site, pinned by parity tests. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    TextKernels.sortedIntersectCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.TextKernels.sortedIntersectCount($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** See [[TextKernels.tokenStats]]. Null text → null (exactly
-  * `size(split(NULL, ' '))` → NULL on both extracted counts). */
-case class TokenStats(child: Expression, stops: Seq[String])
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_token_stats"
-
-  private lazy val stopBytes: Array[Array[Byte]] =
-    stops.map(s => UTF8String.fromString(s).getBytes).toArray
-
-  override protected def nullSafeEval(x: Any): Any =
-    TextKernels.tokenStats(x.asInstanceOf[UTF8String], stopBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("stops", stopBytes, "byte[][]")
-    nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.TextKernels.tokenStats($x, $sRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TokenStats =
-    copy(child = newChild)
-}
-
-/** See [[TextKernels.minhashH48]]. Coefficients are Seq (structural
-  * equality — the [[MinHashSignature]] lesson); the kernel reads them
-  * through Array copies bound once as reference objects. Null when the
-  * input is null or no shingle contributed (parity with the group
-  * aggregate's empty-group eval; callers drop null-text rows to match
-  * the old explode semantics). */
-case class MinHashH48(child: Expression, a: Seq[Long], b: Seq[Long], p: Long)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(a.length == b.length, "permutation coefficient arrays must align")
-
-  @transient private lazy val aArr = a.toArray
-  @transient private lazy val bArr = b.toArray
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_minhash_h48"
-
-  override protected def nullSafeEval(x: Any): Any =
-    TextKernels.minhashH48(x.asInstanceOf[ArrayData], aArr, bArr, p)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("minhashA", aArr, "long[]")
-    val bRef = ctx.addReferenceObj("minhashB", bArr, "long[]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("r")
-      s"""
-         |Object $r = graft.functions.TextKernels.minhashH48($x, $aRef, $bRef, ${p}L);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashH48 =
-    copy(child = newChild)
-}
-
-/** See [[TextKernels.simhashHex]]. Null when the input is null or no
-  * token contributed (parity with the group aggregate; callers drop
-  * null-text rows to match the old explode semantics). */
-case class SimHashHex(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_simhash_hex"
-
-  override protected def nullSafeEval(x: Any): Any =
-    TextKernels.simhashHex(x.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val r = ctx.freshName("r")
-      s"""
-         |Object $r = graft.functions.TextKernels.simhashHex($x);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (UTF8String) $r; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashHex =
-    copy(child = newChild)
 }

@@ -115,6 +115,31 @@ class PairExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("mode/signature mismatches and unknown modes are rejected at analysis") {
+    // select analyzes eagerly and nothing here runs a job: a mismatch must
+    // never surface as a run-time cast error inside the kernel
+    val ints = Seq((Seq((1L, Seq(1, 2)), (2L, Seq(1, 3))), (1L, Seq(1, 2))))
+      .toDF("ds", "a")
+    val longs = Seq((Seq((1L, Seq(1L, 2L))), (1L, Seq(1L, 2L)))).toDF("ds", "a")
+    val hilo = Seq((Seq((1L, (1L, 2L))), (1L, (1L, 2L)))).toDF("ds", "a")
+    val mixed = Seq((Seq((1L, Seq(1, 2))), (1L, Seq(1L, 2L)))).toDF("ds", "a")
+    for ((df, mode) <- Seq(ints -> "hamming", longs -> "match32",
+        hilo -> "match32", longs -> "hamming", mixed -> "ids")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(PairExpressions.bucketPairs(col("ds"), col("a"), mode))
+      }
+      assert(e.getMessage.contains(s"graft_bucket_pairs_$mode"), e.getMessage)
+    }
+    // and the accepted shapes still analyze
+    ints.select(PairExpressions.bucketPairs(col("ds"), col("a"), "match32"))
+    hilo.select(PairExpressions.bucketPairs(col("ds"), col("a"), "hamming"))
+    longs.select(PairExpressions.bucketPairs(col("ds"), col("a"), "ids"))
+    val unknown = intercept[IllegalArgumentException] {
+      ints.select(PairExpressions.bucketPairs(col("ds"), col("a"), "jaccard"))
+    }
+    assert(unknown.getMessage.contains("unknown mode 'jaccard'"), unknown.getMessage)
+  }
+
   private def ord: Ordering[(Any, Any, Any)] =
     Ordering.by(t => (String.valueOf(t._1), String.valueOf(t._2), String.valueOf(t._3)))
 }

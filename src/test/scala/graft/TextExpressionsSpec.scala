@@ -36,40 +36,39 @@ class TextExpressionsSpec extends SparkSpec {
   private def chainXxh64Distinct: Column =
     array_distinct(transform(Dedup.shinglesOf(toks), s => xxhash64(s)))
 
-  private def assertParity(native: Column, chain: Column, label: String): Unit = {
-    for (cg <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", cg)
-      try {
-        val bad = df.select(col("doc_id"), col("text"),
-            native.as("nat"), chain.as("hof"))
-          .filter(!(col("nat") <=> col("hof"))).collect()
-        assert(bad.isEmpty,
-          s"$label under $cg: ${bad.take(3).mkString("; ")}")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+  private def assertParity(kernel: String, native: Column, chain: Column): Unit =
+    onBothEvalPaths(kernel) {
+      // each side in its own query: a projection that also holds an
+      // interpreted HOF chain is never fused into a codegen stage
+      val bad = texts.zip(df.select(native).collect().zip(df.select(chain).collect()))
+        .filter { case (_, (nat, hof)) => nat != hof }
+      assert(bad.isEmpty, s"$kernel: ${bad.take(3).mkString("; ")}")
     }
-  }
 
   test("shingleH48 matches transform(shinglesOf, h48) on both eval paths") {
-    assertParity(shingleH48(toks), chainH48, "shingleH48")
+    assertParity("graft_shingle_h48", shingleH48(toks), chainH48)
   }
 
   test("shingleH48Distinct matches array_distinct(transform(shinglesOf, h48))") {
-    assertParity(shingleH48Distinct(toks), chainH48Distinct, "shingleH48Distinct")
+    assertParity("graft_shingle_h48_distinct", shingleH48Distinct(toks), chainH48Distinct)
   }
 
   test("shingleXxh64Distinct matches array_distinct(transform(shinglesOf, xxhash64))") {
-    assertParity(shingleXxh64Distinct(toks), chainXxh64Distinct, "shingleXxh64Distinct")
+    assertParity("graft_shingle_xxh64_distinct", shingleXxh64Distinct(toks),
+      chainXxh64Distinct)
   }
 
   test("null token array yields the single-shingle row shinglesOf defines") {
     // shinglesOf(NULL) = [array_join(NULL)] = [NULL]; h48(NULL) = NULL,
     // xxhash64(NULL) = seed 42 — the null-text document must still
     // explode to exactly one row on both variants
-    val row = df.filter(col("text").isNull)
-      .select(shingleH48(toks).as("m"), shingleXxh64Distinct(toks).as("x"))
-      .as[(Seq[Option[Long]], Seq[Option[Long]])].head()
-    assert(row._1 == Seq(None), s"md5 variant on null text: ${row._1}")
-    assert(row._2 == Seq(Some(42L)), s"xxh64 variant on null text: ${row._2}")
+    onBothEvalPaths("graft_shingle_h48") {
+      val row = df.filter(col("text").isNull)
+        .select(shingleH48(toks).as("m"), shingleXxh64Distinct(toks).as("x"))
+        .as[(Seq[Option[Long]], Seq[Option[Long]])].head()
+      assert(row._1 == Seq(None), s"md5 variant on null text: ${row._1}")
+      assert(row._2 == Seq(Some(42L)), s"xxh64 variant on null text: ${row._2}")
+    }
   }
 
   test("tokenStats matches size(split) / size(filter isInCollection) on both paths") {
@@ -78,21 +77,16 @@ class TextExpressionsSpec extends SparkSpec {
     val chainTokens = size(toks).cast(LongType)
     val chainStops =
       size(filter(toks, t => t.isInCollection(stops))).cast(LongType)
-    for (cg <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", cg)
-      try {
-        val bad = df.select(col("text"),
-            tokenStatsTokens(ts).as("nt"), chainTokens.as("ct"),
-            tokenStatsStops(ts).as("ns"), chainStops.as("cs"))
-          .filter(!(col("nt") <=> col("ct")) || !(col("ns") <=> col("cs")))
-          .collect()
-        assert(bad.isEmpty, s"tokenStats under $cg: ${bad.take(3).mkString("; ")}")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    onBothEvalPaths("graft_token_stats") {
+      val nat = df.select(tokenStatsTokens(ts), tokenStatsStops(ts)).collect()
+      val ref = df.select(chainTokens, chainStops).collect()
+      val bad = texts.zip(nat.zip(ref)).filter { case (_, (n, r)) => n != r }
+      assert(bad.isEmpty, s"tokenStats: ${bad.take(3).mkString("; ")}")
     }
   }
 
   test("minhashH48 kernel matches the explode + graft_minhash_sig aggregate") {
-    import graft.functions.SketchAggregates
+    import graft.functions.SketchReferences
     val a = (0 until Dedup.NumPerms).map(Dedup.minhashA)
     val b = (0 until Dedup.NumPerms).map(Dedup.minhashB)
     // the pre-r22b pipeline, verbatim: barrier'd tokens → shingle
@@ -102,7 +96,7 @@ class TextExpressionsSpec extends SparkSpec {
       .select(col("doc_id"), explode(Dedup.shinglesOf(col("tk"))).as("sh"))
       .select(col("doc_id"), h48Of(col("sh")).as("v"))
       .groupBy("doc_id")
-      .agg(SketchAggregates.minhashSig(col("v"), a, b, Dedup.MinhashP).as("sig"))
+      .agg(SketchReferences.minhashSig(col("v"), a, b, Dedup.MinhashP).as("sig"))
     val newSig = Dedup.minhashSignatures(df)
     val bad = oldSig.withColumnRenamed("sig", "old")
       .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"))
@@ -126,14 +120,14 @@ class TextExpressionsSpec extends SparkSpec {
   }
 
   test("simhashHex kernel matches the explode + graft_simhash_sig aggregate") {
-    import graft.functions.SketchAggregates
+    import graft.functions.SketchReferences
     val oldSig = df
       .select(col("doc_id"), explode(toks).as("t"))
       .select(col("doc_id"),
         expr("shiftleft(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT), 32) " +
           "| CAST(conv(substring(md5(t), 9, 8), 16, 10) AS BIGINT)").as("v"))
       .groupBy("doc_id")
-      .agg(SketchAggregates.simhashSig(col("v")).as("sig"))
+      .agg(SketchReferences.simhashSig(col("v")).as("sig"))
     val newSig = Dedup.simhashHexSignatures(df)
     val bad = oldSig.withColumnRenamed("sig", "old")
       .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"), "full")
@@ -146,23 +140,20 @@ class TextExpressionsSpec extends SparkSpec {
     // the merge-walk ∩-size equals size(array_intersect) pair-wise
     val sortedSets = df.filter(col("text").isNotNull)
       .select(col("doc_id"), shingleH48DistinctSorted(toks).as("s"))
-    for (cg <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", cg)
-      try {
-        val badSet = df.filter(col("text").isNotNull)
-          .select(shingleH48DistinctSorted(toks).as("srt"),
-            array_sort(shingleH48Distinct(toks)).as("ref"))
-          .filter(!(col("srt") <=> col("ref"))).collect()
-        assert(badSet.isEmpty, s"sorted variant drift under $cg: ${badSet.take(3).mkString}")
-        val pairs = sortedSets.select(col("doc_id").as("da"), col("s").as("sa"))
-          .crossJoin(sortedSets.select(col("doc_id").as("db"), col("s").as("sb")))
-          .filter(col("da") < col("db"))
-        val bad = pairs.select(
-            sortedIntersectCount(col("sa"), col("sb")).as("nat"),
-            size(array_intersect(col("sa"), col("sb"))).as("ref"))
-          .filter(!(col("nat") <=> col("ref"))).collect()
-        assert(bad.isEmpty, s"∩-count drift under $cg: ${bad.take(3).mkString("; ")}")
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    onBothEvalPaths("graft_sorted_intersect_count") {
+      val badSet = df.filter(col("text").isNotNull)
+        .select(shingleH48DistinctSorted(toks).as("srt"),
+          array_sort(shingleH48Distinct(toks)).as("ref"))
+        .filter(!(col("srt") <=> col("ref"))).collect()
+      assert(badSet.isEmpty, s"sorted variant drift: ${badSet.take(3).mkString}")
+      val pairs = sortedSets.select(col("doc_id").as("da"), col("s").as("sa"))
+        .crossJoin(sortedSets.select(col("doc_id").as("db"), col("s").as("sb")))
+        .filter(col("da") < col("db"))
+      val bad = pairs.select(
+          sortedIntersectCount(col("sa"), col("sb")).as("nat"),
+          size(array_intersect(col("sa"), col("sb"))).as("ref"))
+        .filter(!(col("nat") <=> col("ref"))).collect()
+      assert(bad.isEmpty, s"∩-count drift: ${bad.take(3).mkString("; ")}")
     }
   }
 

@@ -44,19 +44,20 @@ class ToolsSpec extends SparkSpec {
     }
   }
 
-  private def mainSources: Seq[File] = {
+  private def mainSources(dir: String): Seq[File] = {
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f)
       else Nil
-    val root = new File("src/main/scala")
+    val root = new File(dir)
     assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
     walk(root)
   }
 
-  /** (file name, trimmed line) of every main-source line containing `token`. */
-  private def uses(token: String): Seq[(String, String)] =
-    mainSources.flatMap { f =>
+  /** (file name, trimmed line) of every main-source line under `dir`
+    * containing `token`. */
+  private def uses(token: String, dir: String = "src/main/scala"): Seq[(String, String)] =
+    mainSources(dir).flatMap { f =>
       val src = Source.fromFile(f, "UTF-8")
       try src.getLines().filter(_.contains(token)).map(l => (f.getName, l.trim)).toList
       finally src.close()
@@ -72,5 +73,14 @@ class ToolsSpec extends SparkSpec {
     val sleeps = uses("Thread.sleep")
     assert(sleeps == Seq(("api.scala", "Thread.sleep(100); waited += 100")),
       s"drain listeners with Tools.Counters.drain, not a sleep: $sleeps")
+  }
+
+  test("doGenCode appears in graft.functions only in the generic KernelCall") {
+    // a kernel is a static function plus one Kernel declaration; a
+    // hand-written eval + doGenCode pair per kernel must not grow back
+    val gens = uses("doGenCode", "src/main/scala/graft/functions")
+    assert(gens == Seq(("Kernel.scala",
+      "override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {")),
+      s"declare kernels with graft.functions.Kernel: $gens")
   }
 }

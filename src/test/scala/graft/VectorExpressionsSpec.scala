@@ -17,21 +17,22 @@ class VectorExpressionsSpec extends SparkSpec {
   test("dot and norm2 match the interpreted sequential fold bit-for-bit") {
     val fold = aggregate(zip_with($"a", $"b", (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-    val rows = df.select(dotp($"a", $"b").as("fast"), fold.as("slow"))
-      .as[(Double, Double)].collect()
-    assert(rows.forall { case (f, s) => f == s })
-    val n = df.select(norm2($"a").as("n")).as[Double].collect()
-    assert(n.toSeq == Seq(14.0, 0.5, 0.0))
+    onBothEvalPaths("graft_dot") {
+      // separate queries: the interpreted fold would keep the kernel's
+      // projection out of the codegen stage
+      val fast = df.select(dotp($"a", $"b")).as[Double].collect().toSeq
+      assert(fast == df.select(fold).as[Double].collect().toSeq)
+    }
+    onBothEvalPaths("graft_norm2") {
+      val n = df.select(norm2($"a").as("n")).as[Double].collect()
+      assert(n.toSeq == Seq(14.0, 0.5, 0.0))
+    }
   }
 
   test("expressions survive both codegen and interpreted paths") {
     val expected = Seq(32.0, 0.0, 0.0)
-    val out = df.select(dotp($"a", $"b")).as[Double].collect().toSeq
-    assert(out == expected)
-    withClue("interpreted fallback") {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try assert(df.select(dotp($"a", $"b")).as[Double].collect().toSeq == expected)
-      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    onBothEvalPaths("graft_dot") {
+      assert(df.select(dotp($"a", $"b")).as[Double].collect().toSeq == expected)
     }
   }
 
@@ -41,11 +42,8 @@ class VectorExpressionsSpec extends SparkSpec {
       (Seq.empty[Long], Seq.empty[Long])
     ).toDF("a", "b")
     val expected = Seq(1L * 3 - 2 * 4 + 127L * 127, 0L)
-    assert(d.select(dotl($"a", $"b")).as[Long].collect().toSeq == expected)
-    withClue("interpreted fallback") {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try assert(d.select(dotl($"a", $"b")).as[Long].collect().toSeq == expected)
-      finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    onBothEvalPaths("graft_dotl") {
+      assert(d.select(dotl($"a", $"b")).as[Long].collect().toSeq == expected)
     }
     GraftExtensions.register(spark)
     d.limit(1).createOrReplaceTempView("lvecs")
@@ -101,24 +99,45 @@ class VectorExpressionsSpec extends SparkSpec {
     // silent low-bit truncation would collide distinct points (1024 and
     // 0 at bits=10) and poison min/max pruning built on the code — the
     // expression is SQL-exposed, so the domain is enforced loudly
-    import org.apache.spark.sql.functions.{col, lit}
-    for (cg <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", cg)
+    // column inputs, not literals: an all-literal call is constant-folded
+    // at plan time and would never reach the generated code
+    import org.apache.spark.sql.functions.col
+    onBothEvalPaths("graft_zvalue") {
       val boom = intercept[Exception] {
-        spark.range(1).select(zvalue(lit(1024L), lit(0L), 10).as("z"))
+        spark.range(1).select(zvalue(col("id") + 1024L, col("id"), 10).as("z"))
           .collect()
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
       assert(msgs(boom).exists(_.contains("inputs must be in [0, 2^10)")),
-        s"expected a domain error under $cg, got: $boom")
+        s"expected a domain error, got: $boom")
       // in-domain still works
-      val ok = spark.range(1).select(zvalue(lit(1023L), lit(0L), 10).as("z"))
+      val ok = spark.range(1).select(zvalue(col("id") + 1023L, col("id"), 10).as("z"))
         .as[Long].collect()
       assert(ok.head == (0 until 10).foldLeft(0L)((z, k) =>
         z | ((1023L >> k) & 1L) << (2 * k)))
     }
-    spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+
+  test("zvalue rejects bits outside 1..32 and non-literal bits at analysis") {
+    // every rejection must come from analysis (spark.sql / select analyze
+    // eagerly, nothing here runs a job), never as a run-time cast error
+    import org.apache.spark.sql.functions.col
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
+    def rejected(hint: String)(analyze: => Any): Unit = {
+      val e = intercept[Exception](analyze)
+      assert(!e.isInstanceOf[ClassCastException] && msgs(e).exists(_.contains(hint)),
+        s"expected an analysis-time '$hint' rejection, got: $e")
+    }
+    GraftExtensions.register(spark)
+    spark.range(4).selectExpr("id AS x", "id AS y").createOrReplaceTempView("zpts")
+    for (bits <- Seq(0, 33)) {
+      rejected("1..32")(spark.sql(s"SELECT graft_zvalue(x, y, $bits) FROM zpts"))
+      rejected("1..32")(spark.range(1).select(zvalue(col("id"), col("id"), bits)))
+    }
+    rejected("literal")(spark.sql("SELECT graft_zvalue(x, y, x) FROM zpts"))
+    rejected("literal")(spark.sql("SELECT graft_zvalue(x, y, CAST(NULL AS INT)) FROM zpts"))
   }
 
   test("fixed-point vector sum fails fast on ragged vectors") {
