@@ -2,8 +2,37 @@ import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: formatted physical plans of the headline
   * queries at the given SF, so plan shape (pushdown, broadcasts,
-  * codegen spans, custom operators) is reviewable as a repo artifact. */
+  * codegen spans, custom operators) is reviewable as a repo artifact.
+  * Two runs on one tree write the same file: the tokens that drift
+  * between runs are normalised ([[normalise]]) and each plan is cut at a
+  * line boundary. */
 object PlanDump {
+  /** Per-plan character budget; a longer plan keeps its whole lines
+    * up to it. */
+  val MaxPlanChars = 4500
+
+  /** Renumbers expression ids (`name#123`) and `plan_id`s in order of
+    * first appearance, so references inside the plan still match; masks
+    * lambda class names with their identity hash and the content
+    * fingerprints of build-once fixture directories. */
+  def normalise(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex, show: Int => String) = {
+      val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
+      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        show(ids.getOrElseUpdate(m.group(1), ids.size + 1))))
+    }
+    val masked = plan
+      .replaceAll("""\$\$Lambda[$/\w]*(@[0-9a-f]+)?""", "\\$\\$Lambda")
+      .replaceAll("""(/graft_\w*?)_[0-9a-f]{12}\b""", "$1_<fingerprint>")
+    renumber(renumber(masked, """#(\d+)""".r, i => s"#$i"),
+      """plan_id=(\d+)""".r, i => s"plan_id=$i")
+  }
+
+  /** `plan` whole if it fits [[MaxPlanChars]], else its lines up to it. */
+  def cut(plan: String): String =
+    if (plan.length <= MaxPlanChars) plan
+    else plan.take(plan.lastIndexOf('\n', MaxPlanChars) + 1) + "... (truncated)\n"
+
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = graft.Tools.session(8,
@@ -62,14 +91,16 @@ object PlanDump {
       "q_sessionize", "q_window_running", "q_export_auto")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` at `$sf` (local[8], AQE on,\n")
+    sb.append(s"Generated by `PlanDump` at `$sf` (local[8], AQE on,\n")
     sb.append("GraftExtensions loaded). Regenerate: `sbt \"runMain PlanDump\"`.\n")
+    sb.append("Expression ids and `plan_id`s are renumbered per plan, lambda class\n")
+    sb.append("names and fixture fingerprints masked, so a rerun writes the same file.\n")
     for (name <- headline) {
       sb.append(s"\n## $name\n\n```\n")
       val df = graft.SparkEntry.queries(name)(spark, sf)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      sb.append(formatted.take(4500)).append(if (formatted.length > 4500) "\n... (truncated)\n" else "")
+      sb.append(cut(normalise(formatted)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -509,70 +509,94 @@ object Dedup {
       .limit(20)
   }
 
-  /** Minimum-label propagation connected components (Pregel shape): each
-    * node starts as its own representative; every round each node takes
-    * the min rep over itself and its neighbors until fixpoint. The
-    * converged rep (min doc_id reachable) is unique, so the result is
-    * independent of partitioning and iteration order.
+  /** Minimum-label connected components (Pregel shape): every node ends
+    * labelled `rep` = the minimum doc_id of its component. The labelling
+    * is unique, so the result is independent of partitioning, plan and
+    * iteration order.
     *
-    * Scale notes: each round is ONE equi-join + ONE partial+final min
-    * aggregate — no all-pairs anywhere; rounds = component diameter
-    * (near-dup clusters are shallow). The driver-side loop is algorithm
-    * control flow (a convergence check per round), not per-row work; the
-    * per-round `localCheckpoint` truncates lineage so plan depth stays
-    * constant — at cluster scale you'd swap in a reliable checkpoint dir.
+    * Seed: every node starts at min(self, direct neighbours). Then, per
+    * round, one propagation step (each node takes the min label over
+    * itself and its neighbours) and, unless that step lowered no label,
+    * a double pointer jump (rep → rep² → rep⁴).
     *
-    * @param nodes single-column `doc_id`; @param edges `doc_a`/`doc_b`. */
-  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame = {
+    * Fixpoint test: the propagation step lowers no label iff no edge
+    * joins two different labels, so it doubles as the test and costs one
+    * emptiness check on its checkpointed output. A labelling that passes
+    * is returned as it stands, with no confirming round, and it is the
+    * one more rounds would give, not just an equivalent one: labels are
+    * node ids of the same component and never increase, so once every
+    * edge joins equal labels the label is constant on each component;
+    * the component's minimum can only carry itself, so every node
+    * carries the component minimum. A labelling already settled at the
+    * seed pays no jump.
+    *
+    * Scale notes: a round is ONE equi-join + ONE partial+final min
+    * aggregate + two tiny jump joins — no all-pairs anywhere; rounds grow
+    * with log(component diameter) (near-dup clusters are shallow). The
+    * driver-side loop is algorithm control flow, not per-row work. Every
+    * round ends with the labels locally checkpointed, so lineage stays
+    * constant-depth — at cluster scale you'd swap in a reliable
+    * checkpoint dir.
+    *
+    * @param nodes single-column `doc_id`; @param edges `doc_a`/`doc_b`.
+    * @throws IllegalStateException if the labelling is still unsettled
+    *   after 64 rounds (a logic regression). */
+  def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame =
+    labelComponents(nodes, edges)._1
+
+  /** [[connectedComponents]]'s labels plus the number of rounds that
+    * jumped (0 when the seed is already settled). `maxRounds` is the
+    * round guard: pointer jumping converges in O(log diameter) rounds, so
+    * 64 covers any graph this universe can hold; reaching it means a
+    * logic regression, reported by an exception instead of an infinite
+    * driver loop or unsettled labels. */
+  private[graft] def labelComponents(nodes: DataFrame, edges: DataFrame,
+      maxRounds: Int = 64): (DataFrame, Int) = {
     val e2 = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .localCheckpoint()
-    // Seed = the first propagation round folded into initialization:
-    // every node starts at min(self, direct neighbors) instead of self,
-    // saving one full driver round (initial rep=id makes round 1's
-    // neighbor-rep lookup the identity anyway).
+    // Seed = the first propagation step folded into initialization:
+    // every node starts at min(self, direct neighbors) instead of self
+    // (initial rep=id makes the first neighbor-rep lookup the identity).
     var lab = nodes.select(col("doc_id"), col("doc_id").as("rep"))
       .union(e2.select(col("src").as("doc_id"), col("dst").as("rep")))
       .groupBy("doc_id").agg(min("rep").as("rep"))
       .localCheckpoint()
-    // Labels only ever decrease, so the fixpoint test is one tiny
-    // aggregate — sum(rep) unchanged — instead of a self-join per round.
-    var prevSum = Option.empty[Long]
-    var converged = false
     var rounds = 0
-    // pointer jumping converges in O(log diameter); 64 rounds covers any
-    // graph this universe can hold — the guard only protects against a
-    // logic regression turning into an infinite driver loop.
-    while (!converged && rounds < 64) {
-      rounds += 1
+    var settled = false
+    while (!settled) {
       val viaNbr = e2.join(lab.withColumnRenamed("doc_id", "dst"), "dst")
-        .select(col("src").as("doc_id"), col("rep"))
-      // Checkpoint before the self-join below: both sides then share one
-      // clean leaf (Catalyst's constraint rewrite rejects a self-joined
-      // Union), and lineage stays constant-depth across rounds.
-      val propagated = lab.select("doc_id", "rep").union(viaNbr)
-        .groupBy("doc_id").agg(min("rep").as("rep"))
-        .localCheckpoint(eager = false) // materialized by the sum below
-      // Double pointer jump: rep -> rep² -> rep⁴, quartering label-chain
-      // lengths per round (fewer driver rounds = fewer jobs; each jump is
-      // one tiny equi-join). Same fixpoint (min reachable id): a rep's
-      // own label only ever points lower, so jumps never overshoot.
-      val j1 = propagated
-        .join(propagated.select(col("doc_id").as("rep"), col("rep").as("rep2")), "rep")
-        .select(col("doc_id"), col("rep2").as("rep"))
+        .select(col("src").as("doc_id"), col("rep"), lit(false).as("self"))
+      // `own` = the label before this step. Checkpointed so the jump
+      // self-joins below share one clean leaf (Catalyst's constraint
+      // rewrite rejects a self-joined Union); lazily, as the test's scan
+      // materializes it.
+      val propagated = lab.select(col("doc_id"), col("rep"), lit(true).as("self"))
+        .union(viaNbr)
+        .groupBy("doc_id")
+        .agg(min("rep").as("rep"), max(when(col("self"), col("rep"))).as("own"))
         .localCheckpoint(eager = false)
-      val next = j1
-        .join(j1.select(col("doc_id").as("rep"), col("rep").as("rep2")), "rep")
-        .select(col("doc_id"), col("rep2").as("rep"))
-      // sum over ZERO rows is SQL NULL — getLong would NPE on an empty
-      // node set (r19 review); 0 is a fine fixed-point witness there
-      val row = next.agg(sum("rep")).head
-      val s = if (row.isNullAt(0)) 0L else row.getLong(0)
-      converged = prevSum.contains(s)
-      prevSum = Some(s)
-      lab = next
+      settled = propagated.filter(col("rep") < col("own")).isEmpty
+      if (!settled) {
+        if (rounds == maxRounds) throw new IllegalStateException(
+          s"connected components still unsettled after $rounds rounds")
+        rounds += 1
+        // Double pointer jump: rep -> rep² -> rep⁴, quartering label-chain
+        // lengths per round (fewer driver rounds = fewer jobs; each jump
+        // is one tiny equi-join). A rep's own label only ever points
+        // lower, so jumps never overshoot the component minimum.
+        val p = propagated.select("doc_id", "rep")
+        val j1 = p
+          .join(p.select(col("doc_id").as("rep"), col("rep").as("rep2")), "rep")
+          .select(col("doc_id"), col("rep2").as("rep"))
+          .localCheckpoint(eager = false)
+        lab = j1
+          .join(j1.select(col("doc_id").as("rep"), col("rep").as("rep2")), "rep")
+          .select(col("doc_id"), col("rep2").as("rep"))
+          .localCheckpoint()
+      }
     }
-    lab
+    (lab, rounds)
   }
 
   /** Near-dup candidate edges: same (lang, source) block AND at least one

@@ -1,0 +1,27 @@
+import org.scalatest.funsuite.AnyFunSuite
+
+/** PLANS.md stays reproducible: the tokens that drift between runs are
+  * normalised, and a long plan is cut at a line boundary. */
+class PlanDumpSpec extends AnyFunSuite {
+
+  test("normalise renumbers ids by first appearance and masks run-specific names") {
+    val run1 = "Output [2]: [doc_id#250L, sig#256]\nArguments: hashpartitioning(doc_id#250L, 8), " +
+      "[plan_id=2174]\nArguments: Foo$$$Lambda$5547/0x00007fc3dd489870@6216b817, obj#659\n" +
+      "Location: InMemoryFileIndex [file:/tmp/graft_ivf__data_sf0_1_fe509043eb8e/vectors]"
+    val run2 = run1.replace("#250", "#977").replace("#256", "#12").replace("#659", "#3")
+      .replace("2174", "99").replace("5547/0x00007fc3dd489870@6216b817", "12/0x00007efbe54887d0@1df2d986")
+      .replace("fe509043eb8e", "0123456789ab")
+    val n = PlanDump.normalise(run1)
+    assert(n == PlanDump.normalise(run2))
+    assert(n == "Output [2]: [doc_id#1L, sig#2]\nArguments: hashpartitioning(doc_id#1L, 8), " +
+      "[plan_id=1]\nArguments: Foo$$$Lambda, obj#3\n" +
+      "Location: InMemoryFileIndex [file:/tmp/graft_ivf__data_sf0_1_<fingerprint>/vectors]")
+  }
+
+  test("cut keeps whole lines up to the budget") {
+    val line = "x" * 99 + "\n"
+    assert(PlanDump.cut(line * 45) == line * 45)
+    val long = line * 46
+    assert(PlanDump.cut(long) == line * 45 + "... (truncated)\n")
+  }
+}

@@ -152,6 +152,23 @@ class DedupSpec extends SparkSpec {
     assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
   }
 
+  test("connected components: the chain pays one or more rounds") {
+    // Pins the fixpoint test: the chain's seed (3 → 2) is unsettled, so
+    // it needs a round; a settled seed pays none (ComponentsPropertySpec)
+    val chain = Dedup.labelComponents(Seq(1L, 2L, 3L, 10L, 11L, 20L).toDF("doc_id"),
+      Seq((2L, 3L), (1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b"))
+    assert(chain._2 >= 1, s"the chain ran ${chain._2} rounds")
+  }
+
+  test("connected components fail loudly at the round guard") {
+    // an ascending 40-node path needs more than one round (the seed
+    // moves labels 1 hop, a round at most 8 more)
+    val ids = 1L to 40L
+    val e = intercept[IllegalStateException](Dedup.labelComponents(
+      ids.toDF("doc_id"), ids.zip(ids.tail).toDF("doc_a", "doc_b"), maxRounds = 1))
+    assert(e.getMessage.contains("after 1 rounds"), e.getMessage)
+  }
+
   test("cleanReasons assigns every branch by priority on a planted corpus") {
     val long = (1 to 30).map(i => s"w$i").mkString(" ")            // 30 unique tokens
     val planted = Seq(
