@@ -183,6 +183,14 @@ object Combine {
       .orderBy("y")
   }
 
+  /** [[sortedWrite]]'s output directory for the dataset at `d`, in
+    * `java.io.tmpdir`, unique to the dataset's content and this process. */
+  private[graft] def sortedWriteDir(d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_sorted_write_" +
+      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
+      s"${graft.api.contentFingerprint(s"$d/lineitem.parquet")}_" +
+      java.lang.ProcessHandle.current().pid()
+
   /** A11 — bulk load contract: range-partitioned, sorted-within-partition
     * write (the HFile/bulkPut analog), then re-read and verify per-range
     * counts. The oracle aggregates the source directly, so the check
@@ -196,10 +204,7 @@ object Combine {
     // content-fingerprinted (like the IVF/ppm/cc caches) + per-process
     // unique: concurrent Verify/Bench runs on the same dataset must not
     // race one shared overwrite-then-read directory
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_sorted_write_" +
-      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-      s"${graft.api.contentFingerprint(s"$d/lineitem.parquet")}_" +
-      java.lang.ProcessHandle.current().pid()
+    val out = sortedWriteDir(d)
     // range count follows the session's parallelism instead of a
     // constant 8 (r21, guide §2 scale-adaptive partitioning): 8 ranges
     // serialized the sorted bulk write onto a quarter of a 32-core

@@ -95,15 +95,22 @@ object Dedup {
   val NumPerms = 32 // MinHash signature length
   val BandRows = 2  // rows per LSH band → 16 bands
 
-  /** The LSH banding expression — per band, the ':'-joined stringified
-    * signature rows — shared by both banding consumers (q_dedup_near's
-    * signature-carrying explode and q_dedup_ngram's id-only explode) so
-    * the bucketing rule cannot drift between them while each still
-    * hash-matches its own oracle (r19 review). */
-  private def bandExpr(nBands: Int): Column =
-    expr(s"transform(sequence(0, ${nBands - 1}), " +
-      s"b -> array_join(transform(sequence(1, $BandRows), " +
-      s"r -> cast(element_at(sig, b * $BandRows + r) as string)), ':'))")
+  /** The LSH band keys of a MinHash signature, shared by both banding
+    * consumers (q_dedup_near and q_dedup_ngram) so the bucketing rule
+    * cannot drift between them: per band, its [[BandRows]] signature
+    * rows packed into one long, `(row₀ << 31) | row₁`. Every MinHash
+    * value is a residue mod [[MinhashP]] = 2³¹−1, so it fits in 31 bits
+    * and the packing is injective: two documents share a band key iff
+    * they agree on every row of the band, the same buckets as the
+    * oracles' ':'-joined string key. A plain array of column
+    * expressions, no lambda, so the banding `posexplode` runs inside
+    * the signature's whole-stage-codegen stage. */
+  private def bandKeys(sig: Column): Column = {
+    require(BandRows * 31 <= 63, s"$BandRows rows of 31 bits do not pack into one long")
+    array((0 until NumPerms / BandRows).map(b =>
+      (0 until BandRows).map(r => sig.getItem(b * BandRows + r))
+        .reduce((key, row) => shiftleft(key, 31).bitwiseOR(row))): _*)
+  }
 
   /** THE oracle-side signature pipeline, shared verbatim by the
     * q_dedup_near and q_dedup_ngram oracles: corpus → word-3-gram
@@ -184,10 +191,9 @@ object Dedup {
           (0 until NumPerms).map(minhashA), (0 until NumPerms).map(minhashB),
           MinhashP).as("sig"))
 
-  // (the explode-based shingleVals helper — (doc_id, per-shingle h48)
-  // rows behind a repartition barrier — is gone, r22b: both former
-  // consumers run per-row kernels now, minhashSignatures above and
-  // dedupNgramWith's survivor shingle sets via graft_shingle_h48_distinct)
+  // Both shingle-hash consumers are per-row kernels, with no per-shingle
+  // rows and no repartition barrier: minhashSignatures above and
+  // dedupNgramOf's survivor shingle sets (graft_shingle_h48_distinct_sorted).
 
   /** C6 — MinHash + LSH banding near-dup candidates: band the signature,
     * equi-join on (band, concatenated band rows), estimate Jaccard as
@@ -225,29 +231,38 @@ object Dedup {
     // equality, and the exchange halves.
     val bands = sigs.select(col("doc_id"),
       col("sig").cast("array<int>").as("sig"),
-      posexplode(bandExpr(nBands)).as(Seq("band", "bh")))
+      posexplode(bandKeys(col("sig"))).as(Seq("band", "bh")))
     // signatures computed ONCE, pairs expanded per bucket, per-row state
-    // O(bucket width) — see bucketPairs for the full scale contract
-    // No global pair-dedup exchange at all: a pair appears at most once
-    // per band (≤ nBands rows), and duplicates are EQUAL under the total
-    // order (est_jaccard, doc_a, doc_b) — so the 20th DISTINCT pair's
-    // first occurrence lies within the first 20·nBands rows (≤ 19·nBands
-    // rows of better-or-equal distinct pairs + its own ≤ nBands−1 earlier
-    // copies precede it). TakeOrdered(20·nBands) — per-partition heaps,
-    // K rows to the driver, zero shuffle — then dedup the K rows and cut
-    // to 20. Bit-identical to distinct-then-top-20 (the r15c audit's
-    // pair-dedup exchange was 190+ MB on the duplication corpus; now 0).
+    // O(bucket width) — see bucketPairs for the full scale contract.
     // match count computed INSIDE the pair-expansion kernel (r22b
     // batch 3, mode match32 — the zip_with/filter match rule verbatim), so
     // pair rows never carry the signatures
-    bucketPairs(bands, Seq("band", "bh"), "match32")
+    topDistinctPairs(bucketPairs(bands, Seq("band", "bh"), "match32")
       .select(col("doc_a"), col("doc_b"),
-        round(col("m").cast(DoubleType) / NumPerms, 6).as("est_jaccard"))
-      .orderBy(desc("est_jaccard"), col("doc_a"), col("doc_b"))
-      .limit(20 * nBands)
-      .distinct()
-      .orderBy(desc("est_jaccard"), col("doc_a"), col("doc_b"))
-      .limit(20)
+        round(col("m").cast(DoubleType) / NumPerms, 6).as("est_jaccard")),
+      "est_jaccard", nBands)
+  }
+
+  /** The top 20 DISTINCT pairs of a scored [[bucketPairs]] stream
+    * `(doc_a, doc_b, <double metric>)`, ranked by `metric` descending
+    * (nulls first), then doc_a, doc_b, with no global pair-dedup
+    * exchange: a pair appears at most once per band (≤ `copies` rows),
+    * and duplicates are EQUAL under that total order (the metric is a
+    * function of the pair) — so the 20th DISTINCT pair's first
+    * occurrence lies within the first 20·copies rows (≤ 19·copies rows
+    * of better-or-equal distinct pairs + its own ≤ copies−1 earlier
+    * copies precede it). TakeOrdered(20·copies) — per-partition heaps,
+    * K rows to the driver, zero shuffle — then dedup the K rows and cut
+    * to 20. Bit-identical to distinct-then-top-20 (the r15c audit's
+    * pair-dedup exchange was 190+ MB on the duplication corpus; now 0).
+    * One row type and one order for q_dedup_near and q_dedup_simhash,
+    * so their dedup stage is one generated class, and so is the
+    * comparator they share with q_dedup_ngram's ranking
+    * (q_dedup_near's est_jaccard is never null: every non-null text has
+    * a signature). */
+  private def topDistinctPairs(pairs: DataFrame, metric: String, copies: Int): DataFrame = {
+    val order = Seq(desc_nulls_first(metric), col("doc_a"), col("doc_b"))
+    pairs.orderBy(order: _*).limit(20 * copies).distinct().orderBy(order: _*).limit(20)
   }
 
   /** SimHash: a 64-bit signature where bit k is the sign of the sum of
@@ -334,21 +349,19 @@ object Dedup {
         expr("CAST(conv(substring(sig, 1, 8), 16, 10) AS BIGINT)").as("hi"),
         expr("CAST(conv(substring(sig, 9, 8), 16, 10) AS BIGINT)").as("lo"))
         .as("sig"),
-      posexplode(expr("transform(sequence(0, 3), c -> substring(sig, 4 * c + 1, 4))"))
+      posexplode(array((0 until 4).map(c =>
+        conv(substring(col("sig"), 4 * c + 1, 4), 16, 10).cast(LongType)): _*))
         .as(Seq("c", "chunk")))
-    // Zero-shuffle pair ranking (same argument as q_dedup_near): a pair
-    // collides in at most 4 chunks and its copies are equal under
-    // (hamming, doc_a, doc_b), so TakeOrdered(20·4) + dedup + cut-to-20
-    // is bit-identical to distinct-then-top-20 with no pair exchange.
-    // Hamming (bit_count(hi⊕hi) + bit_count(lo⊕lo)) computed INSIDE the
-    // pair-expansion kernel (r22b batch 3, mode hamming).
-    bucketPairs(chunks, Seq("c", "chunk"), "hamming")
-      .select(col("doc_a"), col("doc_b"), col("m").cast(LongType).as("hamming"))
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
-      .limit(20 * 4)
-      .distinct()
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
-      .limit(20)
+    // Zero-shuffle pair ranking (topDistinctPairs): a pair collides in
+    // at most 4 chunks. Hamming (bit_count(hi⊕hi) + bit_count(lo⊕lo))
+    // computed INSIDE the pair-expansion kernel (r22b batch 3, mode
+    // hamming). Ranked descending on the negated distance as an exact
+    // double (nulls first, as the ascending distance ranks them) and
+    // turned back into a BIGINT distance after the cut.
+    topDistinctPairs(bucketPairs(chunks, Seq("c", "chunk"), "hamming")
+      .select(col("doc_a"), col("doc_b"), (-col("m")).cast(DoubleType).as("neg_hamming")),
+      "neg_hamming", 4)
+      .select(col("doc_a"), col("doc_b"), (-col("neg_hamming")).cast(LongType).as("hamming"))
   }
 
   /** Exact word-3-gram Jaccard similarity scored on LSH-survivor pairs —
@@ -388,18 +401,35 @@ object Dedup {
     dedupNgramOf(tbl(s, d, "documents"))
   }
 
+  /** q_dedup_ngram's distinct LSH candidate pairs `(doc_a, doc_b)`,
+    * banded exactly as q_dedup_near ([[bandKeys]]). */
+  private[graft] def ngramCandidates(docs: DataFrame): DataFrame = {
+    // This consumer needs only the PAIR IDS, so the signature does not
+    // ride the banding exchange at all — bucketPairs' struct gets a
+    // zero-byte-class placeholder sig (sort_array still orders by
+    // doc_id first, so the cap keeps the same lowest ids).
+    val bands = minhashSignatures(docs).select(col("doc_id"), lit(0).as("sig"),
+      posexplode(bandKeys(col("sig"))).as(Seq("band", "bh")))
+    // id-only projection BEFORE the distinct: this consumer never reads
+    // the signatures, so the pair-dedup exchange ships 16 B/pair
+    // (bucketPairs). The distinct is REQUIRED here — multi-band
+    // collisions would otherwise score (and emit) a pair repeatedly.
+    bucketPairs(bands, Seq("band", "bh"), "ids").distinct()
+  }
+
   /** The q_dedup_ngram pipeline. The two reused K-row-class frames
-    * (candidate pairs, survivor shingle sets) take a lazy
-    * `persist(MEMORY_AND_DISK)` barrier — persist, not localCheckpoint
-    * (r22 decade A/B, OPTIMIZATION_r22.md "q_dedup_ngram — lazy persist
-    * replaces the eager localCheckpoint": persist 3.70/3.89/3.53 s vs
-    * ckpt 5.66/4.53/4.32 s vs none 4.89/4.15/4.29 s interleaved at the
-    * sf1-equivalent decade; ties at sf0.1): localCheckpoint is EAGER —
-    * it runs the subtree as an extra build-time job and pins its blocks
-    * before the consuming job starts — while persist reuses blocks
-    * lazily inside the consuming job. Both pin K-row-class blocks for
-    * the session (identical leak profile); results cross-checked
-    * identical (DIFF = 0 both corpora).
+    * (candidate pairs, survivor shingle sets) take a LAZY local
+    * checkpoint barrier: like the lazy `persist(MEMORY_AND_DISK)` it
+    * replaces, its blocks are written inside the consuming job (r22
+    * decade A/B, OPTIMIZATION_r22.md: an EAGER localCheckpoint, which
+    * runs the subtree as an extra build-time job, measured 5.66/4.53/
+    * 4.32 s against persist's 3.70/3.89/3.53 s at the sf1-equivalent
+    * decade). Unlike a persist, its plan is not served to later queries
+    * that contain it, and its scan compiles no in-memory columnar
+    * iterator and batch predicate (two generated classes per frame).
+    * At the sf1-equivalent decade the steady q_dedup_ngram runs took a
+    * median 4.95 s with the checkpoint and 5.10 s with persist (10 and
+    * 12 runs, 4 cores), with identical results and shuffle bytes.
     *
     * Two-job LSH verify (the standard shape): job 1 = signature
     * pipeline → banding → collision pairs; job 2 = re-shingle ONLY
@@ -413,22 +443,8 @@ object Dedup {
     * the three consumers' subtrees non-identical, so ReusedExchange
     * never fires and the corpus is scanned 3×.) */
   private def dedupNgramOf(docs: DataFrame): DataFrame = {
-    def barrier(df: DataFrame): DataFrame =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = minhashSignatures(docs)
-    val nBands = NumPerms / BandRows
-    // This consumer needs only the PAIR IDS, so the signature does not
-    // ride the banding exchange at all — bucketPairs' struct gets a
-    // zero-byte-class placeholder sig (sort_array still orders by
-    // doc_id first, so the cap keeps the same lowest ids).
-    val bands = sigs.select(col("doc_id"), lit(0).as("sig"),
-      posexplode(bandExpr(nBands)).as(Seq("band", "bh")))
-    // id-only projection BEFORE the distinct: this consumer never reads
-    // the signatures, so the pair-dedup exchange ships 16 B/pair
-    // (bucketPairs). The distinct is REQUIRED here — multi-band
-    // collisions would otherwise score (and emit) a pair repeatedly.
-    val cands = barrier(bucketPairs(bands, Seq("band", "bh"), "ids")
-      .distinct())
+    def barrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+    val cands = barrier(ngramCandidates(docs))
     val candIds = cands.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
     // barrier: used twice (probe side + broadcast side), and the
@@ -462,7 +478,9 @@ object Dedup {
       .filter(col("ni") > 0)
       .select(col("doc_a"), col("doc_b"),
         round(col("ni").cast(DoubleType) / (col("na") + col("nb") - col("ni")), 6).as("jaccard"))
-      .orderBy(desc("jaccard"), col("doc_a"), col("doc_b"))
+      // nulls first: jaccard is never null (ni > 0), and this is
+      // topDistinctPairs' order, so the comparator is one generated class
+      .orderBy(desc_nulls_first("jaccard"), col("doc_a"), col("doc_b"))
       .limit(20)
   }
 
@@ -530,7 +548,7 @@ object Dedup {
     * carries the component minimum. A labelling already settled at the
     * seed pays no jump.
     *
-    * Scale notes: a round is ONE equi-join + ONE partial+final min
+    * Scale notes: a round is ONE outer equi-join + ONE partial+final min
     * aggregate + two tiny jump joins — no all-pairs anywhere; rounds grow
     * with log(component diameter) (near-dup clusters are shallow). The
     * driver-side loop is algorithm control flow, not per-row work. Every
@@ -538,7 +556,8 @@ object Dedup {
     * constant-depth — at cluster scale you'd swap in a reliable
     * checkpoint dir.
     *
-    * @param nodes single-column `doc_id`; @param edges `doc_a`/`doc_b`.
+    * @param nodes single-column `doc_id`; @param edges `doc_a`/`doc_b`,
+    *   whose endpoints are nodes.
     * @throws IllegalStateException if the labelling is still unsettled
     *   after 64 rounds (a logic regression). */
   def connectedComponents(nodes: DataFrame, edges: DataFrame): DataFrame =
@@ -552,31 +571,41 @@ object Dedup {
     * driver loop or unsettled labels. */
   private[graft] def labelComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 64): (DataFrame, Int) = {
-    val e2 = edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    // Seed = the first propagation step folded into initialization:
-    // every node starts at min(self, direct neighbors) instead of self
-    // (initial rep=id makes the first neighbor-rep lookup the identity).
-    var lab = nodes.select(col("doc_id"), col("doc_id").as("rep"))
-      .union(e2.select(col("src").as("doc_id"), col("dst").as("rep")))
-      .groupBy("doc_id").agg(min("rep").as("rep"))
-      .localCheckpoint()
+    val e2 = symmetricEdges(edges).localCheckpoint()
+    // One propagation step: each node takes the min label over itself and
+    // its neighbours; `own` is its label before the step. Every labelling
+    // the step reads is a checkpoint with the step's own output schema
+    // (doc_id, rep, own; the step ignores `own`), so the seed and every
+    // round plan the same step and share its generated classes. One
+    // left outer join from the labels pairs each label with the edges
+    // into its node, and one explode emits the node's own row and the
+    // label it sends the edge's source: a single stage up to the
+    // aggregate. The self row repeats once per edge and a node without
+    // edges meets itself, which changes neither min nor `own`; and an
+    // outer join may build (broadcast) only the edge side, whatever the
+    // size estimates of the labelling. Checkpointed lazily: the consuming
+    // job materializes it, and the jump self-joins below share one clean
+    // leaf.
+    def step(lab: DataFrame): DataFrame =
+      lab.withColumnRenamed("doc_id", "dst").join(e2, Seq("dst"), "left")
+        .select(explode(array(
+          struct(col("dst").as("doc_id"), col("rep"), lit(true).as("self")),
+          struct(coalesce(col("src"), col("dst")).as("doc_id"), col("rep"),
+            lit(false).as("self")))).as("v"))
+        .groupBy(col("v.doc_id").as("doc_id"))
+        .agg(min("v.rep").as("rep"), max(when(col("v.self"), col("v.rep"))).as("own"))
+        .localCheckpoint(eager = false)
+    val unknown = lit(null).cast(LongType).as("own")
+    // Seed = the first step from the identity labelling: every node
+    // starts at min(self, direct neighbours). Not tested: the step after
+    // it is the first fixpoint test.
+    var lab = step(nodes.select(col("doc_id"), col("doc_id").as("rep"), unknown)
+      .localCheckpoint(eager = false))
     var rounds = 0
     var settled = false
     while (!settled) {
-      val viaNbr = e2.join(lab.withColumnRenamed("doc_id", "dst"), "dst")
-        .select(col("src").as("doc_id"), col("rep"), lit(false).as("self"))
-      // `own` = the label before this step. Checkpointed so the jump
-      // self-joins below share one clean leaf (Catalyst's constraint
-      // rewrite rejects a self-joined Union); lazily, as the test's scan
-      // materializes it.
-      val propagated = lab.select(col("doc_id"), col("rep"), lit(true).as("self"))
-        .union(viaNbr)
-        .groupBy("doc_id")
-        .agg(min("rep").as("rep"), max(when(col("self"), col("rep"))).as("own"))
-        .localCheckpoint(eager = false)
-      settled = propagated.filter(col("rep") < col("own")).isEmpty
+      val propagated = step(lab)
+      settled = settledLabels(propagated)
       if (!settled) {
         if (rounds == maxRounds) throw new IllegalStateException(
           s"connected components still unsettled after $rounds rounds")
@@ -592,12 +621,35 @@ object Dedup {
           .localCheckpoint(eager = false)
         lab = j1
           .join(j1.select(col("doc_id").as("rep"), col("rep").as("rep2")), "rep")
-          .select(col("doc_id"), col("rep2").as("rep"))
+          .select(col("doc_id"), col("rep2").as("rep"), unknown)
           .localCheckpoint()
       }
     }
-    (lab, rounds)
+    (lab.select("doc_id", "rep"), rounds)
   }
+
+  /** Whether no row of the labelling `lab` (doc_id, rep, own) still has
+    * `rep < own`. A checkpoint's rows are filtered as it holds them, at
+    * the ordinals of `lab`'s schema, since a planned filter would
+    * compile classes of its own; any other plan is tested as a query. */
+  private def settledLabels(lab: DataFrame): Boolean = lab.queryExecution.logical match {
+    case ckpt: org.apache.spark.sql.execution.LogicalRDD =>
+      val rep = lab.schema.fieldIndex("rep")
+      val own = lab.schema.fieldIndex("own")
+      ckpt.rdd.filter(r => !r.isNullAt(rep) && !r.isNullAt(own) &&
+        r.getLong(rep) < r.getLong(own)).isEmpty()
+    case _ => lab.filter(col("rep") < col("own")).isEmpty
+  }
+
+  /** Every edge in both directions, as `(src, dst)`: one `explode` over
+    * the two orientations, so `edges` is planned and run once (a union
+    * of two selects planned its whole subtree twice, down to two
+    * identical final aggregates). Same multiset as that union. */
+  private[graft] def symmetricEdges(edges: DataFrame): DataFrame =
+    edges.select(explode(array(
+        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
   /** Near-dup candidate edges: same (lang, source) block AND at least one
     * shared distinct word-3-gram — the q_dedup_ngram pair condition
@@ -627,7 +679,8 @@ object Dedup {
     // per-doc dedup into one kernel (identical values to the
     // array_distinct(transform(...)) chain — TextExpressionsSpec), so
     // the corpus-wide repartition(doc_id) barrier exchange is gone (the
-    // kernel evaluates split once per row; see shingleVals). The
+    // kernel evaluates split once per row, where an inline lambda over
+    // split re-tokenized per element; see shinglesOf). The
     // min-per-group star edges come from ONE window over the posting
     // exchange instead of groupBy + self-join: the join form shipped the
     // postings across (lang, source, h) TWICE (once into the mins
@@ -677,6 +730,13 @@ object Dedup {
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, () => DataFrame]]()
 
+  /** [[clusterLabels]]' parquet cache of the corpus at `d`, in
+    * `java.io.tmpdir`, keyed by the path and the corpus content. */
+  private[graft] def labelCacheDir(d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_cc_" +
+      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
+      graft.api.contentFingerprint(s"$d/documents.parquet")
+
   def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     // scratch choke point BEFORE the memo: every caller depends on the
     // persistent label cache even when this session already paid the
@@ -691,9 +751,7 @@ object Dedup {
       _ => new java.util.concurrent.ConcurrentHashMap[String, () => DataFrame]())
     perSession.computeIfAbsent(d, _ => {
       lazy val built: DataFrame = {
-        val dir = s"${System.getProperty("java.io.tmpdir")}/graft_cc_" +
-          s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-          graft.api.contentFingerprint(s"$d/documents.parquet")
+        val dir = labelCacheDir(d)
         if (new java.io.File(dir, "_SUCCESS").exists()) s.read.parquet(dir)
         else {
           val docs = tbl(s, d, "documents")

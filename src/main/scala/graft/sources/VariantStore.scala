@@ -413,43 +413,47 @@ object VariantStore {
     val dir = java.nio.file.Paths.get(path)
     val foldSet = fold.map(_.file).toSet
     val tmpDir = java.nio.file.Files.createTempDirectory("graft_compact_")
-    merged
-      .repartitionByRange(numRanges, col(keyCol))
-      .sortWithinPartitions(keyCol)
-      .write.format("graft.sources.VariantStoreSink")
-      .option("path", tmpDir.toString).mode("overwrite").save()
-    val mergedLines = StoreManifest.readLines(tmpDir)
-    mergedLines.map(StoreManifest.parse).foreach { e =>
-      java.nio.file.Files.move(tmpDir.resolve(e.file), dir.resolve(e.file))
-    }
-    beforeSplice()
-    val spliced = StoreManifest.withManifestLock(dir) {
-      val current = StoreManifest.readLines(dir)
-      val currentFiles = current.map(StoreManifest.parse(_).file).toSet
-      if (fold.exists(e => !currentFiles(e.file))) false // lost a compactor race
-      else {
-        StoreManifest.writeLines(dir,
-          (current.filterNot(l => foldSet(StoreManifest.parse(l).file)) ++ mergedLines).sorted)
-        true
+    try {
+      merged
+        .repartitionByRange(numRanges, col(keyCol))
+        .sortWithinPartitions(keyCol)
+        .write.format("graft.sources.VariantStoreSink")
+        .option("path", tmpDir.toString).mode("overwrite").save()
+      val mergedLines = StoreManifest.readLines(tmpDir)
+      mergedLines.map(StoreManifest.parse).foreach { e =>
+        java.nio.file.Files.move(tmpDir.resolve(e.file), dir.resolve(e.file))
       }
+      beforeSplice()
+      val spliced = StoreManifest.withManifestLock(dir) {
+        val current = StoreManifest.readLines(dir)
+        val currentFiles = current.map(StoreManifest.parse(_).file).toSet
+        if (fold.exists(e => !currentFiles(e.file))) false // lost a compactor race
+        else {
+          StoreManifest.writeLines(dir,
+            (current.filterNot(l => foldSet(StoreManifest.parse(l).file)) ++ mergedLines).sorted)
+          true
+        }
+      }
+      // kill window (KillDurabilitySpec): spliced manifest live, fold
+      // files not yet retired — a crash here must serve the compacted
+      // content with the fold set as sweepable orphans
+      if (spliced) afterSplice()
+      if (spliced)
+        // RETIRE, don't delete: a reader that resolved the pre-splice
+        // manifest (file list captured at DataFrame construction) must
+        // finish its scan against intact files — the fold set stays on
+        // disk for the sweep grace and is reaped as an aged orphan by a
+        // later maintenance pass ([[StoreManifest.retire]]).
+        fold.foreach(e => StoreManifest.retire(dir, e.file))
+      else // abort: un-publish OUR merged generation; the store is untouched
+        mergedLines.map(StoreManifest.parse)
+          .foreach(e => java.nio.file.Files.deleteIfExists(dir.resolve(e.file)))
+    } finally {
+      // temp-store leftovers (manifest, lock sidecar, checksums, dir),
+      // also when a step above throws
+      Option(tmpDir.toFile.listFiles()).foreach(_.foreach(_.delete()))
+      java.nio.file.Files.deleteIfExists(tmpDir)
     }
-    // kill window (KillDurabilitySpec): spliced manifest live, fold
-    // files not yet retired — a crash here must serve the compacted
-    // content with the fold set as sweepable orphans
-    if (spliced) afterSplice()
-    if (spliced)
-      // RETIRE, don't delete: a reader that resolved the pre-splice
-      // manifest (file list captured at DataFrame construction) must
-      // finish its scan against intact files — the fold set stays on
-      // disk for the sweep grace and is reaped as an aged orphan by a
-      // later maintenance pass ([[StoreManifest.retire]]).
-      fold.foreach(e => StoreManifest.retire(dir, e.file))
-    else // abort: un-publish OUR merged generation; the store is untouched
-      mergedLines.map(StoreManifest.parse)
-        .foreach(e => java.nio.file.Files.deleteIfExists(dir.resolve(e.file)))
-    // temp-store leftovers (manifest, lock sidecar, dir) — best-effort
-    Option(tmpDir.toFile.listFiles()).foreach(_.foreach(_.delete()))
-    java.nio.file.Files.deleteIfExists(tmpDir)
     // Aged orphan sweep — compaction is the store's maintenance pass
     // (since the splice rework the sink's truncate-commit sweep no
     // longer runs against the REAL store dir); the shared reap policy

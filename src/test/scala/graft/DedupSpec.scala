@@ -75,6 +75,27 @@ class DedupSpec extends SparkSpec {
     assert(pairs(13) == p, "cap not deterministic across partitioning")
   }
 
+  test("a pair cut from a hot bucket still pairs in a later band it shares") {
+    // Band 0 holds one hot bucket of 10 docs, cut to its 4 lowest ids;
+    // docs 7 and 8 (both cut there) share an organic band-1 bucket, and
+    // docs 2 (kept) and 9 (cut) an organic band-2 bucket. The cut trades
+    // recall only inside the hot bucket: every pair of an uncut bucket is
+    // a candidate, whatever lower band the two also share. Reference:
+    // per band, all pairs of the cut buckets, distinct over the bands.
+    val rows = (0L until 10L).map(i => (i, 0, "hot")) ++
+      Seq((7L, 1, "b1"), (8L, 1, "b1"), (2L, 2, "b2"), (9L, 2, "b2"))
+    val width = 4
+    val expected = rows.groupBy(r => (r._2, r._3)).values.flatMap { bucket =>
+      val ids = bucket.map(_._1).sorted.take(width)
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    }.toSet
+    val got = Dedup.bucketPairs(rows.toDF("doc_id", "band", "bh").withColumn("sig", lit(0)),
+      Seq("band", "bh"), mode = "ids", maxWidth = width)
+      .distinct().select("doc_a", "doc_b").as[(Long, Long)].collect()
+    assert(got.toSet == expected, s"pairs ${got.toSet} != reference $expected")
+    assert(expected.contains((7L, 8L)) && expected.contains((2L, 9L)))
+  }
+
   // md5 leaf of the hex simhash kernel: first 8 digest bytes, big-endian.
   private def md5Hash64(t: String): Long = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8"))
@@ -128,11 +149,13 @@ class DedupSpec extends SparkSpec {
       (2000000000L, text, "en", "web", 10L),
       (5000000000L, text, "en", "web", 10L),
       (3L, text, "en", "web", 9L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_cluster_rep_").toString
+    val dir = scratchDir("graft_cluster_rep_").toString
     planted.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     GraftExtensions.register(spark)
     val out = SparkEntry.queries("q_cluster_rep")(spark, dir).collect()
+    // the query parks the labels in a cache keyed by this temp corpus
+    deleteAfterAll(java.nio.file.Paths.get(Dedup.labelCacheDir(dir)))
     assert(out.length == 1, s"expected one cluster, got ${out.toSeq}")
     val r = out.head
     assert(r.getAs[Long]("rep") == 3L && r.getAs[Long]("n_docs") == 3L &&
@@ -208,7 +231,7 @@ class DedupSpec extends SparkSpec {
     val planted = (0 until 30).map { i =>
       (i.toLong, baseToks.updated(i % 40, s"mut$i").mkString(" "), "en", "web", 0L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_topk_").toString
+    val dir = scratchDir("graft_dedup_topk_").toString
     planted.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     GraftExtensions.register(spark)
@@ -247,7 +270,7 @@ class DedupSpec extends SparkSpec {
     val planted = (0 until 30).map { i =>
       (i.toLong, (1 to 40).map(j => s"tok$j").mkString(" "), "en", "web", 0L)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_simhash_topk_").toString
+    val dir = scratchDir("graft_simhash_topk_").toString
     planted.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     GraftExtensions.register(spark)

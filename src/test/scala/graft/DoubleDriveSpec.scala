@@ -50,6 +50,8 @@ object DoubleDriveSpec {
 class DoubleDriveSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  // q_sorted_write's output is per process: nothing later reuses it
+  deleteAfterAll(java.nio.file.Paths.get(ops.Combine.sortedWriteDir(sf)))
 
   private def writePathQueries = DoubleDriveSpec.writePathQueries
 

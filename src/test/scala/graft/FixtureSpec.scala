@@ -36,7 +36,7 @@ class FixtureSpec extends SparkSpec {
     // the Verify/Bench-pair interleaving the atomic rename exists to
     // prevent. Each builder writes a distinct payload so the test can
     // prove all readers observe ONE winner, not a splice of builds.
-    val target = java.nio.file.Files.createTempDirectory("graft_bo_").resolve("fixture")
+    val target = scratchDir("graft_bo_").resolve("fixture")
     // snapshot pre-existing temp builds: the leftover assertion below
     // must only see temps THIS test's builders created — a concurrent
     // process mid-buildOnce (or an old leak on a shared host) is not
@@ -82,7 +82,7 @@ class FixtureSpec extends SparkSpec {
     // fixture) must not abandon a half-written temp tree — repeated
     // failing runs would otherwise accumulate large orphans in the
     // shared tmpdir.
-    val target = java.nio.file.Files.createTempDirectory("graft_bo_fail_")
+    val target = scratchDir("graft_bo_fail_")
       .resolve("fixture")
     def tempBuilds(): Set[java.nio.file.Path] = {
       val s = java.nio.file.Files.list(
@@ -116,7 +116,7 @@ class FixtureSpec extends SparkSpec {
     // A pre-atomic (or killed) writer can leave the target existing
     // WITHOUT its marker; buildOnce must retire it atomically and
     // publish a fresh build rather than failing forever.
-    val target = java.nio.file.Files.createTempDirectory("graft_bo_stale_")
+    val target = scratchDir("graft_bo_stale_")
       .resolve("fixture")
     java.nio.file.Files.createDirectories(target)
     java.nio.file.Files.write(target.resolve("half-written.bin"), Array[Byte](9))
@@ -220,7 +220,7 @@ class FixtureSpec extends SparkSpec {
     // blind cast into null/garbage timestamps that the type-only
     // assertions above would wave through
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fixture_drift").toString
+    val dir = scratchDir("graft_fixture_drift").toString
     Seq((1L, 1.5, 2L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

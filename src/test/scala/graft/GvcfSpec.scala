@@ -791,7 +791,7 @@ class GvcfSpec extends SparkSpec {
     // a joined string (the sink is scalar-typed) and reconstruct by
     // split — the round trip is part of what is proven.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_refloop").toString
+    val dir = scratchDir("graft_refloop").toString
     val ddl = "key LONG, ver LONG, sample STRING, contig STRING, vstart LONG, " +
       "vend LONG, kind STRING, alleles STRING, gq INT, gt STRING"
     def toStore(df: DataFrame, ver: Long, mode: String): Unit =

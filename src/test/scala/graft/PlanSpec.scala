@@ -107,6 +107,48 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("LSH banding runs inside whole-stage codegen (no interpreted Generate)") {
+    // An interpreted banding lambda (CodegenFallback) puts its Generate
+    // outside every codegen stage and splits the signature pipeline into
+    // two generated classes per side. q_dedup_ngram's banding runs in
+    // its checkpointed candidate frame, so that frame is checked too.
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case n => n +: n.children.flatMap(inStage)
+    }
+    val banded = Seq(
+      "q_dedup_near" -> Dedup.dedupNear.run(spark, sf),
+      "q_dedup_simhash" -> Dedup.dedupSimhash.run(spark, sf),
+      "q_dedup_ngram candidates" -> Dedup.ngramCandidates(graft.api.tbl(spark, sf, "documents")))
+    for ((name, df) <- banded :+ ("q_dedup_ngram" -> Dedup.dedupNgram.run(spark, sf))) {
+      df.collect()
+      val nodes = flattenPlan(df.queryExecution.executedPlan)
+      val staged = nodes.collect { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+      val generates = nodes.collect { case g: GenerateExec => g }
+      if (banded.exists(_._1 == name))
+        assert(generates.exists(_.generator.prettyName == "posexplode"),
+          s"$name: no banding posexplode in the executed plan")
+      val outside = generates.filterNot(g => staged.exists(_ eq g))
+      assert(outside.isEmpty, s"$name: Generate outside whole-stage codegen: " +
+        outside.map(_.generator.prettyName).mkString(", "))
+    }
+  }
+
+  test("labelComponents' edge checkpoint plans a single final aggregate") {
+    // both edge orientations come from one plan of the candidate edges;
+    // a union of two selects planned the edges' final distinct twice
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    val docs = graft.api.tbl(spark, sf, "documents")
+    val e2 = Dedup.symmetricEdges(Dedup.candidateEdges(docs))
+    e2.collect()
+    val finals = flattenPlan(e2.queryExecution.executedPlan).collect {
+      case h: HashAggregateExec if h.requiredChildDistributionExpressions.isDefined => h
+    }
+    assert(finals.size == 1, s"expected 1 final aggregate, got ${finals.size}")
+  }
+
   test("genotypeGvcf plans the coverage join as equi-join (no nested loop)") {
     val p = plan(Gvcf.genotypeGvcfQuery)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),

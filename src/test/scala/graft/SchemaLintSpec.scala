@@ -18,6 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 class SchemaLintSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+  // q_sorted_write writes its per-process output while it is built
+  deleteAfterAll(java.nio.file.Paths.get(ops.Combine.sortedWriteDir(sf)))
 
   test("no query result schema carries a top-level array, map, or struct column") {
     GraftExtensions.register(spark)

@@ -44,7 +44,7 @@ class SourceSpec extends SparkSpec {
   }
 
   private def sinkDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_sink_$name").toString
+    scratchDir(s"graft_sink_$name").toString
 
   test("DSv2 sink writes range-partitioned sorted store files + manifest") {
     val dir = sinkDir("ok")

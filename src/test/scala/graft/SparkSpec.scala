@@ -12,11 +12,33 @@ object TestSpark {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Deletes `p` and everything under it; a missing path is a no-op. */
+  def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally walk.close()
+    }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   override def beforeAll(): Unit = { spark.sparkContext.setLogLevel("ERROR"); super.beforeAll() }
+
+  private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** Deletes `p`, with everything under it, when the suite ends. */
+  def deleteAfterAll(p: java.nio.file.Path): java.nio.file.Path = { scratch.add(p); p }
+
+  /** A fresh `<prefix>…` directory in `java.io.tmpdir`, deleted when the
+    * suite ends. */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    deleteAfterAll(java.nio.file.Files.createTempDirectory(prefix))
+
+  override def afterAll(): Unit =
+    try scratch.forEach(p => TestSpark.deleteTree(p)) finally super.afterAll()
 
   /** Physical-plan traversal that descends through the AQE wrappers
     * (AdaptiveSparkPlanExec / QueryStageExec / ReusedExchangeExec),

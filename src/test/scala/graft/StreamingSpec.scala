@@ -307,7 +307,7 @@ class StreamingSpec extends SparkSpec {
   test("file sink + checkpoint recovers exactly-once across query restarts") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
+    val dir = scratchDir("graft_stream_sink").toString
     val input = MemoryStream[Ev]
     def start() = input.toDF()
       .writeStream.format("parquet")
@@ -439,7 +439,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming store sink: each epoch appends a sorted generation to the manifest") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_store").toString
+    val dir = scratchDir("graft_stream_store").toString
     val input = MemoryStream[(Long, String)]
     val q = input.toDF().toDF("key", "payload")
       .writeStream.format("graft.sources.VariantStoreSink")
@@ -552,7 +552,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.ops.FilledCall
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2e_loop").toString
+    val dir = scratchDir("graft_e2e_loop").toString
     val input = MemoryStream[FilledCall]
     val q = Streaming.streamingCombine(input.toDS())
       .select($"pos".as("key"), $"ver", $"calls".as("payload"))
@@ -668,7 +668,7 @@ class StreamingSpec extends SparkSpec {
     // layer; this drives it through a real checkpoint restart.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_restart_store").toString
+    val dir = scratchDir("graft_restart_store").toString
     val input = MemoryStream[(Long, String)]
     def start() = input.toDF().toDF("key", "payload")
       .writeStream.format("graft.sources.VariantStoreSink")
@@ -719,7 +719,7 @@ class StreamingSpec extends SparkSpec {
     // lines. Only the mark can stop the re-append.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_restart_fold").toString
+    val dir = scratchDir("graft_restart_fold").toString
     val input = MemoryStream[(Long, String)]
     def start() = input.toDF().toDF("key", "payload")
       .writeStream.format("graft.sources.VariantStoreSink")
@@ -766,7 +766,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.ops.FilledCall
-    val dir = java.nio.file.Files.createTempDirectory("graft_restart_combine").toString
+    val dir = scratchDir("graft_restart_combine").toString
     val input = MemoryStream[FilledCall]
     def start() = Streaming.streamingCombine(input.toDS())
       .select($"pos".as("key"), $"ver", $"calls".as("payload"))

@@ -96,7 +96,7 @@ class VcfSpec extends SparkSpec {
     assert(header.count(_.startsWith("##FORMAT=")) == 2)
     // write header + body as one file; the cohort parser must load it
     // (headers skipped) and reproduce the direct combine exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft_loadable").toString
+    val dir = scratchDir("graft_loadable").toString
     val body = graft.ops.Gvcf.exportLines(cohort)
       .orderBy("contig", "pos").select("line").as[String].collect().toSeq
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "cohort.vcf"),
@@ -111,7 +111,7 @@ class VcfSpec extends SparkSpec {
   }
 
   test("readGvcfDir ingests a directory of per-sample files, sample from file name") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cohort").toString
+    val dir = scratchDir("graft_cohort").toString
     def write(sample: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$sample.g.vcf"),
         (Seq("##fileformat=VCFv4.2",

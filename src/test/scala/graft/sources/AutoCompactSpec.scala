@@ -44,7 +44,7 @@ class AutoCompactSpec extends graft.SparkSpec {
       "with no manual compact call") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_autocompact").toString
+    val root = scratchDir("graft_autocompact").toString
     val dir = s"$root/store"
     val rnd = new scala.util.Random(20260815L)
     val input = MemoryStream[(Long, Long, String)]
@@ -92,7 +92,7 @@ class AutoCompactSpec extends graft.SparkSpec {
   test("disjoint append-only ingest is exempt: no fold even far past the threshold") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_autodisjoint").toString
+    val root = scratchDir("graft_autodisjoint").toString
     val dir = s"$root/store"
     val input = MemoryStream[(Long, Long, String)]
     // an aggressive threshold so the exemption, not the budget, is what
@@ -125,7 +125,7 @@ class AutoCompactSpec extends graft.SparkSpec {
   test("a tuned threshold/keep is honored and the fold lands at the tuned size") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_autotuned").toString
+    val root = scratchDir("graft_autotuned").toString
     val dir = s"$root/store"
     val input = MemoryStream[(Long, Long, String)]
     val q = input.toDF().toDF("key", "ver", "payload")
@@ -218,7 +218,7 @@ class AutoCompactSpec extends graft.SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft_autompart").toString
+    val root = scratchDir("graft_autompart").toString
     val dir = s"$root/store"
     val input = MemoryStream[(Long, Long, String)]
     // repartition(2, key): each epoch lands as TWO hash-interleaved task

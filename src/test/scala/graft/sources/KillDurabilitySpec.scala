@@ -80,12 +80,15 @@ class KillDurabilitySpec extends graft.SparkSpec {
   /** Launch KillDriver(dir, op), SIGKILL it at the published sync
     * point, and confirm it died by signal, not by finishing. */
   private def driveAndKill(dir: String, op: String): Unit = {
-    val sync = java.nio.file.Files.createTempDirectory("graft_kill_")
-      .resolve("sync").toString
-    val log = java.io.File.createTempFile("graft_kill_", ".log")
+    // the driver's log, sync flag and temp files (a compaction killed
+    // mid-splice leaves its staging store there) all live in one
+    // directory the suite deletes
+    val work = scratchDir("graft_kill_")
+    val sync = work.resolve("sync").toString
+    val log = work.resolve("driver.log").toFile
     val cmd = Seq(
       s"${System.getProperty("java.home")}/bin/java") ++ opens ++ Seq(
-      "-Xmx3g", "-Dspark.ui.enabled=false",
+      "-Xmx3g", "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=$work",
       "-Dspark.sql.session.timeZone=UTC",
       "-cp", System.getProperty("java.class.path"),
       "graft.sources.KillDriver", dir, op, sync)
@@ -124,8 +127,7 @@ class KillDurabilitySpec extends graft.SparkSpec {
   }
 
   private def freshStore(op: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_killdur_${op}_").toString
+    val dir = scratchDir(s"graft_killdur_${op}_").toString
     seed(dir)
     dir
   }
@@ -179,8 +181,7 @@ class KillDurabilitySpec extends graft.SparkSpec {
     // killing the process mid-fold must lose NOTHING: all four epochs
     // serve, the staged merge generation is a sweepable orphan, and the
     // mark proves the triggering epoch needs no replay
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_killdur_auto_pre_").toString
+    val dir = scratchDir("graft_killdur_auto_pre_").toString
     driveAndKill(dir, "auto_pre")
     assert(manifestFiles(dir).size == 4,
       "all four epoch generations must be live (the splice never landed)")

@@ -35,7 +35,7 @@ class ManifestSpec extends graft.SparkSpec {
     // mirror of the writer's sampleIdx type check (r13 advice): a LONG
     // `sample` column is never extent-tracked, so a projection against
     // it would silently return wrong/empty results — require STRING
-    val dir = java.nio.file.Files.createTempDirectory("graft_badsample").toString
+    val dir = scratchDir("graft_badsample").toString
     val e = intercept[IllegalArgumentException] {
       VariantStore.readRange(spark, dir, "key LONG, ver LONG, sample LONG, payload STRING",
         0L, 10L, samples = Seq("s1"))

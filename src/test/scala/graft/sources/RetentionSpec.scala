@@ -72,7 +72,7 @@ class RetentionSpec extends graft.SparkSpec {
     * seed-coverage self-defense (all verbs fired, both snapshots taken) —
     * only meaningful for the pinned seed the suite always runs. */
   private def driveSchedule(seed: Long, canonical: Boolean): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_retention_$seed").toString
+    val dir = scratchDir(s"graft_retention_$seed").toString
     val rnd = new scala.util.Random(seed)
     var log = Vector.empty[(Long, Long, String)] // rows the CURRENT table holds
     var gen = 0
@@ -122,8 +122,7 @@ class RetentionSpec extends graft.SparkSpec {
             s"[seed $seed] vacuum(0) left orphans or ate live files at step $step")
         case 7 if snapshots < 2 => // snapshot mid-schedule
           snapshots += 1
-          val dest = java.nio.file.Files
-            .createTempDirectory(s"graft_retention_snap${seed}_$snapshots").toString
+          val dest = scratchDir(s"graft_retention_snap${seed}_$snapshots").toString
           VariantStore.snapshot(dir, dest)
           assert(manifestFiles(dest).subsetOf(diskDataFiles(dest)),
             s"[seed $seed] clone not self-contained at step $step")

@@ -35,7 +35,7 @@ class StoreEpochSpec extends graft.SparkSpec {
       .contains((StoreManifest.queryTag(qid), epoch)))
 
   test("re-committed epoch replaces exactly its own generation") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch").toString
+    val dir = scratchDir("graft_epoch").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     // epoch 5 commits, epoch 6 commits on top
     val m5a = epochFiles(dir, 5L, Seq((1L, 5L, "a5"), (2L, 5L, "b5")))
@@ -79,7 +79,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // to replace, so a naive commit appends the rows a SECOND time. The
     // epoch high-water mark is the durable witness that must turn the
     // replay into a no-op (and reap the replay's task files).
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_fold").toString
+    val dir = scratchDir("graft_epoch_fold").toString
     // caller-owned temp store: zero grace ⇒ retirement reclaims
     // immediately, so disk == manifest is assertable right after the fold
     VariantStore.setGrace(dir, 0L)
@@ -119,7 +119,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // manifest prefix alive, so a driver-failover replay takes the
     // replace branch and re-appends the WHOLE epoch while the folded
     // shard's rows persist inside the merge — silent duplication.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_atomic").toString
+    val dir = scratchDir("graft_epoch_atomic").toString
     VariantStore.setGrace(dir, 0L)
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     def writer(pid: Int, epoch: Long, rows: Seq[(Long, Long, String)]) = {
@@ -156,7 +156,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // an UNscoped mark left by the previous query would silently drop
     // the new query's early epochs — data loss, the exact inverse of
     // the duplication the mark exists to prevent.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_fresh").toString
+    val dir = scratchDir("graft_epoch_fresh").toString
     val q1 = new StoreStreamingWrite(dir, schema, "query-1")
     q1.commit(5L, Array(epochFiles(dir, 5L, Seq((1L, 5L, "a5")), qid = "query-1")))
     VariantStore.compact(spark, dir, ddl, numRanges = 1) // mark: (query-1, 5)
@@ -199,7 +199,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // the only crash-reachable inconsistent state is lines-present +
     // stale mark. The replay must take the replace path (no
     // duplication, no skip) and repair the mark.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_crash").toString
+    val dir = scratchDir("graft_epoch_crash").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     write.commit(5L, Array(epochFiles(dir, 5L, Seq((1L, 5L, "a5")))))
     crashWindowState(dir, 6L, Seq((2L, 6L, "b6"))) // mark still says 5
@@ -221,7 +221,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // nor a mark at 6 — and APPEND the epoch a second time. Compaction
     // must leave the unconfirmed generation alone; the replay then
     // repairs it in place, after which it folds normally.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_unconf").toString
+    val dir = scratchDir("graft_epoch_unconf").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     write.commit(5L, Array(epochFiles(dir, 5L, Seq((1L, 5L, "a5"), (2L, 5L, "b5")))))
     crashWindowState(dir, 6L, Seq((3L, 6L, "c6")))
@@ -250,7 +250,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // epoch was un-compactable. Folding the group WHOLE is replay-safe:
     // the epoch high-water mark's replace branch turns a later replay
     // of the fully-folded epoch into a discard, proven at the end.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_singlegrp").toString
+    val dir = scratchDir("graft_epoch_singlegrp").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     // epoch 5: THREE task files (partitions 0..2), one committed generation
     val msgs = (0 to 2).map { p =>
@@ -292,7 +292,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // pre-r21 guard (fold-set file count >= 2) re-folded the same rows
     // on every pass — idempotent results, unbounded rewrite churn. A
     // lone group at or below numRanges files must be left alone.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_churn").toString
+    val dir = scratchDir("graft_epoch_churn").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     // epoch 5: three task files, one committed generation (fold fodder)
     val msgs = (0 to 2).map { p =>
@@ -328,7 +328,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // replace would silently drop the PREVIOUS query's epoch-0
     // generation from the manifest — data loss with no compaction
     // involved at all.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_scope").toString
+    val dir = scratchDir("graft_epoch_scope").toString
     val q1 = new StoreStreamingWrite(dir, schema, "query-1")
     q1.commit(0L, Array(epochFiles(dir, 0L, Seq((1L, 1L, "q1-e0")), qid = "query-1")))
     val before = rawRows(dir)
@@ -354,7 +354,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // EVERY event the raw row multiset across manifest-listed
     // generations must equal the write log exactly — any divergence is
     // precisely the silent loss/duplication the guards exist to stop.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_rand").toString
+    val dir = scratchDir("graft_epoch_rand").toString
     val rnd = new scala.util.Random(20260816)
     var log = Vector.empty[(Long, Long, String)]
     var qn = 1
@@ -437,16 +437,16 @@ class StoreEpochSpec extends graft.SparkSpec {
     // replay into a silent skip — permanent row loss on the clone. The
     // fork therefore drops the mark (at-least-once on resume), while a
     // full clone keeps the replay-after-fold guard armed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_snap").toString
+    val dir = scratchDir("graft_epoch_snap").toString
     VariantStore.setGrace(dir, 0L)
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     write.commit(0L, Array(epochFiles(dir, 0L, Seq((1L, 10L, "a")))))
     write.commit(1L, Array(epochFiles(dir, 1L, Seq((2L, 20L, "b")))))
-    val full = java.nio.file.Files.createTempDirectory("graft_epoch_snap_full").toString
+    val full = scratchDir("graft_epoch_snap_full").toString
     VariantStore.snapshot(dir, full)
     assert(StoreManifest.readEpochHwms(java.nio.file.Paths.get(full))
       .get("test-query").contains(1L), "full clone lost the epoch mark")
-    val fork = java.nio.file.Files.createTempDirectory("graft_epoch_snap_asof").toString
+    val fork = scratchDir("graft_epoch_snap_asof").toString
     VariantStore.snapshot(dir, fork, asOf = 10L)
     assert(StoreManifest.readEpochHwms(java.nio.file.Paths.get(fork)).isEmpty,
       "as-of fork carried a mark for an epoch it may not hold")
@@ -463,7 +463,7 @@ class StoreEpochSpec extends graft.SparkSpec {
     // The streaming twin of the batch append-in-window spec: the splice
     // drops only the fold set's manifest lines, so an epoch committed
     // between staging and splice keeps its line and rows.
-    val dir = java.nio.file.Files.createTempDirectory("graft_epoch_splice").toString
+    val dir = scratchDir("graft_epoch_splice").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     write.commit(1L, Array(epochFiles(dir, 1L, Seq((1L, 1L, "a1"), (2L, 1L, "b1")))))
     write.commit(2L, Array(epochFiles(dir, 2L, Seq((3L, 2L, "c2")))))

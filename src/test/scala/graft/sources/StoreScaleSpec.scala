@@ -43,7 +43,7 @@ class StoreScaleSpec extends graft.SparkSpec {
   }
 
   test("64-epoch ingest with compactMinor cadence: bounded files, bit-identical reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_store_scale").toString
+    val dir = scratchDir("graft_store_scale").toString
     val write = new StoreStreamingWrite(dir, schema, "test-query")
     val keep = 6
     val cadence = 8

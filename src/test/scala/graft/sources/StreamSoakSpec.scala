@@ -64,7 +64,7 @@ class StreamSoakSpec extends graft.SparkSpec {
   private def driveSoak(seed: Long, epochs: Int, canonical: Boolean): Unit = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory(s"graft_soak_$seed").toString
+    val root = scratchDir(s"graft_soak_$seed").toString
     val dir = s"$root/store"
     val chk = s"$root/chk"
     val rnd = new scala.util.Random(seed)
