@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Growth exponents across the 1x -> 10x -> 100x probe scales.
 
-Usage: scripts/century_compare.py PROBE_1x.json PROBE_10x.json PROBE_100x.json
+Usage: scripts/century_compare.py RUN_1x.json RUN_10x.json RUN_100x.json
+
+Each file is either a graft.Audit record file (`Audit <dir> @century`,
+exec1_ms/exec2_ms per record) or an older CENTURY_PROBE_*.json snapshot
+(exec1/exec2 in seconds per query).
 
 For each probed query, fits the log-log slope of exec time vs data
 scale on both steps (1->10 and 10->100) and over the whole range
@@ -17,8 +21,19 @@ import math
 import sys
 
 
+def load(path):
+    """{query: {"exec1": s, "exec2": s}} from either file format."""
+    with open(path) as f:
+        d = json.load(f)
+    if isinstance(d["queries"], dict):
+        return d
+    return {"queries": {q["query"]: {"exec1": q["exec1_ms"] / 1000,
+                                     "exec2": q["exec2_ms"] / 1000}
+                        for q in d["queries"]}}
+
+
 def main():
-    runs = [json.load(open(p)) for p in sys.argv[1:4]]
+    runs = [load(p) for p in sys.argv[1:4]]
     scales = [1.0, 10.0, 100.0]
     names = sorted(set.intersection(*(set(r["queries"]) for r in runs)))
     print("| query | exec2 1x/10x/100x (s) | step 1->10 | step 10->100 | "

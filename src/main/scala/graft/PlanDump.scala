@@ -11,21 +11,23 @@ object PlanDump {
     * up to it. */
   val MaxPlanChars = 4500
 
-  /** Renumbers expression ids (`name#123`) and `plan_id`s in order of
-    * first appearance, so references inside the plan still match; masks
-    * lambda class names with their identity hash and the content
-    * fingerprints of build-once fixture directories. */
+  /** Renumbers expression ids (`name#123`), `plan_id`s, lambda variable
+    * ids (`lambda x_8`) and RDD ids (`MapPartitionsRDD[157]`) in order
+    * of first appearance, so references inside the plan still match;
+    * masks lambda class names with their identity hash, the content
+    * fingerprints of build-once fixture directories and the unique
+    * suffix of part-file names. */
   def normalise(plan: String): String = {
-    def renumber(s: String, re: scala.util.matching.Regex, show: Int => String) = {
-      val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
-      re.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
-        show(ids.getOrElseUpdate(m.group(1), ids.size + 1))))
-    }
     val masked = plan
       .replaceAll("""\$\$Lambda[$/\w]*(@[0-9a-f]+)?""", "\\$\\$Lambda")
-      .replaceAll("""(/graft_\w*?)_[0-9a-f]{12}\b""", "$1_<fingerprint>")
-    renumber(renumber(masked, """#(\d+)""".r, i => s"#$i"),
-      """plan_id=(\d+)""".r, i => s"plan_id=$i")
+      .replaceAll("""(/graft_\w*?)_[0-9a-f]{12}(?![0-9a-zA-Z])""", "$1_<fingerprint>")
+      .replaceAll("""(part-\d{5})(-[0-9a-f]+)+""", "$1-<id>")
+    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
+        """(RDD\[)(\d+)""").foldLeft(masked) { (s, re) =>
+      val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
+      re.r.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
+        m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
   }
 
   /** `plan` whole if it fits [[MaxPlanChars]], else its lines up to it. */
@@ -93,14 +95,15 @@ object PlanDump {
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")
     sb.append(s"Generated by `PlanDump` at `$sf` (local[8], AQE on,\n")
     sb.append("GraftExtensions loaded). Regenerate: `sbt \"runMain PlanDump\"`.\n")
-    sb.append("Expression ids and `plan_id`s are renumbered per plan, lambda class\n")
-    sb.append("names and fixture fingerprints masked, so a rerun writes the same file.\n")
+    sb.append("Ids are renumbered per plan and run-specific names masked\n")
+    sb.append("(`PlanDump.normalise`), so a rerun writes the same file.\n")
+    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/") + "/graft_"
     for (name <- headline) {
       sb.append(s"\n## $name\n\n```\n")
       val df = graft.SparkEntry.queries(name)(spark, sf)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      sb.append(cut(normalise(formatted)))
+      sb.append(cut(normalise(formatted.replace(tmp, "<tmpdir>/graft_"))))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

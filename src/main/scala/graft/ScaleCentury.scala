@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Evidence tool (r17): the 100×-step probe — a sf10-equivalent corpus
-  * for the heaviest shuffle movers only, plus a targeted growth
-  * measurement main ([[CenturyProbe]]), so the 10×→100× per-family
-  * growth exponent can sit next to the decade curve in SCALE.md.
+  * for the heaviest shuffle movers only, measured by `Audit @century`,
+  * so the 10×→100× per-family growth exponent can sit next to the
+  * decade curve in SCALE.md.
   *
   * Construction = [[ScaleDecade]]'s key-offset copies with ONE
   * deliberate difference: document text is perturbed per copy (every
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * that), so unscanned tables need not scale.
   *
   *   sbt "runMain graft.ScaleCentury /root/testdata/sf0.1 /tmp/graft_c100 100"
-  *   sbt "runMain graft.CenturyProbe /tmp/graft_c100 CENTURY_100x.json"
+  *   sbt "runMain graft.Audit /tmp/graft_c100 @century"
   */
 object ScaleCentury {
 
@@ -472,59 +472,6 @@ object WidthFloorProbe {
       s""""bytes_per_sample_slot":${Gvcf.BytesPerSampleSlot},""" +
       s""""secs":${"%.1f".formatLocal(java.util.Locale.ROOT, secs)},""" +
       s""""sites":120,"result":"green"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
-    println(json)
-    spark.stop()
-  }
-}
-
-/** Times the heavy-mover queries at a given sfDir with full-width
-  * execution (`queryExecution.toRdd.count()` — Bench's `df.count()`
-  * prunes output columns, which hid the r16 wide-cohort quadratics).
-  * Each query runs twice, both timed: exec1 carries one-time costs
-  * (codegen, build-once cache construction — for q_dedup_cluster that
-  * build IS the operator), exec2 is the steady re-run. One JSON object
-  * per run; scripts/century_compare.py fits the growth exponents. */
-object CenturyProbe {
-
-  val ProbeQueries = Seq(
-    "q_sorted_write",
-    "q_dedup_exact", "q_dedup_near", "q_dedup_ngram", "q_dedup_simhash",
-    "q_dedup_cluster", "q_seq_pack", "q_combine_wide")
-
-  private def f3(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = if (args.length > 1) args(1) else "CENTURY_PROBE.json"
-    // optional explicit query list (the ShuffleAudit/SpillAudit
-    // convention) — a width-axis point only needs the wide combine, not
-    // a 200M-row sorted write sharing the host
-    val names = if (args.length > 2) args.drop(2).toSeq else ProbeQueries
-    val cpus = Tools.envCpus
-    val spark = Tools.session(cpus)
-    // warm the JIT/codegen floor off the first measured query, then
-    // cache the two tables every probe query re-scans (the Bench rule:
-    // measure the operator, not repeated cold scans of one corpus)
-    try SparkEntry.queries("q_agg_count_by_key")(spark, sfDir).count()
-    catch { case e: Throwable => System.err.println(s"WARMUP FAILED: $e") }
-    for (t <- Seq("lineitem", "documents", "orders"))
-      try api.tbl(spark, sfDir, t).cache().count()
-      catch { case e: Throwable => System.err.println(s"TABLE CACHE FAILED $t: $e") }
-    val results = names.map { name =>
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.toRdd.count()
-        ((System.nanoTime() - t0) / 1e9, rows)
-      }
-      val (e1, rows) = once()
-      val (e2, _) = once()
-      System.err.println(s"PROBE $name: exec1=${f3(e1)}s exec2=${f3(e2)}s rows=$rows")
-      s""""$name":{"exec1":${f3(e1)},"exec2":${f3(e2)},"rows":$rows}"""
-    }
-    val json = s"""{"sf":"$sfDir","cpus":$cpus,"queries":{${results.mkString(",")}}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * `sbt "runMain graft.ScaleDecade /root/testdata/sf0.1 /tmp/sf1"`
   * publishes atomically via [[api.buildOnce]] (re-runs are free), then
-  * Verify/Bench/FloorAudit/ShuffleAudit take the dest dir as sfDir.
+  * Verify/Bench/Audit take the dest dir as sfDir.
   */
 object ScaleDecade {
 
@@ -94,6 +94,58 @@ object ScaleDecade {
     val dest = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val spark = Tools.session(32)
     println(s"DECADE READY: ${build(spark, src, dest)}")
+    spark.stop()
+  }
+}
+
+/** Builder of the DUPLICATION-decade corpus — documents and embeddings
+  * replicated 10× with offset ids, each text copy carrying one extra
+  * per-copy token so the copies are NEAR duplicates (full shingle
+  * overlap, not byte-equal); every other table symlinked unchanged.
+  * This is deliberately the adversarial axis for near-dedup: corpus ×10
+  * AND every document gains 9 near-copies, so candidate-pair volume
+  * must grow quadratically in cluster size — `Audit <destDir> @dup`
+  * then measures how the bucketed pipeline absorbs it (SCALE.md r15c).
+  *
+  *   sbt "runMain graft.ScaleDup10 <srcSfDir> <destDir>"
+  */
+object ScaleDup10 {
+
+  private def buildDup10(spark: SparkSession, src: String, dest: String): Unit = {
+    val destDir = new java.io.File(dest)
+    destDir.mkdirs()
+    val tables = new java.io.File(src).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
+    for (t <- tables) {
+      val out = new java.io.File(destDir, t)
+      if (t == "documents.parquet" || t == "embeddings.parquet") {
+        val base = spark.read.parquet(s"$src/$t")
+        val idCol = if (t.startsWith("documents")) "doc_id" else "vec_id"
+        // copy stride derived from the data, not a fixed constant: a
+        // fixed 1e6 would silently collide ids once the base corpus
+        // reaches 1M rows, corrupting every id-keyed join in the audit
+        val stride = base.agg(max(col(idCol))).head.getLong(0) + 1L
+        val copies = (0 until 10).map { k =>
+          val c = base.withColumn(idCol, col(idCol) + lit(k * stride))
+          if (t.startsWith("documents") && k > 0)
+            c.withColumn("text", concat(col("text"), lit(s" copytok$k")))
+          else c
+        }
+        copies.reduce(_ unionByName _)
+          .write.mode("overwrite").parquet(out.toString)
+      } else if (!out.exists()) {
+        java.nio.file.Files.createSymbolicLink(
+          out.toPath, java.nio.file.Paths.get(s"$src/$t"))
+      }
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.ScaleDup10 <srcSfDir> <destDir>")
+    val Array(src, dest) = args
+    val spark = Tools.session(32)
+    buildDup10(spark, src, dest)
+    println(s"DUP10 READY: $dest")
     spark.stop()
   }
 }

@@ -44,10 +44,10 @@ import org.apache.spark.sql.types.LongType
   *    real 100 TB failure mode (any hot partition whose bytes compress
   *    ≫ its row count: constant keys, sorted runs, low-cardinality
   *    payloads). The salted variant needs no statistics and flattens
-  *    it anyway. (This is also why the measured action below is
-  *    rdd.count(), not count(): Dataset.count() lets Catalyst prune
-  *    every payload column, silently turning the full-payload probes
-  *    into this key-only shape.)
+  *    it anyway. (This is also why [[Audit.measure]] executes the
+  *    plan at full width, not count(): Dataset.count() lets Catalyst
+  *    prune every payload column, silently turning the full-payload
+  *    probes into this key-only shape.)
   *  - AGG groupBy(hot key) count+sum: measured to show partial
   *    aggregation alone flattens it (each task pre-collapses its hot
   *    rows to one partial row — the straggler never forms).
@@ -72,11 +72,11 @@ import org.apache.spark.sql.types.LongType
   *    right 100 TB plan as-is; rank-without-filter or large k beyond
   *    the group-limit rewrite would reopen the question.
   *
-  * Reported per run: wall sec, task count, and the straggler signal —
-  * the longest task vs the median task of ITS stage (cross-stage medians
-  * would dilute the signal with scan/reduce tasks). Output: one JSON
-  * line per run on stdout plus SKEW_AUDIT.json (snapshot before
-  * re-running).
+  * Reported per run: the [[Audit.measure]] record, whose straggler
+  * signal is the longest task vs the median task of ITS stage
+  * (cross-stage medians would dilute the signal with scan/reduce
+  * tasks). Output: one JSON line per run on stdout plus SKEW_AUDIT.json
+  * (snapshot before re-running).
   *
   * `sbt "runMain graft.SkewAudit /root/testdata/sf0.1 /tmp/graft_skew10"`
   */
@@ -120,14 +120,6 @@ object SkewAudit {
       ()
     }
   }
-
-  /** Order-independent 64-bit checksum of a full result (xor of per-row
-    * xxhash64) — how strategy pairs are proven identical. bit_xor, not
-    * sum: ANSI sum(BIGINT) raises on the overflow a 45k-row hash sum
-    * certainly hits. */
-  private[graft] def checksum(df: DataFrame): Long =
-    df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*).as("h"))
-      .agg(expr("bit_xor(h)")).head.getLong(0)
 
   private def cents(c: String) =
     expr(s"CAST(round(CAST($c AS DECIMAL(18,4)) * 100, 0) AS BIGINT)")
@@ -229,12 +221,6 @@ object SkewAudit {
     println(s"corpus: $total orders, hot key ${hot.getLong(0)} owns " +
       s"${hot.getLong(1)} rows (${hot.getLong(1) * 100 / total}%)")
 
-    val counters = Tools.counters(spark)
-
-    def run(name: String, conf: Map[String, String],
-            plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, dest, counters)(name, conf, plan)
-
     val noBcast = Map(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
@@ -247,46 +233,34 @@ object SkewAudit {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1MB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 
-    val results = Seq(
-      ("join", run("join_broadcast", Map.empty, joinBroadcastPlan)),
-      ("join", run("join_smj_noaqe", noAqe, joinShufflePlan)),
-      ("join", run("join_smj_aqe", aqeSkew, joinShufflePlan)),
-      ("join", run("join_salted", noAqe, joinSaltedPlan)),
-      ("joink", run("joink_smj_noaqe", noAqe, joinKeyOnlyShufflePlan)),
-      ("joink", run("joink_smj_aqe", aqeSkew, joinKeyOnlyShufflePlan)),
-      ("joink", run("joink_salted", noAqe, joinKeyOnlySaltedPlan)),
-      ("agg", run("agg_partial", noAqe, aggPlan)),
-      ("cd", run("cd_native", noAqe, countDistinctNative)),
-      ("cd", run("cd_rewrite", noAqe, countDistinctRewrite)),
-      ("topk", run("topk_window", noAqe, topkWindow)),
-      ("topk", run("topk_salted", noAqe, topkSalted)))
+    val results = SkewHarness.run(spark, dest, Seq(
+      ("join", "join_broadcast", Map.empty, joinBroadcastPlan),
+      ("join", "join_smj_noaqe", noAqe, joinShufflePlan),
+      ("join", "join_smj_aqe", aqeSkew, joinShufflePlan),
+      ("join", "join_salted", noAqe, joinSaltedPlan),
+      ("joink", "joink_smj_noaqe", noAqe, joinKeyOnlyShufflePlan),
+      ("joink", "joink_smj_aqe", aqeSkew, joinKeyOnlyShufflePlan),
+      ("joink", "joink_salted", noAqe, joinKeyOnlySaltedPlan),
+      ("agg", "agg_partial", noAqe, aggPlan),
+      ("cd", "cd_native", noAqe, countDistinctNative),
+      ("cd", "cd_rewrite", noAqe, countDistinctRewrite),
+      ("topk", "topk_window", noAqe, topkWindow),
+      ("topk", "topk_salted", noAqe, topkSalted)))
 
-    // every strategy group must agree on the full result
-    for ((g, rs) <- results.groupBy(_._1) if rs.map(_._2._1).distinct.size > 1)
-      throw new IllegalStateException(
-        s"CHECKSUM MISMATCH in group $g: ${rs.map(r => r._2._1)}")
-    println("CHECKSUMS OK: all strategy groups agree")
-
-    java.nio.file.Files.write(java.nio.file.Paths.get("SKEW_AUDIT.json"),
-      (s"""{"sf":"$dest","total_orders":$total,""" +
-        s""""hot_key_rows":${hot.getLong(1)},"runs":[\n""" +
-        results.map(_._2._2).mkString(",\n") + "\n]}\n").getBytes("UTF-8"))
+    Audit.write(java.nio.file.Paths.get("SKEW_AUDIT.json"),
+      s""""sf":"$dest","total_orders":$total,"hot_key_rows":${hot.getLong(1)}""", results)
     spark.stop()
   }
 }
 
-/** ONE measurement harness for both skew audits ([[SkewAudit]] at the
-  * decade, [[SkewCentury]] at 100×) — the r18 review found the two
-  * inlined copies had already drifted (SkewCentury overrode
-  * `skewedPartitionFactor` but its copied restore map did not contain
-  * the key, leaking the override into later runs). Per probe: warm run
-  * (codegen + parquet footers), timed `rdd.count()` (NOT
-  * Dataset.count(), which prunes payload columns and collapses every
-  * probe into the key-only shape), order-independent checksum, and the
-  * straggler signal — the WORST max/median task ratio over parallel
-  * stages (≥8 tasks; tiny reduce stages are trivially balanced and scan
-  * stages would dilute a shuffle straggler). Every conf key any variant
-  * may touch is in [[Defaults]] and restored after each run. */
+/** The conf set/restore and checksum gate of both skew audits
+  * ([[SkewAudit]] at the decade, [[SkewCentury]] at 100×) — the r18
+  * review found the two inlined copies had already drifted (SkewCentury
+  * overrode `skewedPartitionFactor` but its copied restore map did not
+  * contain the key, leaking the override into later runs). Each probe
+  * is one [[Audit.measure]] under its confs; every conf key any variant
+  * may touch is in [[Defaults]] and restored after each run, and every
+  * strategy group must agree on the checksum. */
 private[graft] object SkewHarness {
 
   /** Session defaults restored after every probe — the superset of all
@@ -301,39 +275,20 @@ private[graft] object SkewHarness {
     "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")
 
-  private def f3(v: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-
+  /** Measures each (group, name, confs, plan) probe over `dest`; throws
+    * if a probe failed or a group's checksums differ. */
   def run(spark: SparkSession, dest: String,
-      counters: Tools.Counters)(
-      name: String, conf: Map[String, String],
-      plan: (SparkSession, String) => DataFrame): (Long, String) = {
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      plan(spark, dest).rdd.count() // warm: codegen + parquet footers
-      counters.drain()
-      val t0 = System.nanoTime()
-      val n = plan(spark, dest).rdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val tasks = counters.drain().taskDurations
-      val sum = SkewAudit.checksum(plan(spark, dest))
-      val byStage = tasks.groupBy(_._1).values
-        .map(_.map(_._2).sorted).filter(_.size >= 8)
-      val stageMs =
-        if (byStage.nonEmpty)
-          byStage.maxBy(ms => ms.last.toDouble / math.max(1L, ms(ms.size / 2)))
-        else tasks.map(_._2).sorted
-      val maxMs = stageMs.last
-      val p50 = stageMs(stageMs.size / 2)
-      val ratio = maxMs.toDouble / math.max(1L, p50)
-      val line =
-        s"""{"run":"$name","sec":${f3(sec)},"rows":$n,""" +
-          s""""tasks":${tasks.size},"stage_tasks":${stageMs.size},""" +
-          s""""max_task_ms":$maxMs,"stage_p50_ms":$p50,""" +
-          s""""straggler_ratio":${f3(ratio)}}"""
-      println(line)
-      (sum, line)
-    } finally Defaults.foreach { case (k, v) => spark.conf.set(k, v) }
+      probes: Seq[(String, String, Map[String, String], (SparkSession, String) => DataFrame)])
+      : Seq[Audit.Record] = {
+    val records = Audit.runAll(spark, Defaults)(probes.map {
+      case (_, name, conf, plan) => (name, conf, () => plan(spark, dest))
+    }).map(_.get)
+    for ((g, rs) <- probes.map(_._1).zip(records).groupBy(_._1)
+        if rs.map(_._2.checksum).distinct.size > 1)
+      throw new IllegalStateException(
+        s"CHECKSUM MISMATCH in group $g: ${rs.map(_._2.checksum)}")
+    println("CHECKSUMS OK: all strategy groups agree")
+    records
   }
 }
 
@@ -440,12 +395,6 @@ object SkewCentury {
     println(s"corpus: $total events, hot user ${hot.getLong(0)} owns " +
       s"${hot.getLong(1)} rows (${hot.getLong(1) * 100 / total}%)")
 
-    val counters = Tools.counters(spark)
-
-    def run(name: String, conf: Map[String, String],
-            plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, dest, counters)(name, conf, plan)
-
     def shipped(name: String): (SparkSession, String) => DataFrame =
       (s, d) => SparkEntry.queries(name)(s, d)
 
@@ -467,36 +416,28 @@ object SkewCentury {
     // since r19 the SHIPPED q_sessionize / q_ewma / q_window_running run
     // the skew-immune rewrites; each group pairs the shipped plan with
     // the retired naive window so the probe keeps measuring both sides
-    val results = Seq(
-      ("sessionize", run("q_sessionize", Map.empty, shipped("q_sessionize"))),
-      ("sessionize", run("sessionize_plain", Map.empty,
-        (s, d) => graft.ops.Pipeline.sessionizePlain(api.tbl(s, d, "events")))),
-      ("wrunning", run("q_window_running", Map.empty, shipped("q_window_running"))),
-      ("rmedian", run("q_rolling_median", Map.empty, shipped("q_rolling_median"))),
+    val results = SkewHarness.run(spark, dest, Seq(
+      ("sessionize", "q_sessionize", Map.empty, shipped("q_sessionize")),
+      ("sessionize", "sessionize_plain", Map.empty,
+        (s, d) => graft.ops.Pipeline.sessionizePlain(api.tbl(s, d, "events"))),
+      ("wrunning", "q_window_running", Map.empty, shipped("q_window_running")),
+      ("rmedian", "q_rolling_median", Map.empty, shipped("q_rolling_median")),
       // the retired bare-event_type frame window (r20 rewrite pair) —
       // the group checksum doubles as a 10M-row equality proof
-      ("rmedian", run("rmedian_plain", Map.empty,
+      ("rmedian", "rmedian_plain", Map.empty,
         (s, d) => graft.ops.Extras.rollingMedianReported(
-          graft.ops.Extras.rollingMedianPlain(api.tbl(s, d, "events"))))),
-      ("ewma", run("q_ewma", Map.empty, shipped("q_ewma"))),
-      ("ewma", run("ewma_plain", Map.empty,
-        (s, d) => graft.ops.Extras.ewmaOf(api.tbl(s, d, "events")))),
-      ("running", run("running_plain", Map.empty, runningPlain)),
-      ("running", run("running_twostage", Map.empty, runningTwoStage)),
-      ("join", run("join_smj_noaqe", noAqe, SkewAudit.joinShufflePlan)),
-      ("join", run("join_smj_aqe", aqeSkew, SkewAudit.joinShufflePlan)),
-      ("join", run("join_salted", noAqe, SkewAudit.joinSaltedPlan)))
+          graft.ops.Extras.rollingMedianPlain(api.tbl(s, d, "events")))),
+      ("ewma", "q_ewma", Map.empty, shipped("q_ewma")),
+      ("ewma", "ewma_plain", Map.empty,
+        (s, d) => graft.ops.Extras.ewmaOf(api.tbl(s, d, "events"))),
+      ("running", "running_plain", Map.empty, runningPlain),
+      ("running", "running_twostage", Map.empty, runningTwoStage),
+      ("join", "join_smj_noaqe", noAqe, SkewAudit.joinShufflePlan),
+      ("join", "join_smj_aqe", aqeSkew, SkewAudit.joinShufflePlan),
+      ("join", "join_salted", noAqe, SkewAudit.joinSaltedPlan)))
 
-    // strategy groups with >1 member must agree on the full result
-    for ((g, rs) <- results.groupBy(_._1) if rs.map(_._2._1).distinct.size > 1)
-      throw new IllegalStateException(
-        s"CHECKSUM MISMATCH in group $g: ${rs.map(r => r._2._1)}")
-    println("CHECKSUMS OK: all strategy groups agree")
-
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (s"""{"sf":"$dest","total_events":$total,""" +
-        s""""hot_user_rows":${hot.getLong(1)},"runs":[\n""" +
-        results.map(_._2._2).mkString(",\n") + "\n]}\n").getBytes("UTF-8"))
+    Audit.write(java.nio.file.Paths.get(out),
+      s""""sf":"$dest","total_events":$total,"hot_user_rows":${hot.getLong(1)}""", results)
     spark.stop()
   }
 }
@@ -568,9 +509,6 @@ object GvcfSkew {
     val out = args.headOption.getOrElse("SKEW_AUDIT_GVCF.json")
     val spark = Tools.session(Tools.envCpus)
     val (nSamples, nPositions, nContigs) = (3000L, 12000L, 20)
-    val counters = Tools.counters(spark)
-    def run(name: String, plan: (SparkSession, String) => DataFrame): (Long, String) =
-      SkewHarness.run(spark, "", counters)(name, Map.empty, plan)
     def cohort(hotTenths: Int) =
       skewCohort(spark, nSamples, nPositions, nContigs, hotTenths)
     // sanity: the hot corpus really concentrates half the sites
@@ -581,17 +519,17 @@ object GvcfSkew {
     // samples, so distinct site POSITIONS ≈ all nPositions — not 2/3
     println(s"hot contig ${hotShare.getString(0)} owns ${hotShare.getLong(1)} " +
       s"of $nPositions site positions")
-    val results = Seq(
-      ("combine", run("combine_long_uniform", (s, _) => Gvcf.combineLong(cohort(0)))),
-      ("combine", run("combine_long_hot", (s, _) => Gvcf.combineLong(cohort(5)))),
-      ("genotype", run("genotype_long_uniform",
-        (s, _) => Gvcf.genotypeLong(Gvcf.withPl(cohort(0))))),
-      ("genotype", run("genotype_long_hot",
-        (s, _) => Gvcf.genotypeLong(Gvcf.withPl(cohort(5))))))
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (s"""{"samples":$nSamples,"positions":$nPositions,"contigs":$nContigs,""" +
-        s""""hot_contig_sites":${hotShare.getLong(1)},"runs":[\n""" +
-        results.map(_._2._2).mkString(",\n") + "\n]}\n").getBytes("UTF-8"))
+    // uniform and hot are different corpora: no checksum group
+    val results = Audit.runAll(spark)(Seq(
+      ("combine_long_uniform", Map.empty, () => Gvcf.combineLong(cohort(0))),
+      ("combine_long_hot", Map.empty, () => Gvcf.combineLong(cohort(5))),
+      ("genotype_long_uniform", Map.empty,
+        () => Gvcf.genotypeLong(Gvcf.withPl(cohort(0)))),
+      ("genotype_long_hot", Map.empty,
+        () => Gvcf.genotypeLong(Gvcf.withPl(cohort(5)))))).map(_.get)
+    Audit.write(java.nio.file.Paths.get(out),
+      s""""samples":$nSamples,"positions":$nPositions,"contigs":$nContigs,""" +
+        s""""hot_contig_sites":${hotShare.getLong(1)}""", results)
     spark.stop()
   }
 }

@@ -69,6 +69,12 @@ class ToolsSpec extends SparkSpec {
       s"build tool sessions with graft.Tools.session: $files")
   }
 
+  test("Tools.counters appears only in Audit: one measurement loop") {
+    val files = uses("Tools.counters(").map(_._1).distinct
+    assert(files == Seq("Audit.scala"),
+      s"measure through graft.Audit.measure / runAll: $files")
+  }
+
   test("Thread.sleep appears only in the buildOnce heal-wait") {
     val sleeps = uses("Thread.sleep")
     assert(sleeps == Seq(("api.scala", "Thread.sleep(100); waited += 100")),
