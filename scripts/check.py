@@ -150,7 +150,7 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         # testdata ships single-file parquet; synthesized corpora
-        # (ScaleDecade, dup10) are Spark directory layout — glob those
+        # (`graft.Corpus decade`, `dup10`, ...) are Spark directory layout — glob those
         p = f"{sf}/{t}.parquet"
         src = f"'{p}/*.parquet'" if os.path.isdir(p) else f"'{p}'"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet({src})")

@@ -40,7 +40,7 @@ object Audit {
       "q_sessionize", "q_window_sliding", "q_pagerank", "q_graph_reach",
       "q_triangle_count", "q_bm25", "q_tfidf", "q_kmeans_iter",
       "q_heavy_hitters", "q_quantile_sketch"),
-    // the queries over the two tables `ScaleDup10` scales
+    // the queries over the two tables `Corpus.dup10` scales
     "dup" -> Seq("q_dedup_exact", "q_dedup_near", "q_dedup_ngram",
       "q_dedup_simhash", "q_dedup_embed", "q_decontaminate",
       "q_similarity_topk", "q_ann_ivf", "q_knn_classify", "q_feature_hash",

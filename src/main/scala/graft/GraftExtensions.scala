@@ -60,20 +60,24 @@ object GraftExtensions {
     }))
 
   /** Imperative registration for sessions built without the extension
-    * config (e.g. the driver's own smoke session). Idempotent, and
-    * registers the SAME surface as the extension path: functions, the
-    * optimizer rule, AND the range-join planner strategy. */
+    * config (e.g. the shared test session). Registers the SAME
+    * surface as the extension path: functions, the optimizer rule, AND
+    * the range-join planner strategy. A no-op on a session that already
+    * has every function (a registered or an extension session), so a
+    * query builder may call it on every build. */
   def register(spark: SparkSession): Unit = {
-    builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    val registry = spark.sessionState.functionRegistry
+    if (!builders.forall(b => registry.functionExists(FunctionIdentifier(b._1)))) {
+      builders.foreach { case (name, _, builder) =>
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+      }
+      if (!spark.experimental.extraOptimizations.contains(SelfDotToNorm))
+        spark.experimental.extraOptimizations =
+          spark.experimental.extraOptimizations :+ SelfDotToNorm
+      val strat = graft.plans.RangeJoinStrategy(spark)
+      if (!spark.experimental.extraStrategies.contains(strat))
+        spark.experimental.extraStrategies =
+          spark.experimental.extraStrategies :+ strat
     }
-    if (!spark.experimental.extraOptimizations.contains(SelfDotToNorm))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SelfDotToNorm
-    val strat = graft.plans.RangeJoinStrategy(spark)
-    if (!spark.experimental.extraStrategies.contains(strat))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ strat
   }
 }

@@ -1,88 +1,43 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** r20 robustness probe: plant NULLs in every nullable column of the
-  * events and documents tables (four columns per table, each NULLing
-  * its own ~1% hash-residue slice — ~4% of rows carry one NULL) and
-  * run EVERY SparkEntry query to completion. The
-  * assertable 100 TB property is CRASH-FREEDOM — a poison record in a
-  * petabyte corpus must degrade a result (NULL out, filter away,
-  * group separately), never kill the pipeline — value semantics under
-  * NULLs are pinned separately where defined (SkewSpec/OperatorSpec,
-  * SCALE.md r20e–g). Findings drive fixes; the probe ships as the
-  * regression harness for the class.
+/** r20 robustness probe: run EVERY SparkEntry query to completion over
+  * [[Corpus.nullPoison]] (four nullable columns each of events and
+  * documents NULLed on their own ~1% hash-residue slice). The assertable
+  * 100 TB property is CRASH-FREEDOM — a poison record in a petabyte
+  * corpus must degrade a result (NULL out, filter away, group
+  * separately), never kill the pipeline — value semantics under NULLs
+  * are pinned separately where defined (SkewSpec/OperatorSpec, SCALE.md
+  * r20e–g).
   *
   *   sbt "runMain graft.NullProbe /root/testdata/sf0.001 NULL_PROBE.json"
-  */
+  *
+  * The poisoned copy lives in `java.io.tmpdir`, keyed by the source path
+  * and the content of the poisoned tables, and is built once. The
+  * queries run through [[Audit.audit]] (full-width digest of every
+  * output value), minus `$SPARK_GRAFT_SKIP` (Bench's contract: at the
+  * decade the wide trio is O(sf²) by contract, SCALE.md r15f). The
+  * records go to the output file; the run exits 1 if any query threw. */
 object NullProbe {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "NULL_PROBE.json"
-    val dest = "/tmp/graft_nullprobe"
-    val spark = Tools.session(8, logLevel = "ERROR")
-    val dir = new java.io.File(dest)
-    org.apache.commons.io.FileUtils.deleteDirectory(dir); dir.mkdirs()
-    val srcFiles = new java.io.File(src).listFiles()
-    require(srcFiles != null, s"source corpus not found: $src")
-    val tables = srcFiles
-      .filter(_.getName.endsWith(".parquet")).map(_.getName.stripSuffix(".parquet"))
-    for (t <- tables if t != "events" && t != "documents")
-      java.nio.file.Files.createSymbolicLink(
-        java.nio.file.Paths.get(s"$dest/$t.parquet"),
-        java.nio.file.Paths.get(s"$src/$t.parquet"))
-    // poison IN PLACE: every other column of the table rides through
-    // untouched (the first probe cut dropped events.props and flagged
-    // three analysis errors that were probe bugs, not engine bugs)
-    def poisoned(df: org.apache.spark.sql.DataFrame, key: String,
-        targets: Map[String, Long]): org.apache.spark.sql.DataFrame =
-      targets.foldLeft(df) { case (d, (c, r)) =>
-        d.withColumn(c,
-          when(pmod(xxhash64(col(key)), lit(97)) === r, lit(null)).otherwise(col(c)))
-      }
-    poisoned(graft.api.tbl(spark, src, "events"), "event_id",
-      Map("ts" -> 3L, "user_id" -> 13L, "event_type" -> 23L, "value" -> 33L))
-      .write.parquet(s"$dest/events.parquet")
-    poisoned(graft.api.tbl(spark, src, "documents"), "doc_id",
-      Map("text" -> 5L, "lang" -> 15L, "source" -> 25L, "n_chars" -> 35L))
-      .write.parquet(s"$dest/documents.parquet")
-    var pass = 0
-    val failures = Seq.newBuilder[(String, String)]
-    // SPARK_GRAFT_SKIP: same contract as Bench — at the decade corpus
-    // the wide trio's dense site × sample matrix is O(sf²) by contract
-    // (SCALE.md r15f) and would dominate the probe without informing
-    // the crash-freedom property. Skips are logged and visible in the
-    // JSON's query count.
+    val fp = Corpus.nullPoison.tables.keys.toSeq.sorted
+      .map(t => api.contentFingerprint(s"$src/$t.parquet")).mkString("_")
+    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_nullprobe_" +
+      s"${src.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
     val skip = sys.env.get("SPARK_GRAFT_SKIP")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     for (s <- skip.toSeq.sorted)
       System.err.println(s"SKIPPED (SPARK_GRAFT_SKIP): $s")
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
-        if !skip.contains(name)) {
-      try { fn(spark, dest).collect(); pass += 1 }
-      catch { case e: Throwable =>
-        val root = { var c: Throwable = e; while (c.getCause != null) c = c.getCause; c }
-        failures += name -> root.toString.linesIterator.next().take(200)
-      }
-    }
-    val fails = failures.result()
-    println(s"NULLPROBE pass=$pass fail=${fails.size}")
-    fails.foreach { case (n, m) => println(s"FAIL $n: $m") }
-    // full JSON string escaping (r20 review): exception messages carry
-    // tabs/newlines and paths can carry quotes — a strict parser must
-    // be able to read the artifact exactly on the runs that report fails
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    } + "\""
-    val json = s"""{"src":${jstr(src)},"poison_mod":97,"queries":${pass + fails.size},""" +
-      s""""pass":$pass,"fail":${fails.size},"failures":[""" +
-      fails.map { case (n, m) => s"""{"q":${jstr(n)},"err":${jstr(m)}}""" }
-        .mkString(",") + "]}"
-    java.nio.file.Files.write(java.nio.file.Paths.get(out), (json + "\n").getBytes("UTF-8"))
-    spark.stop()
+    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(skip)
+    val spark = Tools.session(8, logLevel = "ERROR")
+    val failures =
+      try Audit.audit(spark, Corpus.build(spark, src, dest, Corpus.nullPoison), names,
+        None, java.nio.file.Paths.get(out))
+      finally spark.stop()
+    println(s"NULLPROBE pass=${names.size - failures.size} fail=${failures.size}")
+    failures.foreach(f => println(s"FAIL $f"))
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

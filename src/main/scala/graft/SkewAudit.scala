@@ -14,13 +14,10 @@ import org.apache.spark.sql.types.LongType
   * on plan reading plus uniform-corpus runs of the salted demos; this
   * tool backs them with a straggler signal measured under real skew.
   *
-  * Corpus (`buildSkew10`, published via [[api.buildOnce]]): orders ×10
-  * with offset o_orderkey (unique) but o_custkey kept in the BASE range
-  * (the dims are not copied, so FKs stay clean), then 30% of all rows —
-  * chosen by a deterministic hash of the pre-offset key — reassigned to
-  * ONE hot customer. At the sf0.1 source that is ~450k of 1.5M orders on
-  * a single join/agg key, against a ~33k-row median hash partition: the
-  * shape AQE's skewedPartitionFactor=5 default is written for.
+  * Corpus [[Corpus.skew10]] (30% of orders ×10 on ONE hot customer): at
+  * the sf0.1 source ~450k of 1.5M orders on a single join/agg key,
+  * against a ~33k-row median hash partition: the shape AQE's
+  * skewedPartitionFactor=5 default is written for.
   *
   * Probes (every strategy pair is checksum-compared — identical logical
   * results, different physical distributions — before timings count):
@@ -82,44 +79,7 @@ import org.apache.spark.sql.types.LongType
   */
 object SkewAudit {
 
-  private val Copies = 10
-  private val HotTenths = 3 // 30% of rows on the hot key
   private val NSalt = 8
-
-  /** orders ×10 (offset o_orderkey, base-range o_custkey), 30% of rows
-    * hot — chosen by a hash of the BASE (pre-offset) key, so copies of
-    * the same source row are hot-correlated; every other table
-    * symlinked. ([[SkewCentury.buildSkewCentury]] deliberately differs:
-    * it hashes the POST-offset key, i.i.d. across copies.) */
-  def buildSkew10(spark: SparkSession, src: String, dest: String): String = {
-    val copies = Copies
-    val hotTenths = HotTenths
-    api.buildOnce(dest, Some("_SKEW_READY")) { tmp =>
-      val base = api.tbl(spark, src, "orders")
-      val stride = base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L
-      val hotKey = base.agg(min(col("o_custkey"))).head.getLong(0)
-      val copiesDf = (0 until copies).map { k =>
-        base.withColumn("o_orderkey", col("o_orderkey") + lit(k * stride))
-      }
-      copiesDf.reduce(_ unionByName _)
-        .withColumn("o_custkey",
-          when(pmod(xxhash64(pmod(col("o_orderkey"), lit(stride))), lit(10))
-            .lt(lit(hotTenths)), lit(hotKey))
-            .otherwise(col("o_custkey")))
-        .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-      val tables = new java.io.File(src).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
-      for (t <- tables; if t != "orders.parquet")
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(s"$tmp/$t"),
-          java.nio.file.Paths.get(s"$src/$t"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/_SKEW_READY"),
-        s"src=$src copies=$copies hotTenths=$hotTenths hotKey=$hotKey\n"
-          .getBytes("UTF-8"))
-      ()
-    }
-  }
 
   private def cents(c: String) =
     expr(s"CAST(round(CAST($c AS DECIMAL(18,4)) * 100, 0) AS BIGINT)")
@@ -213,7 +173,7 @@ object SkewAudit {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_skew10"
     val spark = Tools.session(32)
-    buildSkew10(spark, src, dest)
+    Corpus.build(spark, src, dest, Corpus.skew10)
     val o = ordersSlim(spark, dest)
     val total = o.count()
     val hot = o.groupBy("o_custkey").count()
@@ -221,10 +181,7 @@ object SkewAudit {
     println(s"corpus: $total orders, hot key ${hot.getLong(0)} owns " +
       s"${hot.getLong(1)} rows (${hot.getLong(1) * 100 / total}%)")
 
-    val noBcast = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val noAqe = noBcast + ("spark.sql.adaptive.enabled" -> "false")
+    import SkewHarness.{noAqe, noBcast}
     // the demo's hot partition is ~7 MB; production defaults (256 MB
     // threshold, factor 5) target multi-GB partitions — scale the
     // thresholds to the fixture, keep the factor at its default
@@ -275,6 +232,14 @@ private[graft] object SkewHarness {
     "spark.sql.autoBroadcastJoinThreshold" -> "10MB",
     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB")
 
+  /** Broadcast joins off, so a join shuffles on its key. */
+  val noBcast = Map(
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
+
+  /** [[noBcast]] with AQE off: no runtime skew split or re-plan. */
+  val noAqe = noBcast + ("spark.sql.adaptive.enabled" -> "false")
+
   /** Measures each (group, name, confs, plan) probe over `dest`; throws
     * if a probe failed or a group's checksums differ. */
   def run(spark: SparkSession, dest: String,
@@ -300,15 +265,10 @@ private[graft] object SkewHarness {
   * one task). A hot key under a window operator SERIALIZES by
   * construction; the fix is an operator rewrite, not a runtime knob.
   *
-  * Corpus (`buildSkewCentury`): events ×100 with offset event_id,
-  * user_id in the base range, then 10% of ALL rows — hash-chosen by
-  * post-offset event_id — reassigned to ONE hot user (≈1M of 10M rows
-  * at the sf0.1 source, vs ~6.7k rows for a median user); orders gets
-  * the same copy-offset + hot-reassignment SHAPE (hot rows chosen by a
-  * POST-offset key hash — i.i.d. across copies, unlike
-  * [[SkewAudit.buildSkew10]]'s base-key choice, which hot-correlates
-  * copies of the same source row) at the same 100 copies /
-  * 10% heat for the join control at this scale.
+  * Corpus [[Corpus.skewCentury]] (events and orders ×100, 10% of rows
+  * on ONE hot user / customer): ≈1M of 10M events on the hot user at
+  * the sf0.1 source, vs ~6.7k rows for a median user; orders is the
+  * join control at this scale.
   *
   * Probes:
   *  - the four window movers (q_sessionize, q_window_running,
@@ -333,46 +293,6 @@ private[graft] object SkewHarness {
   */
 object SkewCentury {
 
-  private val Copies = 100
-  private val HotTenths = 1 // 10% of events on the hot user
-
-  def buildSkewCentury(spark: SparkSession, src: String, dest: String,
-      copies: Int = Copies): String =
-    api.buildOnce(dest, Some("_SKEWC_READY")) { tmp =>
-      val ev = api.tbl(spark, src, "events")
-      val stride = ev.agg(max(col("event_id"))).head.getLong(0) + 1L
-      val hotUser = ev.agg(min(col("user_id"))).head.getLong(0)
-      (0 until copies).map { k =>
-        ev.withColumn("event_id", col("event_id") + lit(k * stride))
-      }.reduce(_ unionByName _)
-        .withColumn("user_id",
-          when(pmod(xxhash64(col("event_id")), lit(10)).lt(lit(HotTenths)),
-            lit(hotUser)).otherwise(col("user_id")))
-        .write.mode("overwrite").parquet(s"$tmp/events.parquet")
-      // orders at the same copy count / heat for the join control
-      val base = api.tbl(spark, src, "orders")
-      val ostride = base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L
-      val hotCust = base.agg(min(col("o_custkey"))).head.getLong(0)
-      (0 until copies).map { k =>
-        base.withColumn("o_orderkey", col("o_orderkey") + lit(k * ostride))
-      }.reduce(_ unionByName _)
-        .withColumn("o_custkey",
-          when(pmod(xxhash64(col("o_orderkey")), lit(10)).lt(lit(HotTenths)),
-            lit(hotCust)).otherwise(col("o_custkey")))
-        .write.mode("overwrite").parquet(s"$tmp/orders.parquet")
-      val tables = new java.io.File(src).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
-      for (t <- tables; if t != "events.parquet" && t != "orders.parquet")
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(s"$tmp/$t"),
-          java.nio.file.Paths.get(s"$src/$t"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/_SKEWC_READY"),
-        s"src=$src copies=$copies hotTenths=$HotTenths hotUser=$hotUser\n"
-          .getBytes("UTF-8"))
-      ()
-    }
-
   /** The q_window_running cores WITHOUT the presentation limit (the
     * probe must execute — and checksum — the full window output). Thin
     * wrappers over the single ops implementations (r18 lesson:
@@ -388,7 +308,7 @@ object SkewCentury {
     val dest = if (args.length > 1) args(1) else "/tmp/graft_skewc100"
     val out = if (args.length > 2) args(2) else "SKEW_AUDIT_CENTURY.json"
     val spark = Tools.session(32)
-    buildSkewCentury(spark, src, dest)
+    Corpus.build(spark, src, dest, Corpus.skewCentury(100))
     val ev = api.tbl(spark, dest, "events")
     val total = ev.count()
     val hot = ev.groupBy("user_id").count().orderBy(col("count").desc).head
@@ -398,10 +318,7 @@ object SkewCentury {
     def shipped(name: String): (SparkSession, String) => DataFrame =
       (s, d) => SparkEntry.queries(name)(s, d)
 
-    val noBcast = Map(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val noAqe = noBcast + ("spark.sql.adaptive.enabled" -> "false")
+    import SkewHarness.{noAqe, noBcast}
     // skewedPartitionFactor 2 (default 5): the fixture's hot partition
     // is ~3× the median — cluster-real skew at this corpus size — while
     // the 5× default targets pathological partitions; thresholds scaled

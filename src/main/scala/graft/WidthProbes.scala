@@ -1,93 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Evidence tool (r17): the 100×-step probe — a sf10-equivalent corpus
-  * for the heaviest shuffle movers only, measured by `Audit @century`,
-  * so the 10×→100× per-family growth exponent can sit next to the
-  * decade curve in SCALE.md.
-  *
-  * Construction = [[ScaleDecade]]'s key-offset copies with ONE
-  * deliberate difference: document text is perturbed per copy (every
-  * token gets a copy-unique suffix, `n_chars` recomputed), so
-  * cross-copy documents are neither exact nor near duplicates.
-  * Duplication DENSITY therefore stays at the sf0.1 level while the
-  * corpus grows — the decade's byte-identical twins are right for its
-  * job (oracle-exact compare on a duplication-rich corpus) but would
-  * make a 100-copy dedup measurement quantify duplication richness
-  * (pair expansion grows with copies² inside each LSH bucket), not
-  * corpus scale. Run the SAME builder at copies=10 for a
-  * density-constant 10× point and the 1×→10×→100× exponents are
-  * apples-to-apples.
-  *
-  * Only the probe's input tables are copied (lineitem, orders,
-  * documents, embeddings); the rest symlink to the source — the probe
-  * is a perf instrument, not a correctness gate (the decade drive owns
-  * that), so unscanned tables need not scale.
-  *
-  *   sbt "runMain graft.ScaleCentury /root/testdata/sf0.1 /tmp/graft_c100 100"
-  *   sbt "runMain graft.Audit /tmp/graft_c100 @century"
-  */
-object ScaleCentury {
-
-  private val keyParents: Map[String, (String, String)] = Map(
-    "o_custkey" -> ("customer", "c_custkey"),
-    "o_orderkey" -> ("orders", "o_orderkey"),
-    "l_orderkey" -> ("orders", "o_orderkey"),
-    "l_partkey" -> ("part", "p_partkey"),
-    "l_suppkey" -> ("supplier", "s_suppkey"),
-    "doc_id" -> ("docvec", ""),
-    "vec_id" -> ("docvec", ""))
-
-  private val factTables = Seq("orders", "lineitem", "documents", "embeddings")
-
-  def build(spark: SparkSession, src: String, dest: String, copies: Int): String =
-    api.buildOnce(dest, Some("_CENTURY_READY")) { tmp =>
-      def maxKey(table: String, col0: String): Long =
-        api.tbl(spark, src, table).agg(max(expr(s"cast($col0 as bigint)"))).head.getLong(0)
-      val docvecStride = math.max(
-        maxKey("documents", "doc_id"), maxKey("embeddings", "vec_id")) + 1L
-      val stride: Map[String, Long] = keyParents.map {
-        case (k, ("docvec", _)) => k -> docvecStride
-        case (k, (t, c)) => k -> (maxKey(t, c) + 1L)
-      }
-      for (t <- Seq("region", "nation", "customer", "supplier", "part", "events"))
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(s"$tmp/$t.parquet"),
-          java.nio.file.Paths.get(s"$src/$t.parquet"))
-      for (t <- factTables) {
-        val base = api.tbl(spark, src, t)
-        val keys = base.columns.filter(keyParents.contains)
-        val copiesDf = (0 until copies).map { k =>
-          val keyed = keys.foldLeft(base) { (df, c) =>
-            df.withColumn(c, col(c) + lit(k * stride(c)))
-          }
-          if (t == "documents" && k > 0)
-            keyed
-              .withColumn("text", array_join(
-                transform(split(col("text"), " "), w => concat(w, lit(s"_$k"))), " "))
-              .withColumn("n_chars", length(col("text")).cast("long"))
-          else keyed
-        }
-        copiesDf.reduce(_ unionByName _)
-          .write.mode("overwrite").parquet(s"$tmp/$t.parquet")
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$tmp/_CENTURY_READY"),
-        s"src=$src copies=$copies perturbed=documents\n".getBytes("UTF-8"))
-      ()
-    }
-
-  def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val dest = if (args.length > 1) args(1) else "/tmp/graft_c100"
-    val copies = if (args.length > 2) args(2).toInt else 100
-    val spark = Tools.session(32)
-    println(s"CENTURY READY: ${build(spark, src, dest, copies)}")
-    spark.stop()
-  }
-}
 
 /** r18 evidence main: drive [[graft.ops.Gvcf.combineAuto]] at a corpus
   * whose derived cohort width (|orders|/50) exceeds the dense admission

@@ -4,16 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Core API surface shared by all operator modules.
-  *
-  * Design notes (SURVEY.md §1.3, §4.3):
-  *   - Every query is declarative DataFrame code — Catalyst pushes filters
-  *     and projections to the parquet scan, picks join strategies, and AQE
-  *     re-plans at runtime. No RDDs, no driver-side loops.
-  *   - Determinism contract (SURVEY.md §2): exact DECIMAL arithmetic for
-  *     aggregates over money doubles, `round(x, 6)` for unavoidable float
-  *     math, and a total ORDER BY on every result.
-  */
 /** Test seam for the write-path audit: every entry into a
   * persistent-scratch choke point — [[api.buildOnce]] (hit or miss),
   * the store manifest (the ONLY read/write surface of a
@@ -28,6 +18,16 @@ private[graft] object ScratchObserver {
   private[graft] def count: Long = counter.get
 }
 
+/** Core API surface shared by all operator modules.
+  *
+  * Design notes (SURVEY.md §1.3, §4.3):
+  *   - Every query is declarative DataFrame code — Catalyst pushes filters
+  *     and projections to the parquet scan, picks join strategies, and AQE
+  *     re-plans at runtime. No RDDs, no loops over collected rows.
+  *   - Determinism contract (SURVEY.md §2): exact DECIMAL arithmetic for
+  *     aggregates over money doubles, `round(x, 6)` for unavoidable float
+  *     math, and a total ORDER BY on every result.
+  */
 object api {
 
   /** A declared operator: name, DataFrame program, optional DuckDB oracle. */

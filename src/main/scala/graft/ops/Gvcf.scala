@@ -71,12 +71,6 @@ object Gvcf {
     merged.unionByName(variants.filter(col("kind") === "site"))
   }
 
-  /** A4+A6 — dense combine at every variant site: for each (contig, pos)
-    * with at least one site record, emit each sample's state there
-    * (its site alleles, or the spanning block's alleles), plus the dense
-    * ordered per-sample summary. The interval join is bucketed on the
-    * same stride grid as the storage layout, so it is an equi-join +
-    * residual — never a nested-loop join (SURVEY §4.2). */
   /** Shared bucketed site-coverage join (A6 grid): one row per
     * (site, covering record). PRECONDITION (a gVCF file invariant): a
     * sample's records do not overlap each other — exactly one covering
@@ -101,6 +95,12 @@ object Gvcf {
       .filter(col("pos") >= col("start") && col("pos") <= col("end"))
   }
 
+  /** A4+A6 — dense combine at every variant site: for each (contig, pos)
+    * with at least one site record, emit each sample's state there
+    * (its site alleles, or the spanning block's alleles), plus the dense
+    * ordered per-sample summary. The interval join is bucketed on the
+    * same stride grid as the storage layout, so it is an equi-join +
+    * residual — never a nested-loop join (SURVEY §4.2). */
   def combineAtSites(variants: DataFrame, bucketWidth: Long = 64): DataFrame = {
     siteCoverage(variants, bucketWidth)
       .select(col("contig"), col("pos"), col("sample"), col("kind"),
@@ -126,20 +126,6 @@ object Gvcf {
       .select(posexplode(col("ss")).as(Seq("sample_idx", "sample")))
       .select(col("sample"), col("sample_idx").cast(LongType))
 
-  /** A4 completed (r2 verdict item 3) — the MERGED site record with GATK
-    * CombineGVCFs semantics, not just densified per-sample states:
-    *   ref  — the site records' reference allele;
-    *   alt  — sorted distinct union of every sample's concrete alts,
-    *          with `<NON_REF>` kept as the trailing symbolic allele;
-    *   calls — every covered sample's genotype REMAPPED to indices in
-    *          the merged allele list (a sample's local allele j resolves
-    *          through its own `alleles` array — or `<NON_REF>` past its
-    *          end — then to the merged index; block-covered samples stay
-    *          0/0 with their block GQ), ordered by [[sampleNameIndex]].
-    * Input may carry a `gt` column (the [[Vcf]] parser emits one); the
-    * legacy fixture schema without it defaults to het 0/1 sites and 0/0
-    * blocks. Same bucketed interval join as [[combineAtSites]] — one
-    * equi-join + residual, never a nested loop. */
   /** The per-sample half of [[combineSites]], exposed for downstream
     * QC operators (Mendelian checks, concordance): one row per
     * (site, covered sample) with the merged ref/alts and the sample's
@@ -160,7 +146,7 @@ object Gvcf {
     // and every downstream per-site aggregate (same-key groupBy adds
     // no exchange). Block rows contribute NULL to the site-only
     // min/collect (skipped by both), and array_sort makes the alts
-    // union independent of the window's intra-partition row order. */
+    // union independent of the window's intra-partition row order.
     // try_cast + range guards: a malformed GT token ('A', '', '-1')
     // degrades to the missing call '.' instead of aborting a 100 TB
     // combine under ANSI — same skip-bad-records posture as the parser.
@@ -213,6 +199,20 @@ object Gvcf {
         (array_join(max(col("alts")), ",").as("alt") +:
           count(lit(1)).as("n_samples") +: extra): _*)
 
+  /** A4 completed (r2 verdict item 3) — the MERGED site record with GATK
+    * CombineGVCFs semantics, not just densified per-sample states:
+    *   ref  — the site records' reference allele;
+    *   alt  — sorted distinct union of every sample's concrete alts,
+    *          with `<NON_REF>` kept as the trailing symbolic allele;
+    *   calls — every covered sample's genotype REMAPPED to indices in
+    *          the merged allele list (a sample's local allele j resolves
+    *          through its own `alleles` array — or `<NON_REF>` past its
+    *          end — then to the merged index; block-covered samples stay
+    *          0/0 with their block GQ), ordered by [[sampleNameIndex]].
+    * Input may carry a `gt` column (the [[Vcf]] parser emits one); the
+    * legacy fixture schema without it defaults to het 0/1 sites and 0/0
+    * blocks. Same bucketed interval join as [[combineAtSites]] — one
+    * equi-join + residual, never a nested loop. */
   def combineSites(variants: DataFrame, bucketWidth: Long = 64): DataFrame =
     mergedSiteAgg(combinedCalls(variants, bucketWidth),
       // graft_sorted_call_vals = transform(sort_array(...), s -> s.c) as
@@ -663,7 +663,7 @@ object Gvcf {
         // per-row cost in a same-JVM noop A/B at 20M rows (r21, guide
         // §1.2 step 2), paid on all three cohort scans of every wide
         // query. The k >= 100000 branch preserves %05d semantics
-        // EXACTLY at probe widths (ScaleCentury runs this generator at
+        // EXACTLY at probe widths (the century corpus runs this generator at
         // width 1,002,000): lpad alone TRUNCATES past 5 digits, which
         // would collide sample names; %05d pads but never truncates.
         "concat('s', CASE WHEN k >= 100000 THEN CAST(k AS STRING) " +
@@ -783,27 +783,6 @@ object Gvcf {
       .withColumn("calls", array_join(col("calls"), ";"))
   }
 
-  /** Sample-axis scale evidence (r9 verdict item 3): the SAME combine as
-    * [[combineMerge]], but over the WIDE cohort — per-site sample count
-    * = |orders|/50 (30 / 300 / 3,000 at sf0.001/0.01/0.1) with the
-    * position axis fixed, so the measured cost is the per-site
-    * `collect_list` at realistic cohort widths (the reference's HBase
-    * wide-row bound: one cell per sample per position). The combined
-    * calls string is md5'd on BOTH engines — a 3,000-sample calls cell
-    * is ~40 KB and the digest proves it value-exact without shipping
-    * megabytes through the compare. Plan shape is [[combineSites]]
-    * verbatim: bucketed coverage equi-join, one site aggregate — width
-    * changes the aggregate's fan-in, never the shuffle count.
-    *
-    * SCALE CONTRACT (measured, r15 decade drive): output cells are
-    * O(sites × samples) by definition, so the wide trio
-    * (combine/genotype/export over this cohort) is intentionally
-    * cohort-BOUNDED — at the sf1-equivalent decade the cohort would be
-    * 30,000 samples × 10× sites = 100× sf0.1's matrix, and the dense
-    * form ground >9 CPU-min/task before being killed (SCALE.md r15f).
-    * That is the anti-pattern the store's long format exists to avoid:
-    * unbounded cohorts take the long-format combine/genotype family,
-    * which the decade drive runs at a 300,000-record cohort. */
   /** The WIDE cohort ([[syntheticVariantsWide]]) in DuckDB CTE form —
     * shared by q_combine_wide and q_genotype_wide so the cohort
     * arithmetic cannot drift between their oracles. */
@@ -831,6 +810,27 @@ object Gvcf {
       |         WHEN (j + k) % 2 = 0 THEN '0/1' ELSE '1/1' END AS gt
       |  FROM ss, ps)""".stripMargin
 
+  /** Sample-axis scale evidence (r9 verdict item 3): the SAME combine as
+    * [[combineMerge]], but over the WIDE cohort — per-site sample count
+    * = |orders|/50 (30 / 300 / 3,000 at sf0.001/0.01/0.1) with the
+    * position axis fixed, so the measured cost is the per-site
+    * `collect_list` at realistic cohort widths (the reference's HBase
+    * wide-row bound: one cell per sample per position). The combined
+    * calls string is md5'd on BOTH engines — a 3,000-sample calls cell
+    * is ~40 KB and the digest proves it value-exact without shipping
+    * megabytes through the compare. Plan shape is [[combineSites]]
+    * verbatim: bucketed coverage equi-join, one site aggregate — width
+    * changes the aggregate's fan-in, never the shuffle count.
+    *
+    * SCALE CONTRACT (measured, r15 decade drive): output cells are
+    * O(sites × samples) by definition, so the wide trio
+    * (combine/genotype/export over this cohort) is intentionally
+    * cohort-BOUNDED — at the sf1-equivalent decade the cohort would be
+    * 30,000 samples × 10× sites = 100× sf0.1's matrix, and the dense
+    * form ground >9 CPU-min/task before being killed (SCALE.md r15f).
+    * That is the anti-pattern the store's long format exists to avoid:
+    * unbounded cohorts take the long-format combine/genotype family,
+    * which the decade drive runs at a 300,000-record cohort. */
   val combineWide = Query(
     "q_combine_wide",
     s"""WITH $duckWideV,
@@ -1049,11 +1049,6 @@ object Gvcf {
     passthrough.unionByName(recombined).orderBy("contig", "pos")
   }
 
-  /** GenotypeGVCFs over the PL-bearing cohort. The oracle replays the
-    * ENTIRE pipeline independently in DuckDB list SQL — coverage join,
-    * allele union, canonical-order PL remap through the local-index map,
-    * argmin re-genotype, GQ from the two smallest likelihoods — so a
-    * hash match proves the remap math, not just the plumbing. */
   /** The GenotypeGVCFs pipeline (coverage → merged alleles → PL remap →
     * argmin genotype) in DuckDB CTE form, FROM a preceding `v` cohort
     * CTE — shared verbatim by q_genotype_gvcf (3-sample cohort) and
@@ -1111,6 +1106,11 @@ object Gvcf {
       |    least(spl[2] - spl[1], 99) AS gq_new
       |  FROM re4)""".stripMargin
 
+  /** GenotypeGVCFs over the PL-bearing cohort. The oracle replays the
+    * ENTIRE pipeline independently in DuckDB list SQL — coverage join,
+    * allele union, canonical-order PL remap through the local-index map,
+    * argmin re-genotype, GQ from the two smallest likelihoods — so a
+    * hash match proves the remap math, not just the plumbing. */
   val genotypeGvcfQuery = Query(
     "q_genotype_gvcf",
     s"""WITH $duckSyntheticV,

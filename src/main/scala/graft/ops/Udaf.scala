@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions.udaf
   * reference's (sample index, variant record). */
 case class Cell(line: Int, cents: Long)
 
+/** Aggregation buffer: the accumulated sparse cells for one key. */
+case class CellBuf(cells: List[Cell])
+
 /** The reference's `VariantCombiner.combine(pos, List<V>)` as a typed
   * Spark Aggregator (SURVEY §2D): per key, accumulate the sparse cells
   * and emit the dense, deterministically-ordered merge. The buffer is
@@ -16,9 +19,6 @@ case class Cell(line: Int, cents: Long)
   * final sort makes the result independent of partial-merge order, so
   * partial aggregation stays enabled (map-side combine at 100 TB).
   */
-/** Aggregation buffer: the accumulated sparse cells for one key. */
-case class CellBuf(cells: List[Cell])
-
 object DenseCombine extends Aggregator[Cell, CellBuf, String] {
   override def zero: CellBuf = CellBuf(Nil)
   override def reduce(buf: CellBuf, c: Cell): CellBuf = CellBuf(c :: buf.cells)

@@ -230,29 +230,6 @@ object VariantStore {
       .filter(e => e.minVer <= asOf && sampleOverlap(e, samples))
       .map(e => s"$path/${e.file}")
 
-  /** Rewrite every live generation as one sorted bulk generation. The
-    * input file list comes from the manifest (never a directory listing),
-    * so orphans from failed tasks are excluded by construction.
-    *
-    * `horizon` is the MAJOR-compaction purge bound (HBase major
-    * compaction + TTL analog) for versioned stores: history at or below
-    * it collapses to what an as-of-`horizon` read needs. Per key the
-    * rewrite keeps every version ABOVE the horizon plus the single
-    * winning version at the horizon — unless that winner is a
-    * [[Tombstone]], in which case the marker AND everything it masks
-    * are physically removed (the GDPR/consent-revocation case: the
-    * deleted rows leave disk, not just the read path). INVARIANT:
-    * `readAsOf(t)` for any `t >= horizon` is unchanged by compaction;
-    * reads below the horizon are no longer supported (their history is
-    * gone — the same contract HBase major compaction gives a timerange
-    * scan below the purge bound). The default `Long.MinValue` horizon
-    * purges nothing, preserving every historical snapshot.
-    *
-    * Commits through [[spliceCompacted]] (r15): the manifest swap drops
-    * exactly the folded snapshot's lines, so a generation APPENDED
-    * while the rewrite ran survives with its rows intact (it waits for
-    * the next pass), and a concurrent compactor aborts this pass
-    * rather than double-splicing. */
   /** MINOR (incremental) compaction — the HBase minor-compaction analog
     * and the missing middle between per-epoch memstore flushes and
     * [[compact]]'s full rewrite (which re-reads EVERY byte of the store:
@@ -312,12 +289,6 @@ object VariantStore {
       keepGenerations: Int = 4, numRanges: Int = 1): Unit =
     compactMinorImpl(spark, path, schema, keepGenerations, numRanges, () => ())
 
-  /** Test seam for the compactor-race abort: `beforeSplice` runs after
-    * this pass's merged generation is staged in the store directory but
-    * BEFORE the locked splice — the window in which a concurrent
-    * compactor can win. Specs inject a competing (real) compaction here
-    * to drive the abort branch deterministically; production callers go
-    * through [[compactMinor]], whose hook is a no-op. */
   /** Compaction fold-eligibility: a streaming generation may be folded
     * only once its epoch is CONFIRMED by its query's high-water mark.
     * The only way an unconfirmed generation exists is the crash window
@@ -337,6 +308,12 @@ object VariantStore {
       case None => true
     }
 
+  /** Test seam for the compactor-race abort: `beforeSplice` runs after
+    * this pass's merged generation is staged in the store directory but
+    * BEFORE the locked splice — the window in which a concurrent
+    * compactor can win. Specs inject a competing (real) compaction here
+    * to drive the abort branch deterministically; production callers go
+    * through [[compactMinor]], whose hook is a no-op. */
   private[graft] def compactMinorImpl(spark: SparkSession, path: String,
       schema: String, keepGenerations: Int, numRanges: Int,
       beforeSplice: () => Unit, afterSplice: () => Unit = () => ()): Unit = {
@@ -601,6 +578,29 @@ object VariantStore {
     }
   }
 
+  /** Rewrite every live generation as one sorted bulk generation. The
+    * input file list comes from the manifest (never a directory listing),
+    * so orphans from failed tasks are excluded by construction.
+    *
+    * `horizon` is the MAJOR-compaction purge bound (HBase major
+    * compaction + TTL analog) for versioned stores: history at or below
+    * it collapses to what an as-of-`horizon` read needs. Per key the
+    * rewrite keeps every version ABOVE the horizon plus the single
+    * winning version at the horizon — unless that winner is a
+    * [[Tombstone]], in which case the marker AND everything it masks
+    * are physically removed (the GDPR/consent-revocation case: the
+    * deleted rows leave disk, not just the read path). INVARIANT:
+    * `readAsOf(t)` for any `t >= horizon` is unchanged by compaction;
+    * reads below the horizon are no longer supported (their history is
+    * gone — the same contract HBase major compaction gives a timerange
+    * scan below the purge bound). The default `Long.MinValue` horizon
+    * purges nothing, preserving every historical snapshot.
+    *
+    * Commits through [[spliceCompacted]] (r15): the manifest swap drops
+    * exactly the folded snapshot's lines, so a generation APPENDED
+    * while the rewrite ran survives with its rows intact (it waits for
+    * the next pass), and a concurrent compactor aborts this pass
+    * rather than double-splicing. */
   def compact(spark: SparkSession, path: String, schema: String,
       numRanges: Int = 8, horizon: Long = Long.MinValue): Unit =
     compactImpl(spark, path, schema, numRanges, horizon, () => ())

@@ -123,8 +123,8 @@ class PartitionInvarianceSpec extends SparkSpec {
     // with arithmetic merges (tie-breaks), top-k frames, and the
     // long-format rows whose dense reassembly elsewhere depends on
     // their values being layout-independent.
-    val skewDir = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, sf, skewDir, copies = 3)
+    val skewDir =
+      Corpus.build(spark, sf, s"${scratchDir("graft_skewc_test")}/c", Corpus.skewCentury(3))
     val plans: Seq[(String, () => DataFrame)] = Seq(
       "sessionizeSegmented" ->
         (() => ops.Pipeline.sessionizeSegmented(api.tbl(spark, skewDir, "events"))),

@@ -11,11 +11,10 @@ class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
 
   private def withStrategy[T](f: => T): T = {
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ RangeJoinStrategy(spark)
+    val before = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = before :+ RangeJoinStrategy(spark)
     try f
-    finally spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_.isInstanceOf[RangeJoinStrategy])
+    finally spark.experimental.extraStrategies = before
   }
 
   private def probe: DataFrame =

@@ -10,11 +10,12 @@ import org.apache.spark.sql.DataFrame
   * key); this spec keeps the equivalences honest at test scale. */
 class SkewSpec extends SparkSpec {
 
-  private lazy val dir: String = {
-    val d = "/tmp/graft_skew_test__sf0001"
-    SkewAudit.buildSkew10(spark, "/root/testdata/sf0.001", d)
-    d
-  }
+  private lazy val dir: String = Corpus.build(spark, "/root/testdata/sf0.001",
+    s"${scratchDir("graft_skew_test")}/c", Corpus.skew10)
+
+  /** The hot-user century at 3 copies, shared by the window rewrites. */
+  private lazy val skewc: String = Corpus.build(spark, "/root/testdata/sf0.001",
+    s"${scratchDir("graft_skewc_test")}/c", Corpus.skewCentury(3))
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -24,8 +25,7 @@ class SkewSpec extends SparkSpec {
     // + global offsets over chunk summaries must reproduce the shipped
     // q_sessionize exactly, including sessions that CROSS day chunks
     // (the skew corpus's hot user is dense enough to have them)
-    val d = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, "/root/testdata/sf0.001", d, copies = 3)
+    val d = skewc
     assert(rows(graft.ops.Pipeline.sessionizeSegmented(api.tbl(spark, d, "events"))) ==
       rows(graft.ops.Pipeline.sessionizePlain(api.tbl(spark, d, "events"))))
   }
@@ -34,8 +34,7 @@ class SkewSpec extends SparkSpec {
     // the r18 verdict's one demerit was proven-but-not-shipped: pin that
     // the DECLARED queries now run the rewrites, not the naive windows —
     // no window partitioned on the bare hot key may remain in any plan
-    val d = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, "/root/testdata/sf0.001", d, copies = 3)
+    val d = skewc
     def windowSpecs(name: String): Seq[String] = {
       val df = SparkEntry.queries(name)(spark, d)
       flattenPlan(df.queryExecution.executedPlan)
@@ -84,8 +83,7 @@ class SkewSpec extends SparkSpec {
     // to the plain per-user running window — exact decimal addition is
     // associative, so chunk-local sums + chunk offsets reassemble the
     // global prefix sum to the bit (doubles compare exactly)
-    val d = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, "/root/testdata/sf0.001", d, copies = 3)
+    val d = skewc
     assert(rows(SkewCentury.runningTwoStage(spark, d)) ==
       rows(SkewCentury.runningPlain(spark, d)))
   }
@@ -97,8 +95,7 @@ class SkewSpec extends SparkSpec {
     // forces MANY segment crossings on the test corpus (the default
     // 8192 would leave one segment per type here and never exercise the
     // phantom path).
-    val d = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, "/root/testdata/sf0.001", d, copies = 3)
+    val d = skewc
     val ev = api.tbl(spark, d, "events")
     def proj(df: DataFrame): Seq[String] =
       rows(df.select("event_id", "event_type", "value", "med50"))
@@ -140,8 +137,7 @@ class SkewSpec extends SparkSpec {
     // so the top-k rewrite (map-side WindowGroupLimit pre-cut) must be
     // bit-identical to the full sliding window — same integer weights,
     // same single final IEEE division
-    val d = "/tmp/graft_skewc_test__sf0001"
-    SkewCentury.buildSkewCentury(spark, "/root/testdata/sf0.001", d, copies = 3)
+    val d = skewc
     assert(rows(ops.Extras.ewmaLastK(api.tbl(spark, d, "events"))) ==
       rows(ops.Extras.ewmaOf(api.tbl(spark, d, "events"))))
   }

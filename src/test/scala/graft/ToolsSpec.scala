@@ -89,4 +89,21 @@ class ToolsSpec extends SparkSpec {
       "override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {")),
       s"declare kernels with graft.functions.Kernel: $gens")
   }
+
+  test("createSymbolicLink appears only in Corpus: one corpus builder") {
+    val files = uses("createSymbolicLink").map(_._1).distinct
+    assert(files == Seq("Corpus.scala"), s"derive corpora with graft.Corpus.build: $files")
+  }
+
+  test("no Scaladoc block is directly followed by another") {
+    // the first of two stacked blocks documents nothing
+    val stacked = mainSources("src/main/scala").flatMap { f =>
+      val src = Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().map(_.trim).toList finally src.close()
+      lines.zip(lines.drop(1)).zipWithIndex.collect {
+        case ((a, b), i) if a.endsWith("*/") && b.startsWith("/**") => s"${f.getName}:${i + 2}"
+      }
+    }
+    assert(stacked.isEmpty, s"move each block onto its definition: $stacked")
+  }
 }

@@ -64,6 +64,21 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(both.forall { case (d, n) => d == n })
   }
 
+  test("register is a no-op on a session that has every graft function") {
+    // q_bloom_prefilter registers on every build: a second registration
+    // must neither replace the functions nor add a strategy or rule
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    GraftExtensions.register(spark)
+    def info = spark.sessionState.functionRegistry
+      .lookupFunction(FunctionIdentifier("graft_bloom_agg")).get
+    val (registered, strategies, rules) =
+      (info, spark.experimental.extraStrategies, spark.experimental.extraOptimizations)
+    for (_ <- 1 to 2) SparkEntry.queries("q_bloom_prefilter")(spark, "/root/testdata/sf0.001")
+    assert(info eq registered, "graft_bloom_agg was registered again")
+    assert(spark.experimental.extraStrategies == strategies)
+    assert(spark.experimental.extraOptimizations == rules)
+  }
+
   test("mismatched lengths use the shorter prefix; SQL surface works") {
     val d = Seq((Seq(1.0, 2.0, 3.0), Seq(10.0, 10.0))).toDF("a", "b")
     assert(d.select(dotp($"a", $"b")).as[Double].head() == 30.0)
