@@ -56,9 +56,6 @@ object Audit {
   /** One measured query: its result's checksum and the flat JSON record. */
   final case class Record(query: String, checksum: Long, json: String)
 
-  private def fmt(digits: Int, v: Double): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-
   /** Executes `df`'s own plan once, at full width, in one job: its row
     * count and the xor of every row's xxhash64 over the output, i.e.
     * `bit_xor(xxhash64(*))` with the job, tasks and shuffles of
@@ -115,7 +112,7 @@ object Audit {
         byStage.maxBy(ms => ms.last.toDouble / math.max(1L, ms(ms.size / 2)))
       else c.taskDurations.map(_._2).sorted
     val (maxMs, p50) = stageMs.lastOption.fold((0L, 0L))((_, stageMs(stageMs.size / 2)))
-    System.err.println(s"==== $name steady: ${fmt(1, (t5 - t4) / 1e6)} ms ($rows rows)")
+    System.err.println(s"==== $name steady: ${Tools.num((t5 - t4) / 1e6)} ms ($rows rows)")
     for (si <- c.stageInfos.sortBy(_.stageId)) {
       val m = si.taskMetrics
       val recs = m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead
@@ -123,8 +120,8 @@ object Audit {
         f"cpu=${m.executorCpuTime / 1000000L}%6d ms tasks=${si.numTasks}%3d " +
         f"recs=$recs%9d  ${si.name.split("\n")(0).take(60)}")
     }
-    def ms(a: Long, b: Long) = fmt(1, (b - a) / 1e6)
-    def mb(bytes: Long) = fmt(3, bytes / 1e6)
+    def ms(a: Long, b: Long) = Tools.num((b - a) / 1e6)
+    def mb(bytes: Long) = Tools.num(bytes / 1e6, 3)
     val json =
       s"""{"query":"$name","build_ms":${ms(t0, t1)},"plan_ms":${ms(t1, t2)},""" +
         s""""analysis_ms":${phases.getOrElse("analysis", 0L)},""" +
@@ -137,7 +134,7 @@ object Audit {
         s""""shuffle_read_mb":${mb(c.shuffleReadBytes)},""" +
         s""""shuffle_records":${c.shuffleRecords},"spill_mb":${mb(c.spillBytes)},""" +
         s""""stage_tasks":${stageMs.size},"max_task_ms":$maxMs,"stage_p50_ms":$p50,""" +
-        s""""straggler_ratio":${fmt(3, maxMs.toDouble / math.max(1L, p50))}}"""
+        s""""straggler_ratio":${Tools.num(maxMs.toDouble / math.max(1L, p50), 3)}}"""
     Record(name, checksum, json)
   }
 

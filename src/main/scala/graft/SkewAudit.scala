@@ -389,38 +389,21 @@ object SkewCentury {
 object GvcfSkew {
   import graft.ops.Gvcf
 
-  /** Wide-cohort generator with a contig-skew dial (hotTenths in
-    * [0, 10]: that share of positions on chr00, the rest round-robin
-    * over `nContigs` cold contigs). hotTenths = 0 is the uniform
-    * control; the per-sample record scheme (site/block mix, alleles,
-    * gq, gt) is [[graft.ops.Gvcf.syntheticVariantsWide]]'s verbatim so
-    * the two corpora differ ONLY in contig assignment. */
+  /** [[graft.ops.Gvcf.syntheticVariantsWide]] with a contig-skew dial
+    * (hotTenths in [0, 10]: that share of positions on chr00, the rest
+    * round-robin over `nContigs` cold contigs), so the two corpora differ
+    * only in `contig`. hotTenths = 0 is the uniform control. */
   def skewCohort(s: SparkSession, nSamples: Long, nPositions: Long,
-      nContigs: Int, hotTenths: Int): DataFrame =
-    Gvcf.annotateWidth(
-      s.range(0, nSamples, 1, 32)
-        .selectExpr("id AS k")
-        .crossJoin(s.range(0, nPositions, 1, 1).selectExpr("id AS j"))
-        .selectExpr(
-          "format_string('s%05d', k) AS sample",
-          // cold contig from a DENSE cold-position ordinal, not raw j:
-          // j % nContigs over the surviving (j % 10 >= hotTenths)
-          // positions would visit only nContigs/2 contigs at
-          // hotTenths=5 and silently halve the probed hot:cold ratio
-          s"CASE WHEN j % 10 < $hotTenths THEN 'chr00' " +
-            s"ELSE concat('chr', 1 + (j DIV 10 * (10 - $hotTenths) " +
-            s"+ j % 10 - $hotTenths) % $nContigs) END AS contig",
-          "j * 10 + 1 AS start",
-          "CASE WHEN (j + k) % 3 < 2 THEN j * 10 + 1 ELSE j * 10 + 10 END AS end",
-          "CASE WHEN (j + k) % 3 < 2 THEN 'site' ELSE 'block' END AS kind",
-          "CASE WHEN (j + k) % 3 < 2 " +
-            "THEN array(substr('ACGT', CAST(j % 4 AS INT) + 1, 1), " +
-            "           substr('ACGT', CAST((j + 1 + k % 3) % 4 AS INT) + 1, 1)) " +
-            "ELSE array(substr('ACGT', CAST(j % 4 AS INT) + 1, 1)) END AS alleles",
-          "CAST((j * 7 + k * 13) % 90 + 10 AS INT) AS gq",
-          "CASE WHEN (j + k) % 3 >= 2 THEN '0/0' " +
-            "WHEN (j + k) % 2 = 0 THEN '0/1' ELSE '1/1' END AS gt"),
-      nSamples)
+      nContigs: Int, hotTenths: Int): DataFrame = {
+    val j = "((start - 1) DIV 10)"
+    // cold contig from a DENSE cold-position ordinal, not raw j: j %
+    // nContigs over the surviving (j % 10 >= hotTenths) positions would
+    // visit only nContigs/2 contigs at hotTenths=5 and silently halve the
+    // probed hot:cold ratio
+    Gvcf.syntheticVariantsWide(s, nSamples, nPositions).withColumn("contig", expr(
+      s"CASE WHEN $j % 10 < $hotTenths THEN 'chr00' ELSE concat('chr', " +
+        s"1 + ($j DIV 10 * (10 - $hotTenths) + $j % 10 - $hotTenths) % $nContigs) END"))
+  }
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("SKEW_AUDIT_GVCF.json")

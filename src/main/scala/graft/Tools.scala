@@ -38,6 +38,19 @@ object Tools {
     * the bench's session shape. */
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
+  /** `v` with `digits` decimals in the ROOT locale, or `null` for NaN
+    * and ±∞, so a record stays valid JSON. */
+  def num(v: Double, digits: Int = 1): String =
+    if (v.isNaN || v.isInfinite) "null"
+    else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Writes one JSON record (plus a newline) to `out`, then prints it. */
+  def writeRecord(out: String, json: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(out),
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(json)
+  }
+
   /** What arrived between two [[Counters.drain]] calls. Bytes and
     * records are summed task metrics; `taskDurations` is one
     * (stageId, wall ms) per task, `stageInfos` one entry per completed

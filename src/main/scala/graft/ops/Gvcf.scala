@@ -855,8 +855,8 @@ object Gvcf {
     * oracle pins `format = 'dense'` — if the dispatch ever mis-routes a
     * bounded cohort to the long format (schema change) or the dense
     * output drifts, the gate goes red. The long branch is exercised by
-    * the same query entry at the 334× probe corpus (width 1,002,000 →
-    * long; graft.AutoCombineProbe validates it there) and by GvcfSpec's
+    * the same dispatch at width 1,002,000 (→ long; `graft.WidthProbe
+    * combine` validates it there) and by GvcfSpec's
     * dense≡long equality. Oracle SQL is [[combineWide]]'s verbatim plus
     * the format literal. */
   val combineAutoQuery = Query(
@@ -876,7 +876,7 @@ object Gvcf {
     // result schema) depend on the gate runner's JVM — a small-heap
     // driver at a wide-enough sf would flip to 'long' against a 'dense'
     // oracle. The derived path is covered where the heap IS the variable
-    // under test: WidthFloorProbe brackets it, GvcfSpec pins the formula.
+    // under test: `graft.WidthProbe floor` brackets it, GvcfSpec pins the formula.
     val auto = combineAuto(syntheticVariantsWide(s, wideN(s, d)),
       maxDenseWidth = MaxDenseWidth)
     auto.format match {
@@ -1355,8 +1355,8 @@ object Gvcf {
     * the admitted format as a result column; at every driver scale the
     * width is under [[MaxDenseWidth]], so the oracle pins
     * `format = 'dense'` and the [[exportWide]] line digests. The chunked
-    * branch is exercised by graft.AutoExportProbe at the 334× corpus
-    * (width 1,002,000 → chunked, formula-validated) and by GvcfSpec's
+    * branch is exercised by `graft.WidthProbe export` at width 1,002,000
+    * (→ chunked, formula-validated) and by GvcfSpec's
     * stitch-equality pins. */
   val exportAutoQuery = Query(
     "q_export_auto",

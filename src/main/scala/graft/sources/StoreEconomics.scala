@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Tools.{num, writeRecord}
+
 /** Evidence tool (r18, verdict item 6): the streaming store's
   * read-amplification curve as generations accumulate, at several
   * compaction cadences — the LSM read/write-amplification tradeoff in
@@ -37,11 +39,6 @@ import org.apache.spark.unsafe.types.UTF8String
 object StoreEconomics {
 
   private[sources] val Ddl = "key LONG, ver LONG, payload STRING"
-
-  private[sources] def f1(v: Double): String =
-    // NaN (e.g. the no-non-fold-epoch median) must stay valid JSON
-    if (v.isNaN || v.isInfinite) "null"
-    else String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("STORE_ECONOMICS.json")
@@ -128,8 +125,8 @@ object StoreEconomics {
           rows += s"""{"cadence":"$name","epoch":$e,""" +
             s""""gens":${allEntries.size},"read_files":${entries.size},""" +
             s""""manifest_bytes":$manifestBytes,"list_us":$listUs,""" +
-            s""""read_ms":${f1(readMs)},"live_mb":${f1(live / 1e6)},""" +
-            s""""written_mb":${f1(written / 1e6)}}"""
+            s""""read_ms":${num(readMs)},"live_mb":${num(live / 1e6)},""" +
+            s""""written_mb":${num(written / 1e6)}}"""
           System.err.println(rows.result().last)
         }
       }
@@ -137,9 +134,7 @@ object StoreEconomics {
     }
     val json = s"""{"epochs":$epochs,"rows_per_epoch":$rowsPerEpoch,""" +
       s""""keep_generations":4,"samples":[\n${lines.mkString(",\n")}\n]}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
+    writeRecord(out, json)
     spark.stop()
   }
 }
@@ -246,9 +241,9 @@ object StoreEconomics334 {
           .map(StoreManifest.parse(_).file)
           .map(f => new java.io.File(dir, f).length()).sum
         samples += s"""{"epoch":$e,"gens":$gensAfter,"folded":$folded,""" +
-          s""""ingest_ms":${StoreEconomics.f1(epochNanos / 1e6)},""" +
-          s""""read_ms":${StoreEconomics.f1(readMs)},"read_rows":$n,""" +
-          s""""live_mb":${StoreEconomics.f1(live / 1e6)}}"""
+          s""""ingest_ms":${num(epochNanos / 1e6)},""" +
+          s""""read_ms":${num(readMs)},"read_rows":$n,""" +
+          s""""live_mb":${num(live / 1e6)}}"""
         System.err.println(samples.result().last)
       }
     }
@@ -262,20 +257,18 @@ object StoreEconomics334 {
     require(boundHeld, s"generation bound broken: max $maxGens")
     val json = s"""{"sf":"$sfDir","epochs":$epochs,"writers_per_epoch":$writers,""" +
       s""""key_space":$keySpace,"total_rows":$totalRows,""" +
-      s""""raw_text_mb":${StoreEconomics.f1(rawBytes / 1e6)},""" +
+      s""""raw_text_mb":${num(rawBytes / 1e6)},""" +
       s""""threshold":${AutoCompactPolicy.DefaultThreshold},""" +
       s""""keep":${AutoCompactPolicy.DefaultKeep},""" +
       s""""max_gens":$maxGens,"bound_held":$boundHeld,""" +
       s""""fold_events":$foldEvents,""" +
-      s""""ingest_total_s":${StoreEconomics.f1(ingestNanos / 1e9)},""" +
-      s""""fold_epoch_total_s":${StoreEconomics.f1(foldEpochNanos / 1e9)},""" +
-      s""""median_epoch_ms":${StoreEconomics.f1(baselineMs)},""" +
-      s""""max_fold_epoch_ms":${StoreEconomics.f1(maxFoldMs)},""" +
-      s""""fold_wall_frac":${StoreEconomics.f1(foldEpochNanos.toDouble / ingestNanos)},""" +
+      s""""ingest_total_s":${num(ingestNanos / 1e9)},""" +
+      s""""fold_epoch_total_s":${num(foldEpochNanos / 1e9)},""" +
+      s""""median_epoch_ms":${num(baselineMs)},""" +
+      s""""max_fold_epoch_ms":${num(maxFoldMs)},""" +
+      s""""fold_wall_frac":${num(foldEpochNanos.toDouble / ingestNanos)},""" +
       s""""samples":[\n${samples.result().mkString(",\n")}\n]}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
+    writeRecord(out, json)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staging))
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     spark.stop()

@@ -95,6 +95,12 @@ class ToolsSpec extends SparkSpec {
     assert(files == Seq("Corpus.scala"), s"derive corpora with graft.Corpus.build: $files")
   }
 
+  test("the wide cohort's alt-allele formula appears only in Gvcf: one cohort generator") {
+    val files = uses("(j + 1 + k % 3) % 4").map(_._1).distinct
+    assert(files == Seq("Gvcf.scala"),
+      s"derive wide cohorts from graft.ops.Gvcf.syntheticVariantsWide: $files")
+  }
+
   test("no Scaladoc block is directly followed by another") {
     // the first of two stacked blocks documents nothing
     val stacked = mainSources("src/main/scala").flatMap { f =>
