@@ -114,12 +114,16 @@ object Corpus {
 
   /** The 100× step (sf10-equivalent of an sf0.1 source) for the heavy
     * movers `Audit @century` measures: `n` decade-style copies of
-    * lineitem, orders, documents and embeddings only. Document text is
-    * perturbed per copy (every token gets a copy suffix, `n_chars`
-    * recomputed), so duplication density stays at the source's while
-    * the corpus grows; at n = 10 it is the density-constant 10× point. */
-  def century(n: Int): Spec = Spec("_CENTURY_READY", s"copies=$n perturbed=documents",
-    (Seq("orders", "lineitem", "embeddings").map(keyed(n)) :+ keyed(n, (df, k) => df
+    * lineitem, orders, documents and embeddings, and of the customer,
+    * part and supplier they reference, so every copy's foreign keys
+    * resolve inside the copy (the marker changed with them, so a corpus
+    * built without them is rebuilt). Document text is perturbed per copy
+    * (every token gets a copy suffix, `n_chars` recomputed), so
+    * duplication density stays at the source's while the corpus grows;
+    * at n = 10 it is the density-constant 10× point. */
+  def century(n: Int): Spec = Spec("_CENTURY_FK_READY", s"copies=$n perturbed=documents",
+    (Seq("customer", "part", "supplier", "orders", "lineitem", "embeddings").map(keyed(n)) :+
+      keyed(n, (df, k) => df
       .withColumn("text", array_join(
         transform(split(col("text"), " "), w => concat(w, lit(s"_$k"))), " "))
       .withColumn("n_chars", length(col("text")).cast("long")))("documents")).toMap)

@@ -23,8 +23,7 @@ object NullProbe {
     val out = if (args.length > 1) args(1) else "NULL_PROBE.json"
     val fp = Corpus.nullPoison.tables.keys.toSeq.sorted
       .map(t => api.contentFingerprint(s"$src/$t.parquet")).mkString("_")
-    val dest = s"${System.getProperty("java.io.tmpdir")}/graft_nullprobe_" +
-      s"${src.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
+    val dest = api.scratchPath(s"nullprobe_${api.slug(src)}_$fp")
     val skip = sys.env.get("SPARK_GRAFT_SKIP")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])

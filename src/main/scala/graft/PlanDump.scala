@@ -15,13 +15,16 @@ object PlanDump {
     * ids (`lambda x_8`) and RDD ids (`MapPartitionsRDD[157]`) in order
     * of first appearance, so references inside the plan still match;
     * masks lambda class names with their identity hash, the content
-    * fingerprints of build-once fixture directories and the unique
-    * suffix of part-file names. */
+    * fingerprints of build-once fixture directories, the id of the
+    * JVM's output root, the unique suffix of part-file names and the
+    * source line of an RDD's call site. */
   def normalise(plan: String): String = {
     val masked = plan
       .replaceAll("""\$\$Lambda[$/\w]*(@[0-9a-f]+)?""", "\\$\\$Lambda")
+      .replaceAll("""(/graft_run_)\d+""", "$1<id>")
       .replaceAll("""(/graft_\w*?)_[0-9a-f]{12}(?![0-9a-zA-Z])""", "$1_<fingerprint>")
       .replaceAll("""(part-\d{5})(-[0-9a-f]+)+""", "$1-<id>")
+      .replaceAll("""(\.scala:)\d+""", "$1<line>")
     Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
         """(RDD\[)(\d+)""").foldLeft(masked) { (s, re) =>
       val ids = scala.collection.mutable.LinkedHashMap[String, Int]()

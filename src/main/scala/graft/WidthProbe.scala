@@ -279,7 +279,8 @@ object WidthProbe {
           s"n_samples ${r.getLong(0)}, calls ${r.getInt(1)} != width $width" } ++
           sitesFault(sites.length))
         obj("heap_bytes" -> heap, "slots" -> slots, "derived_width" -> bound,
-          "cap" -> Gvcf.MaxDenseWidth, "bytes_per_sample_slot" -> Gvcf.BytesPerSampleSlot,
+          "cap" -> Gvcf.MaxDenseWidth, "heap_reserve_bytes" -> Gvcf.HeapReserveBytes,
+          "bytes_per_sample_slot" -> Gvcf.BytesPerSampleSlot,
           "secs" -> secs, "sites" -> sites.length, "result" -> "green")
       case _ =>
         val ((sites, bad), secs) = timed(

@@ -180,6 +180,35 @@ object api {
       .take(6).map("%02x".format(_)).mkString
   }
 
+  /** `d` with every non-alphanumeric character replaced by `_`, for
+    * directory names keyed by a dataset path. */
+  def slug(d: String): String = d.replaceAll("[^a-zA-Z0-9]", "_")
+
+  /** `graft_<name>` in `java.io.tmpdir`: the shared home of the
+    * build-once fixtures and caches ([[buildOnce]]), which outlive the
+    * JVM and are keyed by content so a warm host reuses them. The
+    * property is read at call time, so a spec can point a whole drive at
+    * a fresh directory. */
+  def scratchPath(name: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_$name"
+
+  private val outputRoots =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+
+  /** `graft_<name>` under this JVM's own output root: the home of every
+    * output a query overwrites and then reads back. A path shared
+    * between processes lets one run overwrite the files another is
+    * reading, so each JVM gets its own `graft_run_*` directory in
+    * `java.io.tmpdir` (one per value of the property), deleted when the
+    * JVM exits. */
+  def outputPath(name: String): String =
+    outputRoots.computeIfAbsent(System.getProperty("java.io.tmpdir"), { tmp =>
+      val root = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(tmp), "graft_run_")
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+      root
+    }).resolve(s"graft_$name").toString
+
   /** Build-once, atomically-published fixture/index directory: when
     * `dirPath` is not yet ready (missing, or missing `marker` when one
     * is given), run `build` into a fresh temp directory and ATOMIC_MOVE

@@ -183,13 +183,10 @@ object Combine {
       .orderBy("y")
   }
 
-  /** [[sortedWrite]]'s output directory for the dataset at `d`, in
-    * `java.io.tmpdir`, unique to the dataset's content and this process. */
+  /** [[sortedWrite]]'s output directory for the dataset at `d`, in this
+    * JVM's output root ([[graft.api.outputPath]]). */
   private[graft] def sortedWriteDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_sorted_write_" +
-      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-      s"${graft.api.contentFingerprint(s"$d/lineitem.parquet")}_" +
-      java.lang.ProcessHandle.current().pid()
+    graft.api.outputPath(s"sorted_write_${graft.api.slug(d)}")
 
   /** A11 — bulk load contract: range-partitioned, sorted-within-partition
     * write (the HFile/bulkPut analog), then re-read and verify per-range
@@ -201,9 +198,8 @@ object Combine {
       |  min(l_orderkey) AS min_key, max(l_orderkey) AS max_key
       |FROM lineitem
       |GROUP BY key_bucket ORDER BY key_bucket""".stripMargin) { (s, d) =>
-    // content-fingerprinted (like the IVF/ppm/cc caches) + per-process
-    // unique: concurrent Verify/Bench runs on the same dataset must not
-    // race one shared overwrite-then-read directory
+    // in this JVM's own output root: concurrent Verify/Bench runs on the
+    // same dataset must not race one shared overwrite-then-read directory
     val out = sortedWriteDir(d)
     // range count follows the session's parallelism instead of a
     // constant 8 (r21, guide §2 scale-adaptive partitioning): 8 ranges

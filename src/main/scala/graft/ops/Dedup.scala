@@ -731,11 +731,10 @@ object Dedup {
       java.util.concurrent.ConcurrentHashMap[String, () => DataFrame]]()
 
   /** [[clusterLabels]]' parquet cache of the corpus at `d`, in
-    * `java.io.tmpdir`, keyed by the path and the corpus content. */
+    * [[graft.api.scratchPath]], keyed by the path and the corpus content. */
   private[graft] def labelCacheDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cc_" +
-      s"${d.replaceAll("[^a-zA-Z0-9]", "_")}_" +
-      graft.api.contentFingerprint(s"$d/documents.parquet")
+    graft.api.scratchPath(s"cc_${graft.api.slug(d)}_" +
+      graft.api.contentFingerprint(s"$d/documents.parquet"))
 
   def clusterLabels(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     // scratch choke point BEFORE the memo: every caller depends on the

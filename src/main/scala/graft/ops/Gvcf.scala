@@ -126,41 +126,32 @@ object Gvcf {
       .select(posexplode(col("ss")).as(Seq("sample_idx", "sample")))
       .select(col("sample"), col("sample_idx").cast(LongType))
 
-  /** The per-sample half of [[combineSites]], exposed for downstream
-    * QC operators (Mendelian checks, concordance): one row per
-    * (site, covered sample) with the merged ref/alts and the sample's
-    * genotype REMAPPED to merged allele indices. */
-  def combinedCalls(variants: DataFrame, bucketWidth: Long = 64): DataFrame = {
-    val v = if (variants.columns.contains("gt")) variants
-      else variants.withColumn("gt",
-        when(col("kind") === "site", lit("0/1")).otherwise(lit("0/0")))
+  /** Coverage rows (contig, pos, sample, kind, alleles, gq, then
+    * `carry`) under the merged site header, joined to [[sampleNameIndex]]
+    * — the shared core of [[combinedCalls]] and [[genotypeCalls]].
+    * Merged ref/alts are whole-partition WINDOW aggregates over the one
+    * shuffled copy of the coverage rows (r14 rework): the previous shape
+    * aggregated a SECOND copy of the coverage (groupBy site → merged) and
+    * merge-joined it back, so the coverage subtree — the corpus-scale
+    * stage: record scan, bucket explode, site probe join — was computed
+    * twice and both join sides paid a sort. One hash exchange on the
+    * site key now feeds the window, the per-row remap, and every
+    * downstream per-site aggregate (same-key groupBy adds no exchange).
+    * Block rows contribute NULL to the site-only min/collect (skipped by
+    * both), and the canonical sort inside graft_merged_alts makes the
+    * alts union independent of the window's intra-partition row order.
+    * `perRow` adds the caller's per-row columns BELOW the broadcast
+    * sample-index join; a caller whose columns sit above the join adds
+    * them to the result instead, so each plan keeps its projection
+    * order. */
+  private def mergedCalls(v: DataFrame, bucketWidth: Long, carry: String*)(
+      perRow: DataFrame => DataFrame): DataFrame = {
     val cov = siteCoverage(v, bucketWidth)
-      .select("contig", "pos", "sample", "kind", "alleles", "gq", "gt")
-    // Merged ref/alts as whole-partition WINDOW aggregates over the one
-    // shuffled copy of the coverage rows (r14 rework): the previous
-    // shape aggregated a SECOND copy of `cov` (groupBy site → merged)
-    // and merge-joined it back, so the coverage subtree — the
-    // corpus-scale stage: record scan, bucket explode, site probe
-    // join — was computed twice and both join sides paid a sort. One
-    // hash exchange on the site key now feeds the window, the remap,
-    // and every downstream per-site aggregate (same-key groupBy adds
-    // no exchange). Block rows contribute NULL to the site-only
-    // min/collect (skipped by both), and array_sort makes the alts
-    // union independent of the window's intra-partition row order.
-    // try_cast + range guards: a malformed GT token ('A', '', '-1')
-    // degrades to the missing call '.' instead of aborting a 100 TB
-    // combine under ANSI — same skip-bad-records posture as the parser.
-    // graft_remap_gt (r22) = the former split/transform/array_position
-    // CASE chain as ONE codegen-native pass (the HOF transform evaluated
-    // interpreted on every coverage row); GvcfKernels.remapGt documents
-    // the replicated expression verbatim and GvcfExprSpec pins token-level
-    // equality including the malformed-token corners.
-    val remapped = graft.functions.GvcfExpressions.remapGt(
-      col("gt"), col("kind"), col("alleles"), col("alts"), Vcf.NonRef)
+      .select((Seq("contig", "pos", "sample", "kind", "alleles", "gq") ++ carry).map(col): _*)
     val w = Window.partitionBy("contig", "pos")
     // one select, not chained withColumn: both window aggregates land in
     // a single WindowExec pass over the shared sort
-    cov
+    perRow(cov
       .select(cov.columns.map(col) :+
         min(when(col("kind") === "site", element_at(col("alleles"), 1))).over(w)
           .as("ref") :+
@@ -180,9 +171,29 @@ object Gvcf {
         graft.functions.GvcfExpressions.mergedAlts(collect_set(
             when(col("kind") === "site",
               expr("slice(alleles, 2, greatest(size(alleles) - 1, 0))"))).over(w),
-          Vcf.NonRef).as("alts"): _*)
+          Vcf.NonRef).as("alts"): _*))
       .join(broadcast(sampleNameIndex(v)), "sample")
-      .withColumn("gtm", remapped)
+  }
+
+  /** The per-sample half of [[combineSites]], exposed for downstream
+    * QC operators (Mendelian checks, concordance): one row per
+    * (site, covered sample) with the merged ref/alts and the sample's
+    * genotype REMAPPED to merged allele indices. */
+  def combinedCalls(variants: DataFrame, bucketWidth: Long = 64): DataFrame = {
+    val v = if (variants.columns.contains("gt")) variants
+      else variants.withColumn("gt",
+        when(col("kind") === "site", lit("0/1")).otherwise(lit("0/0")))
+    // try_cast + range guards: a malformed GT token ('A', '', '-1')
+    // degrades to the missing call '.' instead of aborting a 100 TB
+    // combine under ANSI — same skip-bad-records posture as the parser.
+    // graft_remap_gt (r22) = the former split/transform/array_position
+    // CASE chain as ONE codegen-native pass (the HOF transform evaluated
+    // interpreted on every coverage row); GvcfKernels.remapGt documents
+    // the replicated expression verbatim and GvcfExprSpec pins token-level
+    // equality including the malformed-token corners.
+    val remapped = graft.functions.GvcfExpressions.remapGt(
+      col("gt"), col("kind"), col("alleles"), col("alts"), Vcf.NonRef)
+    mergedCalls(v, bucketWidth, "gt")(identity).withColumn("gtm", remapped)
   }
 
   /** THE per-site merged-header aggregate, shared by every rollup of
@@ -263,21 +274,33 @@ object Gvcf {
     * bound from the running JVM via [[defaultMaxDenseWidth]]. */
   val DeriveFromHeap = -1L
 
+  /** Heap held back from the dense budget before it is split per slot:
+    * the JVM, Spark's own reserved and managed memory and the session's
+    * fixed state do not shrink with the heap, so a bound linear down to
+    * a zero heap admitted widths a small heap cannot hold (2400m at 32
+    * slots derived 76,800, and that combine ran out of heap). Calibrated
+    * with `graft.WidthProbe floor` at 32 slots under
+    * `spark.memory.fraction = 0.15`: 2400m now derives 44,032 and 4800m
+    * 120,832, both green. */
+  val HeapReserveBytes = 1024L * 1024 * 1024
+
   /** The heap-aware dense admission bound (r19, verdict item 5): the
     * r18 constant encoded "~9.6 GB floor at local[32]" — on a smaller
     * executor the safe dense width is proportionally smaller, and a
-    * constant rule silently mis-admits. `heap / slots /
-    * [[BytesPerSampleSlot]]` gives every admitted cohort at least the
-    * measured-green per-sample budget whatever the JVM, capped at
-    * [[MaxDenseWidth]] (the GC-bound wall-time law is heap-independent).
-    * The r17e brackets anchor it: the 4.8 GB OOM heap derives 153,600
-    * (refuses the 300k cohort that OOM'd there), the 9.6 GB green heap
-    * derives the full 300,000 (admits exactly the measured green
-    * point). */
+    * constant rule silently mis-admits. `(heap − [[HeapReserveBytes]]) /
+    * slots / [[BytesPerSampleSlot]]` gives every admitted cohort at
+    * least the measured-green per-sample budget whatever the JVM, capped
+    * at [[MaxDenseWidth]] (the GC-bound wall-time law is
+    * heap-independent). It only errs low: the 4.8 GB heap that OOM'd the
+    * 300k cohort derives 120,832, the 9.6 GB heap that ran it green
+    * derives 274,432, and a heap at or under the reserve admits nothing
+    * dense. A refused width routes to the long format, with identical
+    * results. */
   def derivedMaxDenseWidth(heapBytes: Long, slots: Int): Long = {
     require(heapBytes > 0 && slots >= 1,
       s"bad derivation inputs: heap=$heapBytes slots=$slots")
-    math.min(MaxDenseWidth, heapBytes / slots / BytesPerSampleSlot)
+    math.min(MaxDenseWidth,
+      math.max(0L, heapBytes - HeapReserveBytes) / slots / BytesPerSampleSlot)
   }
 
   /** [[derivedMaxDenseWidth]] for THIS JVM: driver heap over the
@@ -429,21 +452,23 @@ object Gvcf {
     * the returned plan is lazy — so a 100 TB planner can assert the
     * admission rule without touching the record corpus. */
   def combineAuto(variants: DataFrame, bucketWidth: Long = 64,
-      maxDenseWidth: Long = DeriveFromHeap): AutoCombine = {
-    val bound = resolveBound(variants, maxDenseWidth)
-    val width = cohortWidth(variants)
-    if (width <= bound)
-      AutoCombine("dense", width, combineSites(variants, bucketWidth))
-    else
-      AutoCombine("long", width, combineLong(variants, bucketWidth))
-  }
+      maxDenseWidth: Long = DeriveFromHeap): AutoCombine =
+    routeByWidth(variants, maxDenseWidth, "long")(
+      combineSites(variants, bucketWidth), combineLong(variants, bucketWidth))
 
-  /** An explicit `maxDenseWidth` wins; the [[DeriveFromHeap]] default
-    * resolves against the running JVM ([[defaultMaxDenseWidth]]). */
-  private def resolveBound(variants: DataFrame, maxDenseWidth: Long): Long =
-    if (maxDenseWidth == DeriveFromHeap)
-      defaultMaxDenseWidth(variants.sparkSession)
-    else maxDenseWidth
+  /** The one width dispatch behind [[combineAuto]], [[genotypeAuto]] and
+    * [[exportAuto]]: `dense` up to the bound, else `wide` under the
+    * `beyond` format. An explicit `maxDenseWidth` wins; the
+    * [[DeriveFromHeap]] default resolves against the running JVM
+    * ([[defaultMaxDenseWidth]]). Only the admitted plan is built. */
+  private def routeByWidth(variants: DataFrame, maxDenseWidth: Long, beyond: String)(
+      dense: => DataFrame, wide: => DataFrame): AutoCombine = {
+    val bound = if (maxDenseWidth == DeriveFromHeap)
+      defaultMaxDenseWidth(variants.sparkSession) else maxDenseWidth
+    val width = cohortWidth(variants)
+    if (width <= bound) AutoCombine("dense", width, dense)
+    else AutoCombine(beyond, width, wide)
+  }
 
   /** The GenotypeGVCFs step — the computation the reference's store
     * exists to enable (`VariantCombiner.java:~8 (unverified)`, per
@@ -485,32 +510,10 @@ object Gvcf {
     * per-site calls assembly. This is the genotype family's long-format
     * core (the [[combinedCalls]] analog): [[genotypeLong]] projects it,
     * [[genotypeGvcf]] rolls it up densely. */
-  private def genotypeCalls(variants: DataFrame, bucketWidth: Long): DataFrame = {
-    val cov = siteCoverage(variants, bucketWidth)
-      .select("contig", "pos", "sample", "kind", "alleles", "gq", "dp", "pl")
-    // merged ref/alts as whole-partition window aggregates over the ONE
-    // shuffled copy of the coverage rows — same r14 rework as
-    // [[combinedCalls]]: the coverage subtree (the corpus-scale stage)
-    // runs once, and the window exchange on the site key is the same
-    // partitioning the final per-site aggregate needs.
-    val wm = Window.partitionBy("contig", "pos")
-    // one select, not chained withColumn: both window aggregates land in
-    // a single WindowExec pass over the shared sort
-    val re = cov
-      .select(cov.columns.map(col) :+
-        min(when(col("kind") === "site", element_at(col("alleles"), 1))).over(wm)
-          .as("ref") :+
-        // collect_SET for the same reason as [[combinedCalls]]: the
-        // wrapping sorted-distinct-flatten is a per-row projection over
-        // the shared window value, so the aggregate must hand it
-        // distinct slices, not one per sample (O(samples²) otherwise).
-        // graft_merged_alts = the former concat(array_sort(array_distinct(
-        // flatten(…))), array(NON_REF)) chain as ONE codegen-native pass
-        // (r22: the HOF chain evaluated interpreted on every coverage row).
-        graft.functions.GvcfExpressions.mergedAlts(collect_set(
-            when(col("kind") === "site",
-              expr("slice(alleles, 2, greatest(size(alleles) - 1, 0))"))).over(wm),
-          Vcf.NonRef).as("alts"): _*)
+  private def genotypeCalls(variants: DataFrame, bucketWidth: Long): DataFrame =
+    // the window exchange on the site key is also the partitioning the
+    // final per-site aggregate needs; the PL remap runs below the join
+    mergedCalls(variants, bucketWidth, "dp", "pl")(_
       .withColumn("malleles", concat(array(col("ref")), col("alts")))
       .withColumn("lall", concat(col("alleles"), array(lit(Vcf.NonRef))))
       // The local-index map + canonical-pair walk + PL remap + argmin +
@@ -525,9 +528,7 @@ object Gvcf {
       .withColumn("gt_new", expr(
         "concat(CAST(pk & 1048575 AS STRING), '/', " +
           "CAST(shiftright(pk, 20) & 1048575 AS STRING))"))
-      .withColumn("gq_new", expr("CAST(shiftright(pk, 40) AS INT)"))
-    re.join(broadcast(sampleNameIndex(variants)), "sample")
-  }
+      .withColumn("gq_new", expr("CAST(shiftright(pk, 40) AS INT)")))
 
   /** LONG-format genotyping — the [[combineLong]] analog for
     * [[genotypeGvcf]]: one O(1) row per (site, covered sample) with the
@@ -559,14 +560,9 @@ object Gvcf {
     * per-site rows up to [[MaxDenseWidth]] samples, the long format
     * beyond, decided from table metadata on the lazy plan. */
   def genotypeAuto(variants: DataFrame, bucketWidth: Long = 64,
-      maxDenseWidth: Long = DeriveFromHeap): AutoCombine = {
-    val bound = resolveBound(variants, maxDenseWidth)
-    val width = cohortWidth(variants)
-    if (width <= bound)
-      AutoCombine("dense", width, genotypeGvcf(variants, bucketWidth))
-    else
-      AutoCombine("long", width, genotypeLong(variants, bucketWidth))
-  }
+      maxDenseWidth: Long = DeriveFromHeap): AutoCombine =
+    routeByWidth(variants, maxDenseWidth, "long")(
+      genotypeGvcf(variants, bucketWidth), genotypeLong(variants, bucketWidth))
 
   /** Deterministic 3-sample synthetic cohort (pure arithmetic — the
     * DuckDB oracle rebuilds it value for value): record j of sample k is
@@ -715,11 +711,12 @@ object Gvcf {
     """g AS (SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS i FROM orders
       |      QUALIFY row_number() OVER (ORDER BY o_orderkey) <= count(*) OVER () // 5)""".stripMargin
 
-  /** The same cohort as [[syntheticVariants]] in DuckDB CTE form
-    * (column names vstart/vend dodge the END keyword). */
-  private[ops] val duckSyntheticV =
+  /** The same cohort as [[syntheticVariants]] in DuckDB CTE form, as
+    * CTE `name` after `g` (column names vstart/vend dodge the END
+    * keyword). */
+  private def duckSyntheticCohort(name: String): String =
     s"""$duckG,
-      |v AS (
+      |$name AS (
       |  SELECT 's' || CAST(i % 3 AS VARCHAR) AS sample,
       |    'chr' || CAST(1 + (i // 3) % 2 AS VARCHAR) AS contig,
       |    (i // 3) * 10 + 1 AS vstart,
@@ -732,6 +729,9 @@ object Gvcf {
       |    CASE WHEN ((i // 3) + i % 3) % 3 >= 2 THEN '0/0'
       |         WHEN ((i // 3) + i % 3) % 2 = 0 THEN '0/1' ELSE '1/1' END AS gt
       |  FROM g)""".stripMargin
+
+  /** [[duckSyntheticCohort]] as the `v` every cohort oracle reads. */
+  private[ops] val duckSyntheticV = duckSyntheticCohort("v")
 
   /** The coverage → merged alleles → remapped genotypes chain (the
     * CombineGVCFs pipeline) in DuckDB CTE form, FROM a preceding `v`
@@ -763,22 +763,70 @@ object Gvcf {
     s"""$duckSyntheticV,
        |$duckCombineChain""".stripMargin
 
+  /** `e AS name`, or for a wide cohort `md5(e) AS name_md5`: an
+    * O(width) cell is digested on BOTH engines, which proves it
+    * value-exact without shipping megabytes through the compare. */
+  private def duckCell(e: String, name: String, digest: Boolean): String =
+    if (digest) s"md5($e) AS ${name}_md5" else s"$e AS $name"
+
+  /** [[duckCell]]'s digest on the Spark side: `name` replaced by
+    * `name_md5`, the md5 of the cell (an array cell joined by `sep`). */
+  private def digested(df: DataFrame, name: String, sep: Option[String] = None): DataFrame =
+    df.withColumn(s"${name}_md5",
+      md5(sep.fold(col(name))(array_join(col(name), _)).cast(BinaryType))).drop(name)
+
+  /** The `format` column the auto oracles prepend: every oracle-checked
+    * scale is under [[MaxDenseWidth]], so the admitted route is always
+    * dense. */
+  private val duckDense = "'dense' AS format, "
+
+  /** `cohort` (CTEs ending in `v`) → [[duckCombineChain]] → one row per
+    * merged site with `cols`: the rollup every combine-chain oracle
+    * ends with. */
+  private def duckSiteRollup(cohort: String, cols: String): String =
+    s"""WITH $cohort,
+       |$duckCombineChain
+       |SELECT $cols
+       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
+       |GROUP BY r.contig, r.pos, m.mref, m.calts
+       |ORDER BY r.contig, r.pos""".stripMargin
+
+  /** [[combineSites]]' oracle over `cohort`: merged ref/alt, covered
+    * count and the sample-ordered remapped calls — whole, or for the
+    * `wide` cohort with a BIGINT count and md5'd calls (the ORDER BY
+    * then starts its own line, as these oracles have always been
+    * spelled). */
+  private def duckCombineSql(cohort: String, wide: Boolean, format: String = ""): String =
+    duckSiteRollup(cohort, s"""${format}r.contig, r.pos, m.mref AS ref,
+       |  array_to_string(m.calts, ',') || ',<NON_REF>' AS alt,
+       |  ${if (wide) "CAST(count(*) AS BIGINT)" else "count(*)"} AS n_samples,
+       |  ${duckCell("array_to_string(list(r.sample || ':' || r.gtm || ':' || " +
+         "CAST(r.gq AS VARCHAR)" + (if (wide) "\n    " else " ") + "ORDER BY r.sample), ';')",
+         "calls", wide)}""".stripMargin)
+
+  /** [[exportLines]]' body line over the chain's merged site
+    * (chr(9) = tab). */
+  private val duckExportLine =
+    """r.contig || chr(9) || CAST(r.pos AS VARCHAR) || chr(9) || '.' || chr(9) ||
+      |  m.mref || chr(9) || array_to_string(m.calts, ',') || ',<NON_REF>' || chr(9) ||
+      |  '.' || chr(9) || 'PASS' || chr(9) ||
+      |  'NS=' || CAST(count(*) AS VARCHAR) || chr(9) || 'GT:GQ' || chr(9) ||
+      |  array_to_string(list(r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), chr(9))""".stripMargin
+
+  /** [[exportLines]]' oracle over `cohort`: the byte-identical line,
+    * md5'd for the `wide` cohort. */
+  private def duckExportSql(cohort: String, wide: Boolean, format: String = ""): String =
+    duckSiteRollup(cohort,
+      s"${format}r.contig, r.pos,\n  ${duckCell(duckExportLine, "line", wide)}")
+
   /** Merged-record combine over the synthetic cohort, oracle-backed: the
     * DuckDB side rebuilds the cohort and performs the same merge (site
     * union, genotype remap via list_position, sample-ordered calls).
     * `calls` is flattened to one ';'-joined string — the driver's compare
     * sorts on every output column and can't sort array cells (r3's only
     * red entry), so no final query schema may carry ARRAY columns. */
-  val combineMerge = Query(
-    "q_combine_merge",
-    s"""WITH $duckCombineCtes
-       |SELECT r.contig, r.pos, m.mref AS ref,
-       |  array_to_string(m.calts, ',') || ',<NON_REF>' AS alt,
-       |  count(*) AS n_samples,
-       |  array_to_string(list(r.sample || ':' || r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), ';') AS calls
-       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-       |GROUP BY r.contig, r.pos, m.mref, m.calts
-       |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
+  val combineMerge = Query("q_combine_merge",
+    duckCombineSql(duckSyntheticV, wide = false)) { (s, d) =>
     combineSites(syntheticVariants(s, cohortN(s, d)))
       .withColumn("calls", array_join(col("calls"), ";"))
   }
@@ -831,21 +879,9 @@ object Gvcf {
     * That is the anti-pattern the store's long format exists to avoid:
     * unbounded cohorts take the long-format combine/genotype family,
     * which the decade drive runs at a 300,000-record cohort. */
-  val combineWide = Query(
-    "q_combine_wide",
-    s"""WITH $duckWideV,
-      |$duckCombineChain
-      |SELECT r.contig, r.pos, m.mref AS ref,
-      |  array_to_string(m.calts, ',') || ',<NON_REF>' AS alt,
-      |  CAST(count(*) AS BIGINT) AS n_samples,
-      |  md5(array_to_string(list(r.sample || ':' || r.gtm || ':' || CAST(r.gq AS VARCHAR)
-      |    ORDER BY r.sample), ';')) AS calls_md5
-      |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-      |GROUP BY r.contig, r.pos, m.mref, m.calts
-      |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
-    combineSites(syntheticVariantsWide(s, wideN(s, d)))
-      .withColumn("calls_md5", md5(array_join(col("calls"), ";").cast(BinaryType)))
-      .drop("calls")
+  val combineWide = Query("q_combine_wide",
+    duckCombineSql(duckWideV, wide = true)) { (s, d) =>
+    digested(combineSites(syntheticVariantsWide(s, wideN(s, d))), "calls", Some(";"))
   }
 
   /** The r17g handoff ENFORCED under the driver's gate: run
@@ -859,18 +895,8 @@ object Gvcf {
     * combine` validates it there) and by GvcfSpec's
     * dense≡long equality. Oracle SQL is [[combineWide]]'s verbatim plus
     * the format literal. */
-  val combineAutoQuery = Query(
-    "q_combine_auto",
-    s"""WITH $duckWideV,
-      |$duckCombineChain
-      |SELECT 'dense' AS format, r.contig, r.pos, m.mref AS ref,
-      |  array_to_string(m.calts, ',') || ',<NON_REF>' AS alt,
-      |  CAST(count(*) AS BIGINT) AS n_samples,
-      |  md5(array_to_string(list(r.sample || ':' || r.gtm || ':' || CAST(r.gq AS VARCHAR)
-      |    ORDER BY r.sample), ';')) AS calls_md5
-      |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-      |GROUP BY r.contig, r.pos, m.mref, m.calts
-      |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
+  val combineAutoQuery = Query("q_combine_auto",
+    duckCombineSql(duckWideV, wide = true, duckDense)) { (s, d) =>
     // the gate pins the dispatch MECHANISM, so it passes the fixed cap:
     // the heap-derived default would make the admitted format (hence the
     // result schema) depend on the gate runner's JVM — a small-heap
@@ -880,10 +906,8 @@ object Gvcf {
     val auto = combineAuto(syntheticVariantsWide(s, wideN(s, d)),
       maxDenseWidth = MaxDenseWidth)
     auto.format match {
-      case "dense" => auto.df
-        .withColumn("calls_md5", md5(array_join(col("calls"), ";").cast(BinaryType)))
-        .drop("calls")
-        .select(lit("dense").as("format"), col("*"))
+      case "dense" =>
+        digested(auto.df, "calls", Some(";")).select(lit("dense").as("format"), col("*"))
       // width-free long rows — reached only above MaxDenseWidth, where
       // no oracle runs (the probe corpus); kept schema-stable per route
       case _ => auto.df.select(lit("long").as("format"), col("*"))
@@ -931,9 +955,8 @@ object Gvcf {
     * regeneration. `raw/` and `comb/` live under ONE parent so the
     * atomic publish covers both. */
   private def incParent(d: String, n: Long): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_inc_v${IncStoreVersion}_n${n}_" +
-      graft.api.contentFingerprint(s"$d/orders.parquet") + "_" +
-      d.replaceAll("[^a-zA-Z0-9]", "_")
+    graft.api.scratchPath(s"inc_v${IncStoreVersion}_n${n}_" +
+      graft.api.contentFingerprint(s"$d/orders.parquet") + "_" + slug(d))
 
   private[graft] def incDir(d: String, which: String, n: Long): String =
     s"${incParent(d, n)}/$which"
@@ -977,9 +1000,8 @@ object Gvcf {
     * collapse via dropDuplicates before re-combining. The oracle replays
     * the FULL 4-sample combine from scratch — a hash match proves
     * incremental == full recompute. */
-  val combineIncremental = Query(
-    "q_combine_incremental",
-    s"""WITH $duckSyntheticV,
+  val combineIncremental = Query("q_combine_incremental",
+    duckCombineSql(s"""${duckSyntheticCohort("v3")},
        |dn AS (SELECT count(*) AS n FROM g),
        |delta AS (
        |  SELECT 's3' AS sample,
@@ -991,30 +1013,8 @@ object Gvcf {
        |    CAST(((i // 3) * 11) % 90 + 10 AS INT) AS gq,
        |    '0/1' AS gt
        |  FROM g, dn WHERE i % 3 = 0 AND i < 3 * (n // 30)),
-       |v4 AS (SELECT * FROM v UNION ALL SELECT * FROM delta),
-       |sites AS (SELECT DISTINCT contig, vstart AS pos FROM v4 WHERE kind = 'site'),
-       |cov AS (
-       |  SELECT s.contig, s.pos, v4.sample, v4.kind, v4.ref, v4.alt, v4.gt, v4.gq
-       |  FROM sites s JOIN v4 ON v4.contig = s.contig AND s.pos BETWEEN v4.vstart AND v4.vend),
-       |merged AS (
-       |  SELECT contig, pos, min(ref) AS mref,
-       |    list_sort(list_distinct(list(alt))) AS calts
-       |  FROM cov WHERE kind = 'site' GROUP BY contig, pos),
-       |remap AS (
-       |  SELECT c.contig, c.pos, c.sample,
-       |    CASE WHEN c.kind = 'block' THEN c.gt
-       |         ELSE array_to_string(list_transform(string_split(c.gt, '/'), g2 ->
-       |           CASE WHEN g2 = '0' THEN '0'
-       |                ELSE CAST(list_position(m.calts, c.alt) AS VARCHAR) END), '/')
-       |    END AS gtm, c.gq
-       |  FROM cov c JOIN merged m ON c.contig = m.contig AND c.pos = m.pos)
-       |SELECT r.contig, r.pos, m.mref AS ref,
-       |  array_to_string(m.calts, ',') || ',<NON_REF>' AS alt,
-       |  count(*) AS n_samples,
-       |  array_to_string(list(r.sample || ':' || r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), ';') AS calls
-       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-       |GROUP BY r.contig, r.pos, m.mref, m.calts
-       |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
+       |v AS (SELECT * FROM v3 UNION ALL SELECT * FROM delta)""".stripMargin,
+      wide = false)) { (s, d) =>
     val (rawDir, combDir) = incrementalStore(s, d)
     val delta = deltaSample(s, cohortN(s, d))
     // touched buckets from the delta — K rows to the driver. distinct()
@@ -1106,23 +1106,27 @@ object Gvcf {
       |    least(spl[2] - spl[1], 99) AS gq_new
       |  FROM re4)""".stripMargin
 
+  /** [[genotypeGvcf]]'s oracle over `cohort`: the re-genotyped site
+    * rollup, with the calls md5'd for the `wide` cohort. */
+  private def duckGenotypeSql(cohort: String, wide: Boolean): String =
+    s"""WITH $cohort,
+       |$duckGenotypeCtes
+       |SELECT contig, pos, mref AS ref, array_to_string(calts, ',') AS alt,
+       |  CAST(count(*) AS BIGINT) AS n_samples,
+       |  CAST(sum(dp) AS BIGINT) AS sum_dp,
+       |  ${duckCell("array_to_string(list(sample || ':' || gt_new || ':' || " +
+         "CAST(gq_new AS VARCHAR)\n    ORDER BY sample), ';')", "calls", wide)}
+       |FROM calls
+       |GROUP BY contig, pos, mref, calts
+       |ORDER BY contig, pos""".stripMargin
+
   /** GenotypeGVCFs over the PL-bearing cohort. The oracle replays the
     * ENTIRE pipeline independently in DuckDB list SQL — coverage join,
     * allele union, canonical-order PL remap through the local-index map,
     * argmin re-genotype, GQ from the two smallest likelihoods — so a
     * hash match proves the remap math, not just the plumbing. */
-  val genotypeGvcfQuery = Query(
-    "q_genotype_gvcf",
-    s"""WITH $duckSyntheticV,
-       |$duckGenotypeCtes
-       |SELECT contig, pos, mref AS ref, array_to_string(calts, ',') AS alt,
-       |  CAST(count(*) AS BIGINT) AS n_samples,
-       |  CAST(sum(dp) AS BIGINT) AS sum_dp,
-       |  array_to_string(list(sample || ':' || gt_new || ':' || CAST(gq_new AS VARCHAR)
-       |    ORDER BY sample), ';') AS calls
-       |FROM calls
-       |GROUP BY contig, pos, mref, calts
-       |ORDER BY contig, pos""".stripMargin) { (s, d) =>
+  val genotypeGvcfQuery = Query("q_genotype_gvcf",
+    duckGenotypeSql(duckSyntheticV, wide = false)) { (s, d) =>
     genotypeGvcf(syntheticVariantsPl(s, cohortN(s, d)))
   }
 
@@ -1139,22 +1143,27 @@ object Gvcf {
     * BOTH engines per the q_combine_wide pattern — a 3,000-sample calls
     * cell is ~40 KB; the digest proves it value-exact without shipping
     * megabytes through the compare. */
-  val genotypeWide = Query(
-    "q_genotype_wide",
-    s"""WITH $duckWideV,
-       |$duckGenotypeCtes
-       |SELECT contig, pos, mref AS ref, array_to_string(calts, ',') AS alt,
-       |  CAST(count(*) AS BIGINT) AS n_samples,
-       |  CAST(sum(dp) AS BIGINT) AS sum_dp,
-       |  md5(array_to_string(list(sample || ':' || gt_new || ':' || CAST(gq_new AS VARCHAR)
-       |    ORDER BY sample), ';')) AS calls_md5
-       |FROM calls
-       |GROUP BY contig, pos, mref, calts
-       |ORDER BY contig, pos""".stripMargin) { (s, d) =>
-    genotypeGvcf(syntheticVariantsWidePl(s, wideN(s, d)))
-      .withColumn("calls_md5", md5(col("calls").cast(BinaryType)))
-      .drop("calls")
+  val genotypeWide = Query("q_genotype_wide",
+    duckGenotypeSql(duckWideV, wide = true)) { (s, d) =>
+    digested(genotypeGvcf(syntheticVariantsWidePl(s, wideN(s, d))), "calls")
   }
+
+  /** The export's per-site call entries `es` — (sample, gq, "gt:gq")
+    * sorted — aggregated by `rollup`, then `esd`: ONE entry per (site,
+    * sample). A sample with two records covering the same site
+    * (overlapping gVCF blocks in messy real input) keeps its
+    * max-(gq, call) record via the sorted adjacent-dedup —
+    * deterministic, pure post-aggregation array work, no extra shuffle.
+    * NS= counts the DEDUPED entries for the same reason. Shared by
+    * [[exportLines]] (per site) and [[exportChunks]] (per site and
+    * chunk). */
+  private def exportEntries(rollup: Column => DataFrame): DataFrame =
+    rollup(sort_array(collect_list(struct(col("sample").as("k"),
+      coalesce(col("gq"), lit(Int.MinValue)).as("g"),
+      concat(coalesce(col("gtm"), lit("./.")), lit(":"),
+        coalesce(col("gq").cast(StringType), lit("."))).as("call")))).as("es"))
+      .withColumn("esd", expr(
+        "filter(es, (x, i) -> i = size(es) - 1 OR es[i + 1].k != x.k)"))
 
   /** The reference's output path (SURVEY §3.2 `load → collect →
     * string-format`): merged combine records rendered as gVCF body lines
@@ -1171,18 +1180,7 @@ object Gvcf {
     // sample → "gt:gq" map per site, so assembling combineSites' ordered
     // call strings (plus its global sort) only to split them apart again
     // would be wasted work — build the map entries directly.
-    mergedSiteAgg(combinedCalls(variants, bucketWidth),
-      sort_array(collect_list(struct(col("sample").as("k"),
-        coalesce(col("gq"), lit(Int.MinValue)).as("g"),
-        concat(coalesce(col("gtm"), lit("./.")), lit(":"),
-          coalesce(col("gq").cast(StringType), lit("."))).as("call")))).as("es"))
-      // ONE row per (site, sample): a sample with two records covering
-      // the same site (overlapping gVCF blocks in messy real input)
-      // keeps its max-(gq, call) record via the sorted adjacent-dedup —
-      // deterministic, pure post-aggregation array work, no extra
-      // shuffle. NS= counts the DEDUPED entries for the same reason.
-      .withColumn("esd", expr(
-        "filter(es, (x, i) -> i = size(es) - 1 OR es[i + 1].k != x.k)"))
+    exportEntries(mergedSiteAgg(combinedCalls(variants, bucketWidth), _))
       .crossJoin(broadcast(samplesArr))
       // Per-sample calls by SORTED MERGE, not map probe: the earlier
       // shape built a per-site map and ran element_at(m, sample) for
@@ -1206,18 +1204,8 @@ object Gvcf {
 
   /** gVCF export over the synthetic cohort; the oracle builds the
     * byte-identical lines (chr(9) = tab) from the shared combine CTEs. */
-  val gvcfExport = Query(
-    "q_gvcf_export",
-    s"""WITH $duckCombineCtes
-       |SELECT r.contig, r.pos,
-       |  r.contig || chr(9) || CAST(r.pos AS VARCHAR) || chr(9) || '.' || chr(9) ||
-       |  m.mref || chr(9) || array_to_string(m.calts, ',') || ',<NON_REF>' || chr(9) ||
-       |  '.' || chr(9) || 'PASS' || chr(9) ||
-       |  'NS=' || CAST(count(*) AS VARCHAR) || chr(9) || 'GT:GQ' || chr(9) ||
-       |  array_to_string(list(r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), chr(9)) AS line
-       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-       |GROUP BY r.contig, r.pos, m.mref, m.calts
-       |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
+  val gvcfExport = Query("q_gvcf_export",
+    duckExportSql(duckSyntheticV, wide = false)) { (s, d) =>
     exportLines(syntheticVariants(s, cohortN(s, d))).orderBy("contig", "pos")
   }
 
@@ -1228,22 +1216,9 @@ object Gvcf {
     * per-row string work over the combine output plus one broadcast
     * sample list — width grows the rendered string, never the shuffle
     * count. Lines md5'd on both engines (q_combine_wide pattern). */
-  val exportWide = Query(
-    "q_export_wide",
-    s"""WITH $duckWideV,
-       |$duckCombineChain
-       |SELECT r.contig, r.pos,
-       |  md5(r.contig || chr(9) || CAST(r.pos AS VARCHAR) || chr(9) || '.' || chr(9) ||
-       |  m.mref || chr(9) || array_to_string(m.calts, ',') || ',<NON_REF>' || chr(9) ||
-       |  '.' || chr(9) || 'PASS' || chr(9) ||
-       |  'NS=' || CAST(count(*) AS VARCHAR) || chr(9) || 'GT:GQ' || chr(9) ||
-       |  array_to_string(list(r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), chr(9))) AS line_md5
-       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-       |GROUP BY r.contig, r.pos, m.mref, m.calts
-       |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
-    exportLines(syntheticVariantsWide(s, wideN(s, d)))
-      .withColumn("line_md5", md5(col("line").cast(BinaryType)))
-      .drop("line")
+  val exportWide = Query("q_export_wide",
+    duckExportSql(duckWideV, wide = true)) { (s, d) =>
+    digested(exportLines(syntheticVariantsWide(s, wideN(s, d))), "line")
       .orderBy("contig", "pos")
   }
 
@@ -1283,17 +1258,10 @@ object Gvcf {
     // per-(site, chunk) covered entries with the exportLines dedup: a
     // sample's duplicate records share its sample_idx, hence its chunk,
     // so the max-(gq, call) adjacent-dedup is chunk-local by construction
-    val cellEntries = combinedCalls(variants, bucketWidth)
-      .withColumn("chunk_idx", chunkOf)
-      .groupBy("contig", "pos", "chunk_idx")
-      .agg(max(col("ref")).as("ref"),
-        array_join(max(col("alts")), ",").as("alt"),
-        sort_array(collect_list(struct(col("sample").as("k"),
-          coalesce(col("gq"), lit(Int.MinValue)).as("g"),
-          concat(coalesce(col("gtm"), lit("./.")), lit(":"),
-            coalesce(col("gq").cast(StringType), lit("."))).as("call")))).as("es"))
-      .withColumn("esd", expr(
-        "filter(es, (x, i) -> i = size(es) - 1 OR es[i + 1].k != x.k)"))
+    val cellEntries = exportEntries(es => combinedCalls(variants, bucketWidth)
+        .withColumn("chunk_idx", chunkOf)
+        .groupBy("contig", "pos", "chunk_idx")
+        .agg(max(col("ref")).as("ref"), array_join(max(col("alts")), ",").as("alt"), es))
       .select("contig", "pos", "chunk_idx", "ref", "alt", "esd")
     // site header facts ride the chunk rows (ref/alt are site-constant;
     // NS sums the deduped coverage across chunks) — chunk-count scale
@@ -1340,15 +1308,10 @@ object Gvcf {
     * the LAZY plan ([[cohortWidth]]), before any execution. */
   def exportAuto(variants: DataFrame, bucketWidth: Long = 64,
       maxDenseWidth: Long = DeriveFromHeap,
-      chunkSamples: Int = 10000): AutoCombine = {
-    val bound = resolveBound(variants, maxDenseWidth)
-    val width = cohortWidth(variants)
-    if (width <= bound)
-      AutoCombine("dense", width, exportLines(variants, bucketWidth))
-    else
-      AutoCombine("chunked", width,
-        exportChunks(variants, bucketWidth, chunkSamples))
-  }
+      chunkSamples: Int = 10000): AutoCombine =
+    routeByWidth(variants, maxDenseWidth, "chunked")(
+      exportLines(variants, bucketWidth),
+      exportChunks(variants, bucketWidth, chunkSamples))
 
   /** The export handoff ENFORCED under the driver's gate (the
     * q_combine_auto pattern): [[exportAuto]] over the wide cohort emits
@@ -1358,34 +1321,19 @@ object Gvcf {
     * branch is exercised by `graft.WidthProbe export` at width 1,002,000
     * (→ chunked, formula-validated) and by GvcfSpec's
     * stitch-equality pins. */
-  val exportAutoQuery = Query(
-    "q_export_auto",
-    s"""WITH $duckWideV,
-       |$duckCombineChain
-       |SELECT 'dense' AS format, r.contig, r.pos,
-       |  md5(r.contig || chr(9) || CAST(r.pos AS VARCHAR) || chr(9) || '.' || chr(9) ||
-       |  m.mref || chr(9) || array_to_string(m.calts, ',') || ',<NON_REF>' || chr(9) ||
-       |  '.' || chr(9) || 'PASS' || chr(9) ||
-       |  'NS=' || CAST(count(*) AS VARCHAR) || chr(9) || 'GT:GQ' || chr(9) ||
-       |  array_to_string(list(r.gtm || ':' || CAST(r.gq AS VARCHAR) ORDER BY r.sample), chr(9))) AS line_md5
-       |FROM remap r JOIN merged m ON r.contig = m.contig AND r.pos = m.pos
-       |GROUP BY r.contig, r.pos, m.mref, m.calts
-       |ORDER BY r.contig, r.pos""".stripMargin) { (s, d) =>
+  val exportAutoQuery = Query("q_export_auto",
+    duckExportSql(duckWideV, wide = true, duckDense)) { (s, d) =>
     // fixed cap for the same reason as q_combine_auto: the gate's
     // format/schema must not depend on the gate runner's heap
     val auto = exportAuto(syntheticVariantsWide(s, wideN(s, d)),
       maxDenseWidth = MaxDenseWidth)
     auto.format match {
-      case "dense" => auto.df
-        .withColumn("line_md5", md5(col("line").cast(BinaryType)))
-        .drop("line")
+      case "dense" => digested(auto.df, "line")
         .select(lit("dense").as("format"), col("*"))
         .orderBy("contig", "pos")
       // width-free chunk rows — reached only above MaxDenseWidth, where
       // no oracle runs (the probe corpus); kept schema-stable per route
-      case _ => auto.df
-        .withColumn("part_md5", md5(col("part").cast(BinaryType)))
-        .drop("part")
+      case _ => digested(auto.df, "part")
         .select(lit("chunked").as("format"), col("*"))
         .orderBy("contig", "pos", "chunk_idx")
     }
@@ -1768,13 +1716,14 @@ object Gvcf {
     tiTvByContig(syntheticVariants(s, cohortN(s, d)))
   }
 
-  /** Per-(sample, contig) covered breadth: union the sample's intervals
-    * (gaps-and-islands — a new island starts where `start` exceeds the
-    * running max of previous ends + 1, so overlapping AND merely-adjacent
-    * records coalesce), then sum island extents. The window partitions on
-    * (sample, contig) — bounded state per key, no all-pairs work. */
-  def sampleBreadth(variants: DataFrame): DataFrame = {
-    val w = Window.partitionBy("sample", "contig").orderBy("start", "end")
+  /** The interval union of `variants` within each `keys` group, one
+    * (keys, island, lo, hi) row per island (gaps-and-islands — a new
+    * island starts where `start` exceeds the running max of previous
+    * ends + 1, so overlapping AND merely-adjacent records coalesce). The
+    * window partitions on `keys` — bounded state per key, no all-pairs
+    * work. Shared by [[sampleBreadth]] and [[coverageGaps]]. */
+  private def islands(variants: DataFrame, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy("start", "end")
     val maxPrevEnd = max(col("end"))
       .over(w.rowsBetween(Window.unboundedPreceding, -1))
     val newIsland =
@@ -1782,13 +1731,18 @@ object Gvcf {
     variants
       .withColumn("island", sum(newIsland)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("sample", "contig", "island")
+      .groupBy((keys :+ "island").map(col): _*)
       .agg(min(col("start")).as("lo"), max(col("end")).as("hi"))
+  }
+
+  /** Per-(sample, contig) covered breadth: union the sample's intervals
+    * ([[islands]]), then sum island extents. */
+  def sampleBreadth(variants: DataFrame): DataFrame =
+    islands(variants, "sample", "contig")
       .groupBy("sample", "contig")
       .agg(sum(col("hi") - col("lo") + 1).as("breadth"),
         count(lit(1)).as("n_islands"))
       .orderBy("sample", "contig")
-  }
 
   val breadth = Query(
     "q_sample_breadth",
@@ -1917,18 +1871,8 @@ object Gvcf {
     * but pooled across samples and inverted (island k's end + 1 up to
     * island k+1's start - 1). O(records), no per-base work. */
   def coverageGaps(variants: DataFrame): DataFrame = {
-    val w = Window.partitionBy("contig").orderBy("start", "end")
-    val maxPrevEnd = max(col("end"))
-      .over(w.rowsBetween(Window.unboundedPreceding, -1))
-    val newIsland =
-      when(maxPrevEnd.isNull || col("start") > maxPrevEnd + 1, 1L).otherwise(0L)
-    val islands = variants
-      .withColumn("island", sum(newIsland)
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("contig", "island")
-      .agg(min(col("start")).as("lo"), max(col("end")).as("hi"))
     val wI = Window.partitionBy("contig").orderBy("lo")
-    islands
+    islands(variants, "contig")
       .withColumn("next_lo", lead(col("lo"), 1).over(wI))
       .filter(col("next_lo").isNotNull && col("next_lo") > col("hi") + 1)
       .select(col("contig"), (col("hi") + 1).as("gap_start"),

@@ -110,10 +110,9 @@ object Ivf {
   // keyed by CONTENT fingerprint, not just the sanitized path: distinct
   // datasets can't collide on one cache dir, and regenerated fixture
   // data can't silently serve a stale index
-  private def indexDir(d: String): String = {
-    val fp = graft.api.contentFingerprint(s"$d/embeddings.parquet")
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${d.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
-  }
+  private def indexDir(d: String): String =
+    graft.api.scratchPath(s"ivf_${graft.api.slug(d)}_" +
+      graft.api.contentFingerprint(s"$d/embeddings.parquet"))
 
   /** Materialize the index once per (session, sf): `vectors/` partitioned
     * by bucket (the inverted lists), `centroids/` alongside — published

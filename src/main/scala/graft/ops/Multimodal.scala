@@ -100,8 +100,8 @@ object Multimodal {
     * tested, not stressed). Executor-side writes — local-FS harness
     * idiom, same caveat as `Sources.partitionedOrdersDf`. */
   def ppmFileDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val fp = graft.api.contentFingerprint(s"$d/documents.parquet")
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ppm_${d.replaceAll("[^a-zA-Z0-9]", "_")}_$fp"
+    val dir = graft.api.scratchPath(s"ppm_${graft.api.slug(d)}_" +
+      graft.api.contentFingerprint(s"$d/documents.parquet"))
     // atomic publish (buildOnce): a concurrent binaryFile reader can
     // never list a partially-written image set
     graft.api.buildOnce(dir, marker = Some("_SUCCESS")) { tmp =>

@@ -18,8 +18,16 @@ import graft.api._
   */
 object Sources {
 
-  private def outDir(s: SparkSession, d: String, fmt: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_src_${fmt}_${d.replaceAll("[^a-zA-Z0-9]", "_")}"
+  /** The overwrite-then-read output `fmt` of the dataset at `d`, in
+    * this JVM's output root ([[graft.api.outputPath]]). */
+  private def outDir(d: String, fmt: String): String =
+    graft.api.outputPath(s"src_${fmt}_${slug(d)}")
+
+  /** The build-once fixture `name` of the dataset at `d`, keyed by the
+    * content fingerprint of its source table. */
+  private def fixtureDir(d: String, name: String, srcTable: String): String =
+    graft.api.scratchPath(s"src_${name}_${slug(d)}_" +
+      graft.api.contentFingerprint(s"$d/$srcTable.parquet"))
 
   /** Build-once store directories for the store READ-path queries
     * (scan/project/asof/delete). The generational builds are pure
@@ -35,9 +43,7 @@ object Sources {
     * operator it measures.) */
   private def cachedStore(s: SparkSession, d: String, name: String,
       srcTable: String)(build: String => Unit): String = {
-    val fp = graft.api.contentFingerprint(s"$d/$srcTable.parquet")
-    graft.api.buildOnce(s"${outDir(s, d, name)}_$fp",
-      marker = Some("_MANIFEST"))(build)
+    graft.api.buildOnce(fixtureDir(d, name, srcTable), marker = Some("_MANIFEST"))(build)
   }
 
   /** Shared slice: exact-integer projection of lineitem. */
@@ -78,7 +84,7 @@ object Sources {
     if (textSliced(fmt))
       oracleSlice.replace("FROM lineitem", "FROM lineitem WHERE l_orderkey % 10 = 0")
     else oracleSlice) { (s, d) =>
-    val dir = outDir(s, d, fmt)
+    val dir = outDir(d, fmt)
     // full session parallelism for the write (r2 verdict: coalesce(4)
     // serialized the I/O to 4 tasks on a 32-core box)
     val src = if (textSliced(fmt)) slice(s, d).filter(expr("l_orderkey % 10 = 0"))
@@ -141,8 +147,7 @@ object Sources {
     * keyed (a regenerated orders.parquet rebuilds) and atomically
     * published like every other cached artifact. */
   def partitionedOrdersDf(s: SparkSession, d: String): DataFrame = {
-    val fp = graft.api.contentFingerprint(s"$d/orders.parquet")
-    val dir = graft.api.buildOnce(s"${outDir(s, d, "part_orders")}_$fp",
+    val dir = graft.api.buildOnce(fixtureDir(d, "part_orders", "orders"),
       marker = Some("_SUCCESS")) { tmp =>
       tbl(s, d, "orders")
         .withColumn("y", year(col("o_orderdate")).cast(LongType))
@@ -177,21 +182,21 @@ object Sources {
     * the layout that makes fact-fact joins shuffle-free at 100 TB. */
   def bucketedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     graft.ScratchObserver.touch() // catalog-backed scratch choke point
-    val suf = d.replaceAll("[^a-zA-Z0-9]", "_")
+    val suf = slug(d)
     val (liName, ordName) = (s"graft_li_bkt_$suf", s"graft_ord_bkt_$suf")
     if (!s.catalog.tableExists(liName)) {
       tbl(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
         .repartition(8, col("l_orderkey")) // align tasks with buckets: 8 files, not tasks×8
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", outDir(s, d, "bkt_li")).mode("overwrite").saveAsTable(liName)
+        .option("path", outDir(d, "bkt_li")).mode("overwrite").saveAsTable(liName)
     }
     if (!s.catalog.tableExists(ordName)) {
       tbl(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
         .repartition(8, col("o_orderkey"))
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", outDir(s, d, "bkt_ord")).mode("overwrite").saveAsTable(ordName)
+        .option("path", outDir(d, "bkt_ord")).mode("overwrite").saveAsTable(ordName)
     }
     (s.table(liName), s.table(ordName))
   }
@@ -230,7 +235,7 @@ object Sources {
       |  CAST(sum(l_orderkey) AS BIGINT) AS sum_key
       |FROM lineitem GROUP BY l_returnflag
       |ORDER BY payload""".stripMargin) { (s, d) =>
-    val dir = outDir(s, d, "sink_store")
+    val dir = outDir(d, "sink_store")
     tbl(s, d, "lineitem")
       .select(col("l_orderkey").as("key"), col("l_returnflag").as("payload"))
       .repartitionByRange(8, col("key")).sortWithinPartitions("key")
@@ -374,7 +379,7 @@ object Sources {
       |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS revenue
       |FROM orders
       |GROUP BY prio ORDER BY prio""".stripMargin) { (s, d) =>
-    val dir = outDir(s, d, "evolve")
+    val dir = outDir(d, "evolve")
     val o = tbl(s, d, "orders")
     o.filter(year(col("o_orderdate")) < 1995)
       .select(col("o_orderkey"), col("o_totalprice"))

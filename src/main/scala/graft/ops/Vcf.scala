@@ -176,8 +176,7 @@ object Vcf {
   private[ops] val SyntheticFormatVersion = 3
 
   private def vcfDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_vcf_v${SyntheticFormatVersion}_" +
-      d.replaceAll("[^a-zA-Z0-9]", "_")
+    graft.api.scratchPath(s"vcf_v${SyntheticFormatVersion}_${graft.api.slug(d)}")
 
   /** Write-once synthetic gVCF (headers + 2000 body lines) per (session,
     * sf), atomically published ([[graft.api.buildOnce]]). */

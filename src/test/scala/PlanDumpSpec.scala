@@ -28,6 +28,16 @@ class PlanDumpSpec extends AnyFunSuite {
       "Location: InMemoryFileIndex [file:/tmp/graft_src_store__data_<fingerprint>/part-00000-<id>.parquet]")
   }
 
+  test("normalise masks the JVM's output root and the source line of a call site") {
+    def plan(root: String, line: Int) =
+      s"Location: InMemoryFileIndex [file:/tmp/graft_run_$root/graft_src_bkt_li__data_sf0_1]\n" +
+        s"Arguments: [sample#8], MapPartitionsRDD[1] at localCheckpoint at Gvcf.scala:$line, ExistingRDD"
+    val n = PlanDump.normalise(plan("8164417096043421133", 1044))
+    assert(n == PlanDump.normalise(plan("123456789012", 1030)))
+    assert(n == "Location: InMemoryFileIndex [file:/tmp/graft_run_<id>/graft_src_bkt_li__data_sf0_1]\n" +
+      "Arguments: [sample#1], MapPartitionsRDD[1] at localCheckpoint at Gvcf.scala:<line>, ExistingRDD")
+  }
+
   test("cut keeps whole lines up to the budget") {
     val line = "x" * 99 + "\n"
     assert(PlanDump.cut(line * 45) == line * 45)

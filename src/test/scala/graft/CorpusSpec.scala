@@ -48,10 +48,20 @@ class CorpusSpec extends SparkSpec {
         "part" -> "p_partkey", "supplier" -> "s_suppkey", "events" -> "event_id",
         "documents" -> "doc_id", "embeddings" -> "vec_id"))
       assert(tbl("decade", t).select(k).distinct().count() == tbl("decade", t).count(), s"$t.$k")
-    def orphans(fact: String, fk: String, dim: String, pk: String): Long =
-      tbl("decade", fact).join(tbl("decade", dim), col(fk) === col(pk), "left_anti").count()
-    assert(orphans("lineitem", "l_orderkey", "orders", "o_orderkey") == 0L)
-    assert(orphans("orders", "o_custkey", "customer", "c_custkey") == 0L)
+    assert(orphans("decade", "lineitem", "l_orderkey", "orders", "o_orderkey") == 0L)
+    assert(orphans("decade", "orders", "o_custkey", "customer", "c_custkey") == 0L)
+  }
+
+  /** Rows of `fact` in corpus `kind` whose `fk` matches no `dim.pk`. */
+  private def orphans(kind: String, fact: String, fk: String, dim: String, pk: String): Long =
+    tbl(kind, fact).join(tbl(kind, dim), col(fk) === col(pk), "left_anti").count()
+
+  test("the century resolves every copy's order, customer, part and supplier keys") {
+    for ((fact, fk, dim, pk) <- Seq(("lineitem", "l_orderkey", "orders", "o_orderkey"),
+        ("orders", "o_custkey", "customer", "c_custkey"),
+        ("lineitem", "l_partkey", "part", "p_partkey"),
+        ("lineitem", "l_suppkey", "supplier", "s_suppkey")))
+      assert(orphans("century", fact, fk, dim, pk) == 0L, s"$fact.$fk")
   }
 
   test("skew10 puts 27–33% of orders on its hot customer") {

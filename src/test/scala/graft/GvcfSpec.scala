@@ -352,21 +352,26 @@ class GvcfSpec extends SparkSpec {
   test("the dense admission bound derives from the heap and caps at 300k " +
       "(r17e coefficient)") {
     val mb = 1024L * 1024
-    // the r17e bracket endpoints at 32 slots: the 4.8 GB heap that
-    // OOM'd the 300k combine must NOT admit it; the 9.6 GB green heap
-    // admits exactly the measured green width (cap binds just above)
-    assert(Gvcf.derivedMaxDenseWidth(4800 * mb, 32) == 153600L)
-    assert(Gvcf.derivedMaxDenseWidth(9600 * mb, 32) == 300000L)
+    // the r17e bracket endpoints at 32 slots, less the 1 GiB reserve:
+    // the 4.8 GB heap that OOM'd the 300k combine must NOT admit it,
+    // and the bound stays under the 9.6 GB green width
+    assert(Gvcf.derivedMaxDenseWidth(4800 * mb, 32) == 120832L)
+    assert(Gvcf.derivedMaxDenseWidth(9600 * mb, 32) == 274432L)
     // monotone in heap, anti-monotone in slots, capped
     assert(Gvcf.derivedMaxDenseWidth(24L * 1024 * mb, 32) == Gvcf.MaxDenseWidth)
-    assert(Gvcf.derivedMaxDenseWidth(4800 * mb, 64) == 76800L)
-    assert(Gvcf.derivedMaxDenseWidth(2400 * mb, 32) == 76800L)
+    assert(Gvcf.derivedMaxDenseWidth(4800 * mb, 64) == 60416L)
+    // the small-heap floor: 2400m derived 76,800 before the reserve,
+    // and that combine ran out of heap; a heap at the reserve admits
+    // nothing dense
+    assert(Gvcf.derivedMaxDenseWidth(2400 * mb, 32) == 44032L)
+    assert(Gvcf.derivedMaxDenseWidth(Gvcf.HeapReserveBytes, 32) == 0L)
     // an admitted width always gets at least the measured-green
-    // per-sample budget, whatever the inputs
+    // per-sample budget out of the heap past the reserve, whatever the
+    // inputs
     for (heap <- Seq(1L, 4L, 16L, 64L).map(_ * 1024 * mb); slots <- Seq(1, 8, 32)) {
       val w = Gvcf.derivedMaxDenseWidth(heap, slots)
-      assert(w <= Gvcf.MaxDenseWidth &&
-        (w == Gvcf.MaxDenseWidth || w * slots * Gvcf.BytesPerSampleSlot <= heap))
+      assert(w <= Gvcf.MaxDenseWidth && (w == Gvcf.MaxDenseWidth ||
+        w * slots * Gvcf.BytesPerSampleSlot <= math.max(0L, heap - Gvcf.HeapReserveBytes)))
     }
     // the autos resolve the sentinel default against THIS JVM: widths
     // at the derived bound route dense, one past it route long/chunked

@@ -101,6 +101,22 @@ class ToolsSpec extends SparkSpec {
       s"derive wide cohorts from graft.ops.Gvcf.syntheticVariantsWide: $files")
   }
 
+  test("the merged-alts window appears once in src/main: one merged site header") {
+    val hits = uses("GvcfExpressions.mergedAlts(")
+    assert(hits.map(_._1) == Seq("Gvcf.scala"),
+      s"build the merged site header with Gvcf.mergedCalls: $hits")
+  }
+
+  test("the combine-chain CTE appears once in Gvcf: one CombineGVCFs oracle") {
+    val hits = uses("list_position(m.calts").filter(_._1 == "Gvcf.scala")
+    assert(hits.size == 1, s"build combine oracles on Gvcf.duckCombineChain: $hits")
+  }
+
+  test("no file under ops reads java.io.tmpdir itself") {
+    val files = uses("java.io.tmpdir", "src/main/scala/graft/ops").map(_._1).distinct
+    assert(files.isEmpty, s"name scratch paths with api.scratchPath or api.outputPath: $files")
+  }
+
   test("no Scaladoc block is directly followed by another") {
     // the first of two stacked blocks documents nothing
     val stacked = mainSources("src/main/scala").flatMap { f =>

@@ -9,9 +9,10 @@ package graft
   * EITHER direction:
   *
   *   - `java.io.tmpdir` is swapped to a FRESH directory for the drive
-  *     (every ops scratch path — `graft_src_*`, `graft_ivf_*`,
-  *     `graft_cc_*`, `graft_inc_*`, `graft_vcf_*`, `graft_ppm_*`,
-  *     `graft_sorted_write_*` — derives from the property at call time),
+  *     (every ops scratch path — `api.scratchPath`'s `graft_src_*`,
+  *     `graft_ivf_*`, `graft_cc_*`, `graft_inc_*`, `graft_vcf_*`,
+  *     `graft_ppm_*`, and `api.outputPath`'s per-JVM `graft_run_*` root —
+  *     derives from the property at call time),
   *     so every build-once cache MISSES and every write-if-absent guard
   *     fires: the drive is hermetic, independent of what earlier suites
   *     or sessions left warm.
