@@ -3,33 +3,49 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 
-import scala.util.{Failure, Try}
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, XxHash64}
 
-/** The one measurement loop of the evidence tools: per query, the
+/** One measured run of [[Audit]]: `name` labels its record, the probes
+  * of one `group` compute one logical result (so their checksums must
+  * agree), `confs` hold for this run only, and `plan` builds the query
+  * from the session and the corpus directory. */
+final case class Probe(name: String, group: String, confs: Map[String, String],
+    plan: (SparkSession, String) => DataFrame)
+
+object Probe {
+
+  /** The declared query `name`, in a group of its own. */
+  def query(name: String): Probe = Probe(name, name, Map.empty,
+    SparkEntry.queries.getOrElse(name, throw new IllegalArgumentException(s"unknown query: $name")))
+}
+
+/** The one evidence main and measurement loop: per probe, the
   * construction and Catalyst floor, a cold and a steady execution of the
   * query's own plan at full width, an order-independent checksum of the
   * result, and the steady pass's listener counters.
   *
-  *   sbt "runMain graft.Audit <sfDir> [q … | @shuffle | @dup | @spill | @century] [--expect FILE]"
+  *   sbt "runMain graft.Audit <sfDir> [q … | @set …] [--expect FILE]"
   *
-  * No query names audits every declared query; `@name` expands to one of
-  * the [[Sets]]. The session has `$SPARK_GRAFT_CPUS` slots (default 32),
-  * runs one warm-up query and caches no tables. Records go to stdout as
-  * JSON lines and to AUDIT.json (overwritten) under a header with `sf`,
-  * `cpus` and `heap_mb`. `--expect FILE` fails the run unless every
-  * checksum equals the one an earlier AUDIT.json holds for that query:
-  * the gate of a `-Dspark.*` A/B such as a starved heap
-  * (`SPARK_DRIVER_MEM=1200m`, `-Dspark.memory.fraction=0.15`), which may
-  * change throughput, never results. A query that throws is reported and
-  * the run exits non-zero after the others have run. */
+  * No names audits every declared query; `@name` expands to one of the
+  * [[Sets]]. Every name in `$SPARK_GRAFT_SKIP` (comma-separated) is left
+  * out of the list. The session has `$SPARK_GRAFT_CPUS` slots (default
+  * 32), runs one warm-up query and caches no tables. Records go to
+  * stdout as JSON lines and to AUDIT.json (overwritten) under a header
+  * with `sf`, `cpus` and `heap_mb`. The run exits non-zero after all
+  * probes have run if a probe threw, if the checksums of one group
+  * differ, or, with `--expect FILE`, if a checksum differs from the one
+  * an earlier AUDIT.json holds for that name: the gate of a `-Dspark.*`
+  * A/B such as a starved heap (`SPARK_DRIVER_MEM=1200m`,
+  * `-Dspark.memory.fraction=0.15`), which may change throughput, never
+  * results. */
 object Audit {
 
-  /** Named query lists (`@name` on the command line). */
-  val Sets: Map[String, Seq[String]] = Map(
+  /** Named probe lists (`@name` on the command line). */
+  val Sets: Map[String, Seq[Probe]] = Map(
     // every query whose 100 TB story rests on a shuffle-volume claim, the
     // data-bound q_sorted_write, one per other shuffle-bearing family
     "shuffle" -> Seq("q_dedup_exact", "q_dedup_near", "q_dedup_ngram",
@@ -39,19 +55,24 @@ object Audit {
       "q_join_salted", "q_agg_salted", "q_tpch_q21", "q_sorted_write",
       "q_sessionize", "q_window_sliding", "q_pagerank", "q_graph_reach",
       "q_triangle_count", "q_bm25", "q_tfidf", "q_kmeans_iter",
-      "q_heavy_hitters", "q_quantile_sketch"),
+      "q_heavy_hitters", "q_quantile_sketch").map(Probe.query),
     // the queries over the two tables `Corpus.dup10` scales
     "dup" -> Seq("q_dedup_exact", "q_dedup_near", "q_dedup_ngram",
       "q_dedup_simhash", "q_dedup_embed", "q_decontaminate",
       "q_similarity_topk", "q_ann_ivf", "q_knn_classify", "q_feature_hash",
-      "q_inverted_index", "q_token_entropy"),
+      "q_inverted_index", "q_token_entropy").map(Probe.query),
     // the biggest movers at the decade, for the starved-heap A/B
     "spill" -> Seq("q_sorted_write", "q_tpch_q21", "q_dedup_ngram",
-      "q_token_entropy", "q_tpch_q7", "q_combine_merge", "q_combine_wide"),
+      "q_token_entropy", "q_tpch_q7", "q_combine_merge", "q_combine_wide").map(Probe.query),
     // the heavy movers scripts/century_compare.py fits growth for
     "century" -> Seq("q_sorted_write", "q_dedup_exact", "q_dedup_near",
       "q_dedup_ngram", "q_dedup_simhash", "q_dedup_cluster", "q_seq_pack",
-      "q_combine_wide"))
+      "q_combine_wide").map(Probe.query),
+    // the hot-key strategy groups over `Corpus skew10` and `Corpus skewc`,
+    // and the hot-contig gVCF cohort (any sfDir; it builds its own)
+    "skew" -> SkewProbes.decade,
+    "skewc" -> SkewProbes.century,
+    "gvcf_skew" -> SkewProbes.gvcf)
 
   /** One measured query: its result's checksum and the flat JSON record. */
   final case class Record(query: String, checksum: Long, json: String)
@@ -138,43 +159,50 @@ object Audit {
     Record(name, checksum, json)
   }
 
-  /** [[measure]]s each (name, confs, plan) in turn through one listener
-    * and prints its record. A run's confs are set before it and
-    * `restore` after it; a run that throws is reported on stderr and
-    * returned as its failure. */
-  def runAll(spark: SparkSession, restore: Map[String, String] = Map.empty)(
-      runs: Seq[(String, Map[String, String], () => DataFrame)]): Seq[Try[Record]] = {
+  /** [[measure]]s each probe over `sfDir` in turn through one listener
+    * and prints its record. A probe's confs hold for its run only: each
+    * key then gets back its prior value, or is unset again if it was
+    * unset. A run that throws is reported on stderr and returned as its
+    * failure. */
+  def runAll(spark: SparkSession, sfDir: String, probes: Seq[Probe]): Seq[Try[Record]] = {
     val counters = Tools.counters(spark)
-    try runs.map { case (name, confs, plan) =>
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val r = try Try(measure(spark, counters, name)(plan()))
-        finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
-      r.fold(e => System.err.println(s"AUDIT FAILED $name: $e"), rec => println(rec.json))
+    try probes.map { p =>
+      val prior = p.confs.keys.map(k => k -> spark.conf.getAll.get(k))
+      p.confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val r = try Try(measure(spark, counters, p.name)(p.plan(spark, sfDir)))
+        finally prior.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      r.fold(e => System.err.println(s"AUDIT FAILED ${p.name}: $e"), rec => println(rec.json))
       r
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 
-  /** Writes `{<header>,"queries":[…]}` to `out`, one record a line. */
-  def write(out: Path, header: String, records: Seq[Record]): Unit =
-    Files.write(out, (s"{$header,\"queries\":[\n" +
-      records.map(_.json).mkString(",\n") + "\n]}\n").getBytes(UTF_8))
-
-  /** Audits `names` over `sfDir`, writes the records to `out` and returns
-    * the failures: the queries that threw, then each checksum that
-    * differs from, or is missing in, the records in `expect`. */
-  def audit(spark: SparkSession, sfDir: String, names: Seq[String],
+  /** Audits `probes` over `sfDir`, writes the records to `out` (one a
+    * line, under a header with `sf`, `cpus` and `heap_mb`) and returns
+    * the failures: the probes that threw, each group whose
+    * checksums differ, then each checksum that differs from, or is
+    * missing in, the records in `expect`. */
+  def audit(spark: SparkSession, sfDir: String, probes: Seq[Probe],
       expect: Option[Path], out: Path): Seq[String] = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(" ")}")
-    // one-time JVM/session costs land here, not on the first query
+    // one-time JVM/session costs land here, not on the first probe
     try SparkEntry.queries("q_agg_count_by_key")(spark, sfDir).count() catch {
       case e: Exception => System.err.println(s"WARMUP FAILED: $e")
     }
-    val results = runAll(spark)(names.map(n =>
-      (n, Map.empty[String, String], () => SparkEntry.queries(n)(spark, sfDir))))
+    val results = runAll(spark, sfDir, probes)
     val records = results.flatMap(_.toOption)
-    write(out, s""""sf":"$sfDir","cpus":${spark.sparkContext.defaultParallelism},""" +
-      s""""heap_mb":${Runtime.getRuntime.maxMemory >> 20}""", records)
+    Files.write(out, (s"""{"sf":"$sfDir","cpus":${spark.sparkContext.defaultParallelism},""" +
+      s""""heap_mb":${Runtime.getRuntime.maxMemory >> 20},"queries":[\n""" +
+      records.map(_.json).mkString(",\n") + "\n]}\n").getBytes(UTF_8))
+    val measured = probes.zip(results).collect { case (p, Success(r)) => p.group -> r }
+    val groups = measured.map(_._1).distinct.flatMap { g =>
+      val rs = measured.collect { case (`g`, r) => r }
+      if (rs.map(_.checksum).distinct.size > 1)
+        Some(s"group $g: checksums differ: " +
+          rs.map(r => s"${r.query}=${r.checksum}").mkString(" "))
+      else None
+    }
     val mismatches = expect.toSeq.flatMap { f =>
       val expected = """"query":"([^"]+)".*?"checksum":(-?\d+)""".r
         .findAllMatchIn(new String(Files.readAllBytes(f), UTF_8))
@@ -185,7 +213,8 @@ object Audit {
         case None => Some(s"${r.query}: no expected checksum")
       })
     }
-    names.zip(results).collect { case (n, Failure(e)) => s"$n: $e" } ++ mismatches
+    probes.zip(results).collect { case (p, Failure(e)) => s"${p.name}: $e" } ++
+      groups ++ mismatches
   }
 
   def main(args: Array[String]): Unit = {
@@ -194,13 +223,15 @@ object Audit {
       "usage: graft.Audit <sfDir> [q … | @set …] [--expect FILE]")
     val sfDir = args(0)
     val expect = opt.drop(1).headOption.map(Paths.get(_))
-    val names = named.flatMap(a => if (!a.startsWith("@")) Seq(a) else
+    val listed = named.flatMap(a => if (!a.startsWith("@")) Seq(Probe.query(a)) else
       Sets.getOrElse(a.drop(1), throw new IllegalArgumentException(s"unknown set $a")))
+    val skip = sys.env.getOrElse("SPARK_GRAFT_SKIP", "").split(",").map(_.trim).toSet
+    val (skipped, probes) = (if (listed.nonEmpty) listed
+      else SparkEntry.queries.keys.toSeq.sorted.map(Probe.query)).partition(p => skip(p.name))
+    skipped.foreach(p => System.err.println(s"SKIPPED (SPARK_GRAFT_SKIP): ${p.name}"))
     val spark = Tools.session(Tools.envCpus)
     val failures =
-      try audit(spark, sfDir,
-        if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted,
-        expect, Paths.get("AUDIT.json"))
+      try audit(spark, sfDir, probes, expect, Paths.get("AUDIT.json"))
       finally spark.stop()
     failures.foreach(f => System.err.println(s"FAILED $f"))
     if (failures.nonEmpty) sys.exit(1)

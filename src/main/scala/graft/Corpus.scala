@@ -144,11 +144,11 @@ object Corpus {
       copies(10, e, Map("vec_id" -> stride(e, "vec_id")))
     }))
 
-  /** The hot-key decade of [[SkewAudit]]: orders ×10 with offset
-    * o_orderkey and o_custkey left in the uncopied customer range, then
-    * 30% of rows, chosen by a hash of the PRE-offset key (so copies of
-    * one source row are hot together), reassigned to the smallest
-    * customer. */
+  /** The hot-key decade of `Audit @skew` ([[SkewProbes.decade]]):
+    * orders ×10 with offset o_orderkey and o_custkey left in the
+    * uncopied customer range, then 30% of rows, chosen by a hash of the
+    * PRE-offset key (so copies of one source row are hot together),
+    * reassigned to the smallest customer. */
   val skew10: Spec = Spec("_SKEW_READY", "copies=10 hotTenths=3", Map(
     "orders" -> { (s, src) =>
       val o = api.tbl(s, src, "orders")
@@ -157,11 +157,11 @@ object Corpus {
         pmod(col("o_orderkey"), lit(st)), 3, minOf(o, "o_custkey"))
     }))
 
-  /** The hot-key century of [[SkewCentury]]: events and orders ×`n`
-    * with offset event_id / o_orderkey, user_id / o_custkey in the base
-    * range, then 10% of rows, chosen by a hash of the POST-offset key
-    * (independent across copies), reassigned to the smallest user /
-    * customer. */
+  /** The hot-key century of `Audit @skewc` ([[SkewProbes.century]]):
+    * events and orders ×`n` with offset event_id / o_orderkey, user_id /
+    * o_custkey in the base range, then 10% of rows, chosen by a hash of
+    * the POST-offset key (independent across copies), reassigned to the
+    * smallest user / customer. */
   def skewCentury(n: Int): Spec = Spec("_SKEWC_READY", s"copies=$n hotTenths=1", Seq(
     "events" -> ("event_id", "user_id"), "orders" -> ("o_orderkey", "o_custkey")).map {
     case (t, (key, hotCol)) => t -> { (s: SparkSession, src: String) =>
@@ -177,9 +177,12 @@ object Corpus {
     "documents" -> ("doc_id",
       Map("text" -> 5L, "lang" -> 15L, "source" -> 25L, "n_chars" -> 35L)))
 
-  /** The NULL-poison corpus of [[NullProbe]]: four columns each of events
-    * and documents NULLed on their own 1-in-97 hash residue of the key
-    * (~4% of rows carry one NULL); every other column rides through. */
+  /** The NULL-poison corpus: four columns each of events and documents
+    * NULLed on their own 1-in-97 hash residue of the key (~4% of rows
+    * carry one NULL); every other column rides through. `graft.Audit`
+    * over it runs every declared query to completion: a poison record in
+    * a petabyte corpus must degrade a result (NULL out, filter away,
+    * group separately), never kill the pipeline. */
   val nullPoison: Spec = Spec("_POISON_READY", "poison_mod=97",
     PoisonResidues.map { case (t, (key, targets)) =>
       t -> { (s: SparkSession, src: String) =>

@@ -5,19 +5,30 @@ import java.nio.file.{Files, Paths}
   * codegen spans, custom operators) is reviewable as a repo artifact.
   * Two runs on one tree write the same file: the tokens that drift
   * between runs are normalised ([[normalise]]) and each plan is cut at a
-  * line boundary. */
+  * line boundary.
+  *
+  *   sbt "runMain PlanDump [sfDir]"
+  *   sbt "runMain PlanDump <sfDir> --final q …"
+  *
+  * `--final` instead executes each named query once on the bench
+  * session shape (`$SPARK_GRAFT_CPUS` slots and shuffle partitions) and
+  * prints its final adaptive plan, normalised, to stdout. The plan of an
+  * unexecuted query is AQE's initial tree, which hides its runtime
+  * decisions: stage reuse, join flips, coalesced reads. */
 object PlanDump {
   /** Per-plan character budget; a longer plan keeps its whole lines
     * up to it. */
   val MaxPlanChars = 4500
 
   /** Renumbers expression ids (`name#123`), `plan_id`s, lambda variable
-    * ids (`lambda x_8`) and RDD ids (`MapPartitionsRDD[157]`) in order
-    * of first appearance, so references inside the plan still match;
-    * masks lambda class names with their identity hash, the content
-    * fingerprints of build-once fixture directories, the id of the
-    * JVM's output root, the unique suffix of part-file names and the
-    * source line of an RDD's call site. */
+    * ids (`lambda x_8`), RDD ids (`MapPartitionsRDD[157]`) and the
+    * numbers AQE gives query stages (`ShuffleQueryStage 3`) and
+    * whole-stage-codegen stages (`*(2)`) in order of first appearance,
+    * so references inside the plan still match; masks lambda class
+    * names with their identity hash, the content fingerprints of
+    * build-once fixture directories, the id of the JVM's output root,
+    * the unique suffix of part-file names and the source line of an
+    * RDD's call site. */
   def normalise(plan: String): String = {
     val masked = plan
       .replaceAll("""\$\$Lambda[$/\w]*(@[0-9a-f]+)?""", "\\$\\$Lambda")
@@ -25,8 +36,9 @@ object PlanDump {
       .replaceAll("""(/graft_\w*?)_[0-9a-f]{12}(?![0-9a-zA-Z])""", "$1_<fingerprint>")
       .replaceAll("""(part-\d{5})(-[0-9a-f]+)+""", "$1-<id>")
       .replaceAll("""(\.scala:)\d+""", "$1<line>")
-    Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
-        """(RDD\[)(\d+)""").foldLeft(masked) { (s, re) =>
+    val numbered = Seq("""(#)(\d+)""", """(plan_id=)(\d+)""", """(lambda [a-z]+_)(\d+)""",
+      """(RDD\[)(\d+)""", """(QueryStage )(\d+)""", """(\*\()(\d+)""")
+    numbered.foldLeft(masked) { (s, re) =>
       val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
       re.r.replaceAllIn(s, m => scala.util.matching.Regex.quoteReplacement(
         m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
@@ -38,8 +50,30 @@ object PlanDump {
     if (plan.length <= MaxPlanChars) plan
     else plan.take(plan.lastIndexOf('\n', MaxPlanChars) + 1) + "... (truncated)\n"
 
+  /** `plan` with the JVM's scratch root written `<tmpdir>`, normalised. */
+  private def readable(plan: String): String = normalise(plan.replace(
+    System.getProperty("java.io.tmpdir").stripSuffix("/") + "/graft_", "<tmpdir>/graft_"))
+
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
+    if (args.lift(1).contains("--final")) finalPlans(sf, args.drop(2).toSeq)
+    else writePlans(sf)
+  }
+
+  /** Prints the final adaptive plan of each of `names` over `sf`. */
+  private def finalPlans(sf: String, names: Seq[String]): Unit = {
+    val spark = graft.Tools.session(graft.Tools.envCpus, logLevel = "ERROR")
+    try for (n <- names) {
+      // drive THIS QueryExecution's own adaptive plan: a .count() would
+      // execute a wrapped QueryExecution and leave this one unfinalised
+      val qe = graft.SparkEntry.queries(n)(spark, sf).queryExecution
+      qe.toRdd.count()
+      println(s"==== $n @ $sf (final plan after execution)")
+      println(readable(qe.executedPlan.toString))
+    } finally spark.stop()
+  }
+
+  private def writePlans(sf: String): Unit = {
     val spark = graft.Tools.session(8,
       Map("spark.sql.session.timeZone" -> "UTC"), logLevel = "ERROR")
     val headline = Seq(
@@ -100,13 +134,12 @@ object PlanDump {
     sb.append("GraftExtensions loaded). Regenerate: `sbt \"runMain PlanDump\"`.\n")
     sb.append("Ids are renumbered per plan and run-specific names masked\n")
     sb.append("(`PlanDump.normalise`), so a rerun writes the same file.\n")
-    val tmp = System.getProperty("java.io.tmpdir").stripSuffix("/") + "/graft_"
     for (name <- headline) {
       sb.append(s"\n## $name\n\n```\n")
       val df = graft.SparkEntry.queries(name)(spark, sf)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      sb.append(cut(normalise(formatted.replace(tmp, "<tmpdir>/graft_"))))
+      sb.append(cut(readable(formatted)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

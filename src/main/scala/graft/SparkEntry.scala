@@ -22,19 +22,15 @@ object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * A4 `q_pivot_dense` — the reference's defining combine computation
-    * (SURVEY.md §7.1). Falls back to a scan until Combine lands. */
-  def entry(spark: SparkSession): DataFrame = {
-    val byName = queries
-    val fn = byName.getOrElse("q_pivot_dense", byName("q_scan_project"))
-    fn(spark, "/root/testdata/sf0.001")
-  }
+    * (SURVEY.md §7.1). */
+  def entry(spark: SparkSession): DataFrame =
+    queries("q_pivot_dense")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = all.map(q => q.name -> q.oracle).toMap
 }

@@ -30,19 +30,9 @@ private[graft] object ScratchObserver {
   */
 object api {
 
-  /** A declared operator: name, DataFrame program, optional DuckDB oracle. */
-  final case class Query(
-      name: String,
-      run: (SparkSession, String) => DataFrame,
-      oracle: Option[String])
-
-  object Query {
-    def apply(name: String, oracle: String)(
-        run: (SparkSession, String) => DataFrame): Query =
-      Query(name, run, Some(oracle))
-    def noOracle(name: String)(run: (SparkSession, String) => DataFrame): Query =
-      Query(name, run, None)
-  }
+  /** A declared operator: name, DuckDB oracle SQL, DataFrame program. */
+  final case class Query(name: String, oracle: String)(
+      val run: (SparkSession, String) => DataFrame)
 
   /** Per-session resolved-relation cache behind [[tbl]]. Spark's own
     * catalog caches the resolved relation for NAMED tables

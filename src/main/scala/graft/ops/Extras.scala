@@ -1105,7 +1105,7 @@ object Extras {
     *
     *   1. `row_number() DESC ≤ 8` — Spark's InferWindowGroupLimit plans
     *      a PARTIAL map-side top-k per key BEFORE the exchange (the
-    *      SkewAudit top-k finding), so a hot key arrives at the reducer
+    *      `Audit @skew` top-k finding), so a hot key arrives at the reducer
     *      pre-cut to ≤8 rows per map task — no straggler can form;
     *   2. the fixed-point weighted sum over the ≤8-element tail, with
     *      the newest row (rnd = 1) at asc position len − rnd, weights
@@ -1116,7 +1116,7 @@ object Extras {
     *      class at scale.
     *
     * Bit-identical to [[ewmaOf]] (integer arithmetic end to end, one
-    * final IEEE division in both): SkewSpec pins equality; SkewCentury
+    * final IEEE division in both): SkewSpec pins equality; `Audit @skewc`
     * checksum-compares at 10M events with a 10%-hot user. */
   private[graft] def ewmaLastK(raw: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -1255,7 +1255,7 @@ object Extras {
   }
 
   /** The query's reporting shape (every 100th event, rounded, ordered)
-    * — ONE definition shared by [[rollingMedian]] and the SkewCentury
+    * — ONE definition shared by [[rollingMedian]] and the `Audit @skewc`
     * probe's plain control, so the harness can never drift from the
     * shipped presentation (the duplicated-harness lesson). */
   private[graft] def rollingMedianReported(core: org.apache.spark.sql.DataFrame)

@@ -21,11 +21,13 @@ import graft.api._
   *   sites      = distinct positions where kind = 'site'
   *   coverage   = interval containment join (bucketed — A6) of sites
   *                against every sample's records
-  *   combined   = groupBy(position) + ordered collect (A4)
+  *   combined   = merged site header (ref, alts) + each covered sample's
+  *                remapped call, ordered by sample index (A4,
+  *                [[combineSites]])
   *
   * Split-invariance (the reference's stride-split correctness property,
-  * SURVEY §5.2.3): combineAtSites(splitBlocks(v, w)) == combineAtSites(v)
-  * for any stride w — covered by GvcfSpec.
+  * SURVEY §5.2.3): combineSites(splitBlocks(v, w)) == combineSites(v)
+  * for any stride w — covered by GvcfSpec and PropertySpec.
   */
 object Gvcf {
 
@@ -93,25 +95,6 @@ object Gvcf {
     val probe = sites.withColumn("bkt", expr(s"pos div $bucketWidth"))
     probe.join(recs, Seq("contig", "bkt"))
       .filter(col("pos") >= col("start") && col("pos") <= col("end"))
-  }
-
-  /** A4+A6 — dense combine at every variant site: for each (contig, pos)
-    * with at least one site record, emit each sample's state there
-    * (its site alleles, or the spanning block's alleles), plus the dense
-    * ordered per-sample summary. The interval join is bucketed on the
-    * same stride grid as the storage layout, so it is an equi-join +
-    * residual — never a nested-loop join (SURVEY §4.2). */
-  def combineAtSites(variants: DataFrame, bucketWidth: Long = 64): DataFrame = {
-    siteCoverage(variants, bucketWidth)
-      .select(col("contig"), col("pos"), col("sample"), col("kind"),
-        col("alleles"), col("gq"))
-      .groupBy("contig", "pos")
-      .agg(
-        count(lit(1)).as("n_samples"),
-        expr("transform(sort_array(collect_list(struct(sample, kind, alleles, gq))), " +
-          "s -> concat(s.sample, ':', s.kind, ':', array_join(s.alleles, '/')))")
-          .as("calls"))
-      .orderBy("contig", "pos")
   }
 
   /** The reference's SampleNameIndex analog (SURVEY §1.1: dense sample →
@@ -222,8 +205,9 @@ object Gvcf {
     *          0/0 with their block GQ), ordered by [[sampleNameIndex]].
     * Input may carry a `gt` column (the [[Vcf]] parser emits one); the
     * legacy fixture schema without it defaults to het 0/1 sites and 0/0
-    * blocks. Same bucketed interval join as [[combineAtSites]] — one
-    * equi-join + residual, never a nested loop. */
+    * blocks. The interval join is bucketed on the same stride grid as
+    * the storage layout ([[siteCoverage]]) — one equi-join + residual,
+    * never a nested loop (SURVEY §4.2). */
   def combineSites(variants: DataFrame, bucketWidth: Long = 64): DataFrame =
     mergedSiteAgg(combinedCalls(variants, bucketWidth),
       // graft_sorted_call_vals = transform(sort_array(...), s -> s.c) as

@@ -404,7 +404,7 @@ object Pipeline {
     * task — a 10%-hot user of a 100 TB stream is a 10 TB task
     * (SKEW_AUDIT_r18_century: 2.8× straggler at 10M events). The
     * segmented rewrite is bit-identical (SkewSpec pins equality,
-    * SkewCentury checksum-compares at 10M) with no indivisible
+    * `Audit @skewc` checksum-compares at 10M) with no indivisible
     * partition. */
   val sessionize = Query(
     "q_sessionize",
@@ -470,7 +470,7 @@ object Pipeline {
     *      merged session is enormous.
     *
     * Output identical to [[sessionizePlain]] (SkewSpec pins equality; the
-    * SkewCentury probe checksum-compares at 10M events with a 10%-hot
+    * `Audit @skewc` probe checksum-compares at 10M events with a 10%-hot
     * user, where max task drops ~10×). Exact by construction — integer
     * session arithmetic, microsecond gap math, no reordering. */
   def sessionizeSegmented(raw: DataFrame, gapUs: Long = 1800000000L): DataFrame = {

@@ -364,7 +364,7 @@ object Relational {
     * (SKEW_AUDIT_r18_century: 12.9× worse max-task under a 10%-hot
     * user). Exact decimal addition is associative, so chunk-local sums
     * plus per-chunk offsets reassemble the global prefix sum to the bit
-    * — SkewSpec pins equality, SkewCentury checksum-compares at 10M. */
+    * — SkewSpec pins equality, `Audit @skewc` checksum-compares at 10M. */
   val windowRunning = Query(
     "q_window_running",
     """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts,

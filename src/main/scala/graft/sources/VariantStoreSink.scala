@@ -82,7 +82,7 @@ private[sources] class StoreTable(path: String, tschema: StructType)
   * policy). Tunable per write via `.option("autocompact", bool) /
   * ("autocompact.threshold", n) / ("autocompact.keep", n)`. Batch
   * writes never auto-compact — bulk load is the caller-owns-maintenance
-  * path (and StoreEconomics measures manual cadences through it). */
+  * path. */
 private[graft] case class AutoCompactPolicy(
     enabled: Boolean, threshold: Int, keep: Int) {
   require(threshold >= 2 && keep >= 1,

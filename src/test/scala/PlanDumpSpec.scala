@@ -1,7 +1,8 @@
 import org.scalatest.funsuite.AnyFunSuite
 
-/** PLANS.md stays reproducible: the tokens that drift between runs are
-  * normalised, and a long plan is cut at a line boundary. */
+/** PLANS.md and `PlanDump --final` stay reproducible: the tokens that
+  * drift between runs are normalised, and a long plan is cut at a line
+  * boundary. */
 class PlanDumpSpec extends AnyFunSuite {
 
   test("normalise renumbers ids by first appearance and masks run-specific names") {
@@ -36,6 +37,22 @@ class PlanDumpSpec extends AnyFunSuite {
     assert(n == PlanDump.normalise(plan("123456789012", 1030)))
     assert(n == "Location: InMemoryFileIndex [file:/tmp/graft_run_<id>/graft_src_bkt_li__data_sf0_1]\n" +
       "Arguments: [sample#1], MapPartitionsRDD[1] at localCheckpoint at Gvcf.scala:<line>, ExistingRDD")
+  }
+
+  test("normalise renumbers AQE query-stage and codegen-stage ids by first appearance") {
+    // the numbers follow the order stages are created and finish, so two
+    // runs of one final plan differ in them alone; PLANS.md's formatted
+    // operator ids and codegen ids are left as they are
+    def plan(result: Int, sort: Int, shuffle: Int, agg: Int, bcast: Int) =
+      "AdaptiveSparkPlan isFinalPlan=true\n+- == Final Plan ==\n" +
+        s"   ResultQueryStage $result\n   +- *($sort) Sort [k#12 ASC NULLS FIRST], true, 0\n" +
+        s"      +- AQEShuffleRead coalesced\n         +- ShuffleQueryStage $shuffle\n" +
+        s"            +- *($agg) HashAggregate(keys=[k#12], functions=[count(1)])\n" +
+        s"               +- BroadcastQueryStage $bcast\n" +
+        "+- * HashAggregate (4)\n(4) HashAggregate [codegen id : 2]\n"
+    val n = PlanDump.normalise(plan(7, 5, 4, 3, 2))
+    assert(n == PlanDump.normalise(plan(9, 6, 3, 4, 1)))
+    assert(n == plan(1, 1, 2, 2, 3).replace("#12", "#1"))
   }
 
   test("cut keeps whole lines up to the budget") {

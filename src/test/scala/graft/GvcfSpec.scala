@@ -17,18 +17,20 @@ class GvcfSpec extends SparkSpec {
     ("b", "chr1", 10L, 30L, "block", Seq("REF"), 42)
   ).toDF("sample", "contig", "start", "end", "kind", "alleles", "gq")
 
-  private def calls(df: DataFrame): Seq[(Long, Seq[String])] =
-    Gvcf.combineAtSites(df).collect()
-      .map(r => (r.getAs[Long]("pos"),
+  /** (pos, merged ref, merged alt, calls as `sample:gt:gq`) of each
+    * combined site. Without a `gt` column, sites call 0/1 and blocks 0/0. */
+  private def calls(df: DataFrame): Seq[(Long, String, String, Seq[String])] =
+    Gvcf.combineSites(df).collect()
+      .map(r => (r.getAs[Long]("pos"), r.getAs[String]("ref"), r.getAs[String]("alt"),
         r.getAs[scala.collection.Seq[String]]("calls").toSeq)).toSeq
 
   test("combine densifies both samples at every site") {
     val out = calls(fixture)
     assert(out.map(_._1) == Seq(9L, 15L))
     // position 9: sample a covered by block [1,14], sample b has the site
-    assert(out(0)._2 == Seq("a:block:REF", "b:site:T/C"))
+    assert(out(0) == ((9L, "T", "C,<NON_REF>", Seq("a:0/0:50", "b:0/1:88"))))
     // position 15: sample a has the site, sample b covered by block [10,30]
-    assert(out(1)._2 == Seq("a:site:G/A", "b:block:REF"))
+    assert(out(1) == ((15L, "G", "A,<NON_REF>", Seq("a:0/1:99", "b:0/0:42"))))
   }
 
   test("split-invariance: stride-splitting blocks never changes the combine") {
@@ -47,7 +49,7 @@ class GvcfSpec extends SparkSpec {
       ("b", "chr2", 1L, 8L, "block", Seq("REF"), 42),
       ("b", "chr2", 10L, 30L, "block", Seq("REF"), 42)
     ).toDF("sample", "contig", "start", "end", "kind", "alleles", "gq"))
-    val out = Gvcf.combineAtSites(multi)
+    val out = Gvcf.combineSites(multi)
       .select("contig", "pos", "n_samples")
       .as[(String, Long, Long)].collect().toSeq
     // chr1 results unchanged; chr2 adds one site with both samples
@@ -82,7 +84,7 @@ class GvcfSpec extends SparkSpec {
     assert(out == Seq((1L, 10L, 15), (11L, 30L, 45), (40L, 50L, 50)))
   }
 
-  test("parsed gVCF text lines flow through combineAtSites (ingest path)") {
+  test("parsed gVCF text lines flow through combineSites (ingest path)") {
     import graft.ops.Vcf
     val aLines = Seq(
       "##fileformat=VCFv4.2",
@@ -99,10 +101,10 @@ class GvcfSpec extends SparkSpec {
     val siteA = v.filter($"kind" === "site" && $"sample" === "a")
       .select("start", "end", "gq", "gt").as[(Long, Long, Int, String)].head()
     assert(siteA == ((15L, 15L, 99, "0/1")))
-    val out = calls(v.select("sample", "contig", "start", "end", "kind", "alleles", "gq"))
-    assert(out.map(_._1) == Seq(9L, 15L))
-    assert(out(0)._2 == Seq("a:block:A", "b:site:T/C"))
-    assert(out(1)._2 == Seq("a:site:G/A", "b:block:G"))
+    val out = calls(v.select("sample", "contig", "start", "end", "kind", "alleles", "gq", "gt"))
+    assert(out == Seq(
+      (9L, "T", "C,<NON_REF>", Seq("a:0/0:50", "b:0/1:88")),
+      (15L, "G", "A,<NON_REF>", Seq("a:0/1:99", "b:0/0:42"))))
   }
 
   test("combineSites merges alt alleles and remaps genotypes (CombineGVCFs)") {

@@ -128,7 +128,8 @@ class PartitionInvarianceSpec extends SparkSpec {
     val plans: Seq[(String, () => DataFrame)] = Seq(
       "sessionizeSegmented" ->
         (() => ops.Pipeline.sessionizeSegmented(api.tbl(spark, skewDir, "events"))),
-      "runningTwoStage" -> (() => SkewCentury.runningTwoStage(spark, skewDir)),
+      "runningTwoStage" ->
+        (() => ops.Relational.runningTwoStage(api.tbl(spark, skewDir, "events"))),
       "ewmaLastK" -> (() => ops.Extras.ewmaLastK(api.tbl(spark, skewDir, "events"))),
       "combineLong" ->
         (() => ops.Gvcf.combineLong(ops.Gvcf.syntheticVariants(spark, 300L))),

@@ -67,8 +67,8 @@ object PropertySpec extends Properties("graft") {
       val df = rows.map { case (s, lo, hi, kind) =>
         (s, "chr1", lo, hi, kind, Seq(if (kind == "site") "ALT" else "REF"), 50)
       }.toDF("sample", "contig", "start", "end", "kind", "alleles", "gq")
-      val direct = Gvcf.combineAtSites(df).collect().toSeq
-      val split = Gvcf.combineAtSites(Gvcf.splitBlocks(df, stride)).collect().toSeq
+      val direct = Gvcf.combineSites(df).collect().toSeq
+      val split = Gvcf.combineSites(Gvcf.splitBlocks(df, stride)).collect().toSeq
       direct == split
     }
 

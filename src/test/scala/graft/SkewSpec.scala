@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Correctness pins for the SkewAudit strategy pairs: every physical
-  * strategy of a probe must return the identical logical result, and the
-  * plan facts the audit's findings rest on (map-side WindowGroupLimit,
+/** Correctness pins for the [[SkewProbes]] strategy groups: every
+  * physical strategy of a probe must return the identical logical result,
+  * and the plan facts the findings rest on (map-side WindowGroupLimit,
   * compound-key distinct rewrite) must hold. The STRAGGLER measurements
-  * live in SkewAudit/SKEW_AUDIT.json (they need the decade-sized hot
-  * key); this spec keeps the equivalences honest at test scale. */
+  * come from `graft.Audit @skew` / `@skewc` over the decade-sized hot-key
+  * corpora (SKEW_AUDIT_*.json); this spec keeps the equivalences honest
+  * at test scale. */
 class SkewSpec extends SparkSpec {
 
   private lazy val dir: String = Corpus.build(spark, "/root/testdata/sf0.001",
@@ -79,13 +80,13 @@ class SkewSpec extends SparkSpec {
   }
 
   test("two-stage running sum equals the plain window under a hot user") {
-    // the SkewCentury prefix-sum decomposition must be value-identical
+    // the @skewc prefix-sum decomposition must be value-identical
     // to the plain per-user running window — exact decimal addition is
     // associative, so chunk-local sums + chunk offsets reassemble the
     // global prefix sum to the bit (doubles compare exactly)
     val d = skewc
-    assert(rows(SkewCentury.runningTwoStage(spark, d)) ==
-      rows(SkewCentury.runningPlain(spark, d)))
+    val ev = api.tbl(spark, d, "events")
+    assert(rows(ops.Relational.runningTwoStage(ev)) == rows(ops.Relational.runningPlain(ev)))
   }
 
   test("segmented rolling median equals the plain window median under a hot key") {
@@ -234,30 +235,30 @@ class SkewSpec extends SparkSpec {
   }
 
   test("all four join strategies produce the identical rollup") {
-    val expected = rows(SkewAudit.joinBroadcastPlan(spark, dir))
-    assert(rows(SkewAudit.joinShufflePlan(spark, dir)) == expected)
-    assert(rows(SkewAudit.joinSaltedPlan(spark, dir)) == expected)
+    val expected = rows(SkewProbes.joinBroadcastPlan(spark, dir))
+    assert(rows(SkewProbes.joinShufflePlan(spark, dir)) == expected)
+    assert(rows(SkewProbes.joinSaltedPlan(spark, dir)) == expected)
   }
 
   test("key-only join strategies agree (the compressed-size blind-spot pair)") {
-    val expected = rows(SkewAudit.joinKeyOnlyShufflePlan(spark, dir))
-    assert(rows(SkewAudit.joinKeyOnlySaltedPlan(spark, dir)) == expected)
+    val expected = rows(SkewProbes.joinKeyOnlyShufflePlan(spark, dir))
+    assert(rows(SkewProbes.joinKeyOnlySaltedPlan(spark, dir)) == expected)
   }
 
   test("native count-distinct equals the dedup-then-count rewrite") {
-    assert(rows(SkewAudit.countDistinctNative(spark, dir)) ==
-      rows(SkewAudit.countDistinctRewrite(spark, dir)))
+    assert(rows(SkewProbes.countDistinctNative(spark, dir)) ==
+      rows(SkewProbes.countDistinctRewrite(spark, dir)))
   }
 
   test("salted two-stage top-k equals the plain window top-k") {
-    assert(rows(SkewAudit.topkSalted(spark, dir)) ==
-      rows(SkewAudit.topkWindow(spark, dir)))
+    assert(rows(SkewProbes.topkSalted(spark, dir)) ==
+      rows(SkewProbes.topkWindow(spark, dir)))
   }
 
   test("plain top-k plans a PARTIAL map-side WindowGroupLimit before the exchange") {
     // the audit's finding that the window top-k is skew-safe as-is
     // rests on this rewrite existing; pin it against Spark upgrades
-    val df = SkewAudit.topkWindow(spark, dir)
+    val df = SkewProbes.topkWindow(spark, dir)
     df.collect()
     val nodes = flattenPlan(df.queryExecution.executedPlan)
       .map(_.getClass.getSimpleName)

@@ -75,6 +75,13 @@ class ToolsSpec extends SparkSpec {
       s"measure through graft.Audit.measure / runAll: $files")
   }
 
+  test("def main appears only in the six entrypoints") {
+    // evidence runs are graft.Audit sets, plans are PlanDump modes
+    val files = uses("def main(").map(_._1).sorted
+    assert(files == Seq("Audit.scala", "Bench.scala", "Corpus.scala", "PlanDump.scala",
+      "Verify.scala", "WidthProbe.scala"), s"add a probe set or a mode, not a main: $files")
+  }
+
   test("Thread.sleep appears only in the buildOnce heal-wait") {
     val sleeps = uses("Thread.sleep")
     assert(sleeps == Seq(("api.scala", "Thread.sleep(100); waited += 100")),

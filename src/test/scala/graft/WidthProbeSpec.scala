@@ -12,8 +12,8 @@ import graft.ops.Gvcf
 
 /** `graft.WidthProbe`'s validators pass every route of the width-50
   * cohort and flag one planted fault on each; `floor` refuses a width
-  * the heap does not derive before any job runs; and GvcfSkew's cohort
-  * is the wide generator with only `contig` redrawn. */
+  * the heap does not derive before any job runs; and the `@gvcf_skew`
+  * cohort is the wide generator with only `contig` redrawn. */
 class WidthProbeSpec extends SparkSpec {
 
   private val width = 50L
@@ -108,17 +108,17 @@ class WidthProbeSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(counters)
   }
 
-  test("GvcfSkew's cohort is the wide cohort with only contig redrawn") {
+  test("the @gvcf_skew cohort is the wide cohort with only contig redrawn") {
     val (nS, nP, nContigs) = (30L, 120L, 20)
     val base = Gvcf.syntheticVariantsWide(spark, nS, nP)
     for (hot <- Seq(0, 5)) {
-      val skew = GvcfSkew.skewCohort(spark, nS, nP, nContigs, hot)
+      val skew = SkewProbes.skewCohort(spark, nS, nP, nContigs, hot)
       assert(skew.columns.toSeq == base.columns.toSeq)
       assert(Gvcf.cohortWidth(skew) == nS)
       val (a, b) = (skew.drop("contig"), base.drop("contig"))
       assert(skew.count() == nS * nP && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     }
-    def contigOf(hot: Int) = GvcfSkew.skewCohort(spark, nS, nP, nContigs, hot)
+    def contigOf(hot: Int) = SkewProbes.skewCohort(spark, nS, nP, nContigs, hot)
       .select("contig", "start").distinct().collect().map(_.getString(0))
     val hot = contigOf(5)
     assert(hot.length == nP && hot.count(_ == "chr00") == nP / 2)
